@@ -207,18 +207,3 @@ def is_share_button_text(text: str) -> bool:
             return True
 
     return False
-
-
-def text_filter_text(all_text: str, tail: str = "") -> bool:
-    """True if this element's text should be filtered (no alnum chars, or any
-    line matches share-button patterns) — html_processing.rs:455-485."""
-    from ..functions.textnorm import text_chars_test
-
-    all_text = all_text.strip()
-    if not all_text:
-        if not text_chars_test(tail):
-            return True
-    elif not text_chars_test(all_text):
-        return True
-    test_text = tail if not all_text else all_text
-    return any(is_share_button_text(line) for line in test_text.splitlines())

@@ -312,14 +312,6 @@ class _RuleFacts:
         )
 
 
-def _contains_boilerplate_child(el: Element) -> bool:
-    return _RuleFacts(el).contains_boilerplate_child()
-
-
-def _has_nested_content_element(el: Element) -> bool:
-    return _RuleFacts(el).has_nested_content_element()
-
-
 def find_content(body: Element) -> Optional[Element]:
     """Priority-rule content finder (selector/content.rs:618-694)."""
     boilerplate_ids = _build_boilerplate_ids(body)

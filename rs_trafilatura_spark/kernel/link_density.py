@@ -6,7 +6,6 @@ Pure functions over the DOM — run inside the kernel, per document.
 from __future__ import annotations
 
 from ..dom import Element, select
-from ..functions.textnorm import clean_text
 
 
 def _collect_link_info(links: list[Element]) -> tuple[int, int, int]:
@@ -95,27 +94,3 @@ def link_density_test_tables(table: Element, has_links: bool = True) -> bool:
     if text_length < 1000:
         return link_length > text_length * 0.8
     return link_length > text_length * 0.5
-
-
-def delete_by_link_density(root: Element, tags: tuple[str, ...],
-                           favor_precision: bool = False) -> int:
-    """Remove link-dense elements of the given tags under root; returns the
-    number removed (html_processing.rs:408-442 simplified: the reference's
-    backtracking restore is covered by the traversal-time re-check)."""
-    removed = 0
-    victims = [el for tag in tags for el in select(root, tag)
-               if link_density_test(el, favor_precision)]
-    for el in victims:
-        if el.parent is not None:
-            el.drop_tree()
-            removed += 1
-    return removed
-
-
-def raw_link_density(el: Element) -> float:
-    """Fraction of element text inside links (for scoring)."""
-    text_len = len(clean_text(el.text_content()))
-    if text_len == 0:
-        return 1.0
-    link_len = sum(len(clean_text(a.text_content())) for a in select(el, "a"))
-    return link_len / text_len

@@ -66,11 +66,23 @@ _ARTICLE_PATHS = ("/blog/", "/blog", "/news/", "/article/", "/articles/",
                   "/resource/", "/resources/")
 
 
+def _alternation(markers) -> str:
+    """Escaped regex alternation of a marker table.  An empty table or an
+    empty marker would make the pattern match every string, so both are
+    refused when the module loads."""
+    markers = list(markers)
+    if not markers or not all(markers):
+        raise ValueError(
+            f"marker table must be non-empty with no empty marker: {markers!r}"
+        )
+    return "|".join(map(re.escape, markers))
+
+
 def _any_re(markers) -> "re.Pattern":
     """Compiled alternation with search() semantics identical to
     ``any(m in s for m in markers)`` — one C scan instead of one
     substring probe (plus genexpr frame) per marker."""
-    return re.compile("|".join(map(re.escape, markers)))
+    return re.compile(_alternation(markers))
 
 
 # marker tables compiled once: classify_url + the ml URL feature block run
@@ -82,14 +94,14 @@ DOCS_HOST_RE = _any_re(_DOCS_HOSTS)
 DOCS_PATH_RE = _any_re(_DOCS_PATHS)
 PRODUCT_PATH_RE = _any_re(_PRODUCT_PATHS)
 # startswith-only table: anchored match(), not search()
-PRODUCT_HOST_RE = re.compile("|".join(map(re.escape, _PRODUCT_HOSTS)))
+PRODUCT_HOST_RE = re.compile(_alternation(_PRODUCT_HOSTS))
 CATEGORY_PATH_RE = _any_re(_CATEGORY_PATHS)
 SERVICE_PATH_RE = _any_re(_SERVICE_PATHS)
 SERVICE_SUFFIX_RE = _any_re(_SERVICE_SUFFIXES)
 LISTING_PATH_RE = _any_re(_LISTING_PATHS)
-# endswith-any over the rstrip("/")ed markers (all non-empty)
+# endswith-any over the rstrip("/")ed markers
 LISTING_END_RE = re.compile(
-    "(?:" + "|".join(re.escape(p.rstrip("/")) for p in _LISTING_PATHS) + ")$"
+    "(?:" + _alternation(p.rstrip("/") for p in _LISTING_PATHS) + ")$"
 )
 ARTICLE_PATH_RE = _any_re(_ARTICLE_PATHS)
 
@@ -131,6 +143,11 @@ def _classify_url_parts(host: str, path: str, path_q: str) -> Optional[str]:
     return None
 
 
+# the keys extract_ml_features(_signals_out=...) fills for stage 2
+WALK_SIGNAL_KEYS = frozenset({"og_type", "forum", "docs_nav", "product",
+                              "n_code"})
+
+
 def refine_with_html_signals(doc: Document, url_type: Optional[str],
                              _walk_signals: Optional[dict] = None
                              ) -> tuple[str, float]:
@@ -143,13 +160,20 @@ def refine_with_html_signals(doc: Document, url_type: Optional[str],
     order below (and with it the max() tie-break) is unchanged."""
     signals: dict[str, float] = {}
 
-    if _walk_signals is None:
+    if _walk_signals is not None:
+        missing = WALK_SIGNAL_KEYS.difference(_walk_signals)
+        if missing:
+            raise ValueError(
+                "page-type signal hand-off is missing "
+                f"{sorted(missing)}: extract_ml_features returned before "
+                "filling _signals_out"
+            )
+        og_type = _walk_signals["og_type"]
+    else:
         og_type = ""
         for m in select(doc.root, "meta[property='og:type']"):
             og_type = (m.get("content") or "").lower()
             break
-    else:
-        og_type = _walk_signals["og_type"]
     if og_type == "article":
         signals[ARTICLE] = signals.get(ARTICLE, 0) + 2
     elif og_type in ("product", "og:product"):

@@ -109,7 +109,12 @@ def curate_pages(
     # exchange — measured as three ~431-task stages shuffling the same
     # 8 MB.  Cached data keeps its partitioning, so the winners groupBy
     # and the narrow⋈winners join are exchange-free co-partitioned
-    # reads.  The explicit partition count is cluster-derived and AQE
+    # reads — but only while the planner's required distribution for
+    # them is satisfied by HashPartitioning(fingerprint,
+    # defaultParallelism*2); a spark.sql.shuffle.partitions that the
+    # planner enforces instead (or a join AQE does not plan) silently
+    # brings the fingerprint exchange back: slower, same result.  The
+    # explicit partition count is cluster-derived and AQE
     # does not coalesce user-specified repartitions; fingerprint skew is
     # capped map-side by the groupBy's partial aggregation, and the
     # probe side's hot-key risk is the same one the old fingerprint

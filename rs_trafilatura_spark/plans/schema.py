@@ -53,3 +53,12 @@ OUTPUT_SCHEMA = T.StructType([
 
 # column order the kernel emits (must match OUTPUT_SCHEMA field order)
 OUTPUT_COLUMNS = [f.name for f in OUTPUT_SCHEMA.fields]
+
+# every value the `stage` column can take: the kernel cascade's stages
+# (kernel/extract.py, kernel/fallback.py) plus the closures' "error" row
+STAGES = (
+    "main", "ancestor_walkup", "bottom_up", "relaxed_boilerplate",
+    "split_body", "body", "empty", "jsonld_body", "jsonld_product",
+    "discourse", "merge", "repeated_items", "baseline_article",
+    "baseline_rescue", "baseline_body", "baseline_doc", "error",
+)

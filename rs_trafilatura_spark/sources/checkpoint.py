@@ -9,6 +9,14 @@ driver lists completed chunk ids and anti-joins them away — equivalently a
 left anti-join against the done set (SURVEY.md §2.3) — so only unfinished
 chunks re-run.  At cluster scale chunks map to Iceberg partition writes; on
 parquet the mechanism is identical.
+
+One Spark job per chunk: the manifest's numbers are computed inside the
+write job by ``DataFrame.observe`` on the extracted frame — no re-read of
+the written files and no second scan of the input.  The observed
+aggregates run in the write's result stage, so each task's rows count
+once even when a task is retried.  The kernel closure copies each input
+url into its single output row, so the xor of the output urls' hashes and
+the output row count equal the input fingerprint and input row count.
 """
 
 from __future__ import annotations
@@ -18,10 +26,20 @@ import os
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..options import DEFAULT_OPTIONS, Options
 from ..plans.job import run_extraction
+from ..plans.schema import OUTPUT_SCHEMA, STAGES
+
+# manifest stage key for a stage value outside STAGES, so that the stage
+# counters always sum to the row count
+OTHER_STAGE = "other"
+# what read_output returns: the output columns plus the chunk= partition
+READ_SCHEMA = T.StructType(
+    OUTPUT_SCHEMA.fields + [T.StructField("chunk", T.IntegerType(), True)]
+)
 
 
 def _manifest_dir(output_path: str) -> str:
@@ -52,6 +70,18 @@ def _write_manifest_entry(output_path: str, entry: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(entry, f)
     os.replace(tmp, final)  # atomic on POSIX
+
+
+def _manifest_metrics() -> list:
+    """Aggregates observed on the extracted frame: row count, url
+    fingerprint and one counter per stage (see the module docstring)."""
+    stage = F.col("stage")
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.expr("bit_xor(xxhash64(url))").alias("fingerprint"),
+        *(F.count_if(stage == s).alias(s) for s in STAGES),
+        F.count_if(~stage.isin(*STAGES)).alias(OTHER_STAGE),
+    ]
 
 
 def run_extraction_checkpointed(
@@ -101,10 +131,9 @@ def run_extraction_checkpointed(
             if verify_input_fingerprint and "input_fingerprint" in done[k]:
                 # xor-of-hashes alone is blind to even-multiplicity changes
                 # (url added twice xors to zero), so cross-check the row
-                # count too.  The manifest records the INPUT row count
-                # explicitly (older manifests reused the output-row sum,
-                # valid only while the kernel is row-preserving — accept it
-                # as a fallback for resume of pre-upgrade runs).
+                # count too.  Manifests carry ``input_rows``; older ones
+                # only the output-row sum, accepted as a fallback for
+                # resume of pre-upgrade runs.
                 row = (
                     chunked.filter(F.col("_chunk") == k)
                     .select(F.xxhash64(F.col("url")).alias("h"))
@@ -124,31 +153,24 @@ def run_extraction_checkpointed(
             continue
         t0 = time.time()
         chunk_df = chunked.filter(F.col("_chunk") == k).drop("_chunk")
+        observed = Observation()
         extracted = run_extraction(
             spark, chunk_df, options, target_partitions=target_partitions
+        ).observe(observed, *_manifest_metrics())
+        extracted.write.mode("overwrite").parquet(
+            os.path.join(output_path, f"chunk={k}")
         )
-        chunk_path = os.path.join(output_path, f"chunk={k}")
-        extracted.write.mode("overwrite").parquet(chunk_path)
-
-        # lineage + per-stage metrics from the files just written (cheap
-        # re-scan of one chunk; avoids caching the kernel output)
-        written = spark.read.parquet(chunk_path)
+        metrics = observed.get
+        n_rows = metrics["rows"]
         stage_counts = {
-            r["stage"]: r["n"]
-            for r in written.groupBy("stage").agg(F.count("*").alias("n")).collect()
+            s: metrics[s] for s in (*STAGES, OTHER_STAGE) if metrics[s]
         }
-        n_rows = sum(stage_counts.values())
-        fp_row = (
-            chunk_df.select(F.xxhash64(F.col("url")).alias("h"))
-            .agg(F.expr("bit_xor(h)").alias("f"),
-                 F.count("*").alias("n")).collect()[0]
-        )
         _write_manifest_entry(output_path, {
             "chunk_id": k,
             "n_chunks": n_chunks,
             "rows": n_rows,
-            "input_rows": fp_row["n"],
-            "input_fingerprint": str(fp_row["f"]),
+            "input_rows": n_rows,
+            "input_fingerprint": str(metrics["fingerprint"]),
             "stages": stage_counts,
             "wall_time_sec": round(time.time() - t0, 3),
             "options_dedup": options.deduplicate,
@@ -160,6 +182,13 @@ def run_extraction_checkpointed(
 
 
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:
+    """The completed chunks of a checkpointed run, with their ``chunk``
+    partition column.  Only the ``chunk=<k>`` directories the manifest
+    lists are read, so a chunk whose write never finished is left out; no
+    completed chunk gives an empty frame of the same columns."""
+    done = sorted(completed_chunks(output_path))
+    if not done:
+        return spark.createDataFrame([], READ_SCHEMA)
     return spark.read.option("basePath", output_path).parquet(
-        os.path.join(output_path, "chunk=*")
+        *(os.path.join(output_path, f"chunk={k}") for k in done)
     )

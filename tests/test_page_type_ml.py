@@ -119,3 +119,32 @@ def test_fused_signal_walk_matches_refines_own_walk():
             extract_ml_features(doc, "", model_only=True, _signals_out=sig)
             fused = refine_with_html_signals(doc, ut, _walk_signals=sig)
             assert fused == expected, (html, ut, sig)
+
+
+def test_signal_hand_off_checks_its_keys():
+    """A partially filled hand-off fails at refine_with_html_signals with
+    the missing keys named, and a full one carries exactly the keys
+    extract_ml_features fills."""
+    from rs_trafilatura_spark.kernel.page_type import (
+        WALK_SIGNAL_KEYS, refine_with_html_signals,
+    )
+
+    doc = Document("<html><body><p>x</p></body></html>")
+    sig: dict = {}
+    extract_ml_features(doc, "", model_only=True, _signals_out=sig)
+    assert set(sig) == WALK_SIGNAL_KEYS
+    del sig["n_code"]
+    with pytest.raises(ValueError, match="n_code"):
+        refine_with_html_signals(doc, None, _walk_signals=sig)
+
+
+def test_marker_tables_refuse_empty_markers():
+    """An empty marker (or table) would compile to a pattern that matches
+    every url."""
+    from rs_trafilatura_spark.kernel.page_type import _any_re
+
+    assert _any_re(["/blog/", "a.b"]).search("x/blog/y")
+    assert not _any_re(["a.b"]).search("axb")
+    for table in ([], ["/news", ""], [""]):
+        with pytest.raises(ValueError, match="marker table"):
+            _any_re(table)

@@ -223,3 +223,74 @@ def test_checkpoint_manifest_records_input_rows(spark, tmp_path):
         verify_input_fingerprint=True,
     )
     assert s2["chunks_skipped"] == 2 and s2["chunks_run"] == 0
+
+
+def test_checkpoint_one_job_per_chunk_same_manifest(spark, tmp_path):
+    """Each chunk is ONE Spark job (the manifest is observed inside the
+    write), and every manifest entry but wall_time_sec equals what a
+    re-read of the written chunk plus a rescan of its input compute."""
+    from rs_trafilatura_spark.sources import run_extraction_checkpointed
+    from rs_trafilatura_spark.sources.checkpoint import completed_chunks
+
+    sc = spark.sparkContext
+    out_dir = str(tmp_path / "out")
+    n_chunks = 4
+    pages = generate_pages_df(spark, N_ROWS)
+    group = f"checkpoint-one-job-{tmp_path.name}"
+    sc.setJobGroup(group, "checkpointed write")
+    try:
+        summary = run_extraction_checkpointed(
+            spark, pages, out_dir, OPTS, n_chunks=n_chunks)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert summary["chunks_run"] == n_chunks
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_chunks
+
+    chunked = pages.withColumn(
+        "_chunk", F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks)))
+    manifest = completed_chunks(out_dir)
+    assert sorted(manifest) == list(range(n_chunks))
+    for k, entry in manifest.items():
+        written = spark.read.parquet(os.path.join(out_dir, f"chunk={k}"))
+        stages = {r["stage"]: r["n"] for r in
+                  written.groupBy("stage").agg(F.count("*").alias("n"))
+                  .collect()}
+        fp = (chunked.filter(F.col("_chunk") == k)
+              .agg(F.expr("bit_xor(xxhash64(url))").alias("f"),
+                   F.count("*").alias("n")).collect()[0])
+        want = {
+            "chunk_id": k, "n_chunks": n_chunks,
+            "rows": sum(stages.values()), "input_rows": fp["n"],
+            "input_fingerprint": str(fp["f"]), "stages": stages,
+            "options_dedup": OPTS.deduplicate,
+        }
+        got = {key: v for key, v in entry.items() if key != "wall_time_sec"}
+        assert got == want, k
+
+
+def test_read_output_reads_manifest_chunks_only(spark, tmp_path):
+    """A chunk directory with no manifest entry (an unfinished write) is
+    not part of the output; no completed chunk gives an empty frame."""
+    import shutil
+
+    from rs_trafilatura_spark.plans import OUTPUT_SCHEMA
+    from rs_trafilatura_spark.sources import (
+        read_output, run_extraction_checkpointed,
+    )
+
+    empty = read_output(spark, str(tmp_path / "nothing"))
+    assert empty.count() == 0
+    assert empty.schema.fields[:-1] == OUTPUT_SCHEMA.fields
+    assert empty.columns[-1] == "chunk"
+
+    out_dir = str(tmp_path / "out")
+    pages = generate_pages_df(spark, 20)
+    run_extraction_checkpointed(spark, pages, out_dir, OPTS, n_chunks=2)
+    shutil.copytree(os.path.join(out_dir, "chunk=0"),
+                    os.path.join(out_dir, "chunk=5"))
+    out = read_output(spark, out_dir)
+    assert out.count() == 20
+    assert {r["chunk"] for r in out.select("chunk").distinct().collect()} \
+        == {0, 1}
+    assert out.columns == empty.columns
