@@ -2175,7 +2175,7 @@ _STREAM_SEQ = [0]
 def q_streaming_roundtrip(spark, sf_dir):
     """The Structured Streaming path under the driver's eye: readStream
     over the roundtrip pages -> watermark + dropDuplicates -> the SAME
-    mapInPandas kernel -> memory sink, driven to completion
+    mapInArrow kernel -> memory sink, driven to completion
     (streaming/pipeline.py).  Results must match the batch roundtrip."""
     import shutil
     import tempfile

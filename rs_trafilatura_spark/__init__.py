@@ -4,7 +4,7 @@ A brand-new, Spark-first re-expression of the capabilities of the
 ``Murrough-Foley/rs-trafilatura`` reference (a single-document Rust library):
 an Iceberg/parquet table of Common-Crawl-style pages in, a partitioned table
 of extracted text + span offsets + metadata out.  The per-document extraction
-cascade runs as an Arrow-batched ``mapInPandas`` kernel (zero per-row Python
+cascade runs as an Arrow-batched ``mapInArrow`` kernel (zero per-row Python
 dispatch at the Spark level); all distribution concerns (salting skewed
 hosts, size-aware repartitioning, checkpoint/resume, stage metrics) live in
 plain DataFrame code.

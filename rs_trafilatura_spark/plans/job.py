@@ -15,7 +15,7 @@ PySpark's ``setup_spark_files``, which ends in
 archive.  There is one importer per imported package directory, 22-23 in
 all over ``pyspark.zip``, the shipped package zip, py4j and the
 spark-core jar, and together they cost 0.18-0.27 CPU-s per task (4-CPU
-x86 VM) — about half of the workers' CPU on small-page jobs.  Each kernel
+x86 VM) — about half of the workers' CPU on small-page jobs.  The kernel
 closure therefore starts with ``pin_zip_importers()``: on a worker it
 swaps those importers for a subclass whose ``invalidate_caches()`` keeps
 the directory it already read (the archives never change while a worker
@@ -37,9 +37,8 @@ from __future__ import annotations
 import sys
 import zipimport
 from dataclasses import replace
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..options import DEFAULT_OPTIONS, Options
@@ -90,61 +89,6 @@ def pin_zip_importers() -> None:
             importer.__class__ = _PinnedZipImporter
 
 
-def make_extract_batches(opts: Options):
-    """Build the mapInPandas kernel closure (used by the STREAMING pipeline;
-    the batch path uses the cheaper Arrow-native variant below). `opts` is
-    captured once and pickled once per task (an explicit broadcast is
-    unnecessary for a small frozen dataclass; Spark ships task closures
-    once per stage)."""
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pin_zip_importers()
-        # heavy imports inside the worker, once per process
-        from ..kernel.extract import _empty_result, extract_bytes
-
-        def safe_extract(url: str, html) -> dict:
-            # a single pathological page must never fail the task: at
-            # 10^12 documents *something* will hit an unforeseen code path;
-            # degrade to an empty row carrying the error as lineage
-            try:
-                return extract_bytes(bytes(html), replace(opts, url=url))
-            except ImportError:
-                # missing shipped module = broken deployment, not a bad
-                # page: degrading 10^12 rows to 'error' would be far worse
-                # than failing the task
-                raise
-            except Exception as exc:  # noqa: BLE001 - deliberate broad guard
-                res = _empty_result(
-                    [f"kernel error: {type(exc).__name__}: {exc}"[:500]]
-                )
-                res["stage"] = "error"
-                return res
-
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            n = len(urls)
-            ts = pdf["warc_ts"].tolist() if "warc_ts" in pdf else [None] * n
-            langs = pdf["lang"].tolist() if "lang" in pdf else [None] * n
-            results = [
-                safe_extract(url, html) for url, html in zip(urls, htmls)
-            ]
-            # columnar assembly (dict-of-lists) — cheaper than row dicts
-            data: dict = {"url": urls, "warc_ts": ts}
-            for rkey, col in _RESULT_KEYS:
-                data[col] = [r[rkey] for r in results]
-            data["language"] = [
-                r["language"] or lang for r, lang in zip(results, langs)
-            ]
-            data["spans"] = [
-                [{"start": s, "end": e, "kind": k} for s, e, k in r["spans"]]
-                for r in results
-            ]
-            yield pd.DataFrame(data, columns=OUTPUT_COLUMNS)
-
-    return extract_batches
-
-
 def _result_arrays(urls: list, ts, langs: list, results: list[dict],
                    schema) -> list:
     """Columnar assembly of kernel results as pyarrow arrays in
@@ -180,8 +124,10 @@ def _result_arrays(urls: list, ts, langs: list, results: list[dict],
 
 
 def make_extract_arrow_batches(opts: Options):
-    """Arrow-native kernel for ``mapInArrow``: consumes input record
-    batches (url, warc_ts?, html, lang?), emits OUTPUT_SCHEMA batches."""
+    """The one kernel closure, for ``mapInArrow`` in the batch, fastscan,
+    WARC and streaming paths: consumes input record batches (url,
+    warc_ts?, html, lang?), emits OUTPUT_SCHEMA batches.  ``opts`` rides
+    in the closure, which Spark ships once per stage: no broadcast."""
 
     def extract_arrow_batches(batches):
         pin_zip_importers()
@@ -189,16 +135,19 @@ def make_extract_arrow_batches(opts: Options):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from ..kernel.extract import _empty_result, extract_bytes
-        from .schema import OUTPUT_SCHEMA
 
         out_schema = to_arrow_schema(OUTPUT_SCHEMA)
 
         def safe_extract(url: str, html) -> dict:
-            # a single pathological page must never fail the task (see
-            # make_extract_batches)
+            # a single pathological page must never fail the task: at
+            # 10^12 documents *something* will hit an unforeseen code path;
+            # degrade to an empty row carrying the error as lineage
             try:
                 return extract_bytes(bytes(html), replace(opts, url=url))
             except ImportError:
+                # missing shipped module = broken deployment, not a bad
+                # page: degrading 10^12 rows to 'error' would be far worse
+                # than failing the task
                 raise
             except Exception as exc:  # noqa: BLE001 - deliberate broad guard
                 res = _empty_result(
@@ -258,26 +207,24 @@ def run_extraction(
     pages: DataFrame,
     options: Options = DEFAULT_OPTIONS,
     target_partitions: Optional[int] = None,
-    repartition: bool = False,
 ) -> DataFrame:
     """The extraction pipeline: select only needed columns (column pruning
     reaches the scan), then the Arrow-batched kernel.
 
-    By default the kernel maps DIRECTLY on the scan's partitions: parquet
-    splits are byte-bounded (spark.sql.files.maxPartitionBytes), so task
-    cost is already balanced by input bytes — which is what extraction cost
-    tracks (reference README.md:258-260) — and a full shuffle of page HTML
-    at 100 TB is exactly the bottleneck to avoid.  Set ``repartition=True``
-    for pathologically partitioned inputs (e.g. the output of a join or a
-    few huge row-groups), which routes through size_aware_repartition.
+    The kernel maps DIRECTLY on the scan's partitions: parquet splits are
+    byte-bounded (spark.sql.files.maxPartitionBytes), so task cost is
+    already balanced by input bytes — which is what extraction cost tracks
+    (reference README.md:258-260) — and a full shuffle of page HTML at
+    100 TB is exactly the bottleneck to avoid.  For pathologically
+    partitioned inputs (e.g. the output of a join or a few huge
+    row-groups) pass ``size_aware_repartition(pages, n)``: it already has
+    at least n/2 partitions, so no second spread runs here.
     """
     if target_partitions is None:
         target_partitions = spark.sparkContext.defaultParallelism
     cols = [c for c in ("url", "warc_ts", "html", "lang") if c in pages.columns]
     df = pages.select(*cols)
-    if repartition:
-        df = size_aware_repartition(df, target_partitions)
-    elif df.rdd.getNumPartitions() < max(2, target_partitions // 2):
+    if df.rdd.getNumPartitions() < max(2, target_partitions // 2):
         # too few input splits to use the cluster: one-time spread
         df = df.repartition(target_partitions)
     return df.mapInArrow(make_extract_arrow_batches(options),

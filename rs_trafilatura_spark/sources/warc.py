@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..options import DEFAULT_OPTIONS, Options
 from ..plans.schema import OUTPUT_SCHEMA
-from .fastscan import pack_bins
+from .fastscan import ROWS_PER_BATCH, pack_bins
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -76,8 +76,6 @@ CDX_SCHEMA = T.StructType([
 
 _CRLF = b"\r\n"
 _WARC_DATE = "%Y-%m-%dT%H:%M:%SZ"
-# records per emitted Arrow batch ~ 80 MB of HTML at the 300 KB CC mean
-ROWS_PER_BATCH = 256
 
 
 # --- record serialization ----------------------------------------------------------
@@ -184,14 +182,15 @@ def parse_warc_stream(stream) -> Iterator[dict]:
         }
 
 
-def _open_warc(path: str):
+def _open_warc(src):
     """Open plain or gzip WARC by magic bytes (concatenated gzip members
-    decode as one stream).  BufferedReader so readline() is C-speed."""
-    raw = open(path, "rb")
-    magic = raw.peek(2)[:2] if hasattr(raw, "peek") else b""
-    if magic == b"\x1f\x8b" or (not magic and path.endswith(".gz")):
+    decode as one stream).  ``src`` is a path or an already-buffered
+    binary file object (one with ``peek``).  BufferedReader so readline()
+    is C-speed."""
+    raw = open(src, "rb") if isinstance(src, str) else src
+    if raw.peek(2)[:2] == b"\x1f\x8b":
         return io.BufferedReader(gzip.GzipFile(fileobj=raw))  # type: ignore[arg-type]
-    return io.BufferedReader(raw)
+    return raw
 
 
 def list_warc_files(path: str) -> list[tuple[str, int]]:
@@ -209,22 +208,29 @@ def list_warc_files(path: str) -> list[tuple[str, int]]:
 # --- Spark source ------------------------------------------------------------------
 
 
-def _records_to_batches(paths: Iterable[str], arrow_schema,
-                        rows_per_batch: int):
-    import pyarrow as pa
-
-    buf: list[dict] = []
-    for p in paths:
+def _archive_records(sources: Iterable) -> Iterator[dict]:
+    """Every record of the WARC ``sources`` (paths or buffered binary file
+    objects, see ``_open_warc``); a path that cannot be opened is skipped."""
+    for src in sources:
         try:
-            stream = _open_warc(p)
+            stream = _open_warc(src)
         except OSError:
             continue
         with stream:
-            for rec in parse_warc_stream(stream):
-                buf.append(rec)
-                if len(buf) >= rows_per_batch:
-                    yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
-                    buf = []
+            yield from parse_warc_stream(stream)
+
+
+def _records_to_batches(records: Iterable[dict], arrow_schema,
+                        rows_per_batch: int):
+    """Group record dicts into Arrow batches of ``rows_per_batch``."""
+    import pyarrow as pa
+
+    buf: list[dict] = []
+    for rec in records:
+        buf.append(rec)
+        if len(buf) >= rows_per_batch:
+            yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
+            buf = []
     if buf:
         yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
 
@@ -236,7 +242,8 @@ def _make_warc_scan(rows_per_batch: int):
         arrow_schema = to_arrow_schema(PAGES_SCHEMA)
         for batch in batches:
             paths = [p for row in batch.column(0).to_pylist() for p in row]
-            yield from _records_to_batches(paths, arrow_schema, rows_per_batch)
+            yield from _records_to_batches(
+                _archive_records(paths), arrow_schema, rows_per_batch)
 
     return scan
 
@@ -434,27 +441,23 @@ def fetch_records(cdx: DataFrame, archive_dir: str,
     has_url = "url" in cdx.columns
 
     def fetch(batches):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(PAGES_SCHEMA)
-        buf: list[dict] = []
-        for batch in batches:
-            for row in batch.to_pylist():
-                try:
-                    rec = fetch_warc_record(
-                        archive_dir, row["file"], row["offset"],
-                        row["length"], url=row.get("url"),
-                    )
-                except OSError:
-                    continue
-                if rec is not None:
-                    buf.append(rec)
-                if len(buf) >= rows_per_batch:
-                    yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
-                    buf = []
-        if buf:
-            yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
+        def records():
+            for batch in batches:
+                for row in batch.to_pylist():
+                    try:
+                        rec = fetch_warc_record(
+                            archive_dir, row["file"], row["offset"],
+                            row["length"], url=row.get("url"),
+                        )
+                    except OSError:
+                        continue
+                    if rec is not None:
+                        yield rec
+
+        yield from _records_to_batches(
+            records(), to_arrow_schema(PAGES_SCHEMA), rows_per_batch)
 
     cols = (["url"] if has_url else []) + ["file", "offset", "length"]
     return cdx.select(*cols).mapInArrow(fetch, schema=PAGES_SCHEMA)

@@ -2,9 +2,10 @@
 
 The reference has no streaming operators (its spider channel is the caller's
 concern, README.md:196-212); this is the engine's forward path: readStream
-on the pages table -> the SAME mapInPandas kernel -> sink, with a watermark
-on warc_ts for late data and dropDuplicates(url) within the watermark as the
-streaming generalization of the LRU dedup (SURVEY.md §2.12).
+on the pages table -> the SAME mapInArrow kernel closure as the batch path
+-> sink, with a watermark on warc_ts for late data and dropDuplicates(url)
+within the watermark as the streaming generalization of the LRU dedup
+(SURVEY.md §2.12).
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..options import DEFAULT_OPTIONS, Options
-from ..plans.job import make_extract_batches
+from ..plans.job import make_extract_arrow_batches
 from ..plans.schema import OUTPUT_SCHEMA
 
 PAGES_SCHEMA = T.StructType([
@@ -48,15 +49,14 @@ def extraction_stream(
     if dedup_urls:
         df = df.dropDuplicates(["url"])
     df = df.select("url", "warc_ts", "html", "lang")
-    return df.mapInPandas(make_extract_batches(options), schema=OUTPUT_SCHEMA)
+    return df.mapInArrow(make_extract_arrow_batches(options),
+                         schema=OUTPUT_SCHEMA)
 
 
-def run_stream_to_memory(spark: SparkSession, input_path: str,
-                         query_name: str = "extracted",
-                         options: Options = DEFAULT_OPTIONS):
-    """Drive a bounded backlog to completion synchronously (local smoke);
-    production sinks swap in .format('parquet')/foreachBatch."""
-    stream = extraction_stream(read_pages_stream(spark, input_path), options)
+def _drain_to_memory(spark: SparkSession, stream: DataFrame,
+                     query_name: str) -> DataFrame:
+    """Run ``stream``'s available backlog to completion into a memory sink
+    and return the sink as a table."""
     q = (
         stream.writeStream.outputMode("append")
         .format("memory").queryName(query_name)
@@ -66,6 +66,15 @@ def run_stream_to_memory(spark: SparkSession, input_path: str,
     q.processAllAvailable()
     q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")
+
+
+def run_stream_to_memory(spark: SparkSession, input_path: str,
+                         query_name: str = "extracted",
+                         options: Options = DEFAULT_OPTIONS):
+    """Drive a bounded backlog to completion synchronously (local smoke);
+    production sinks swap in .format('parquet')/foreachBatch."""
+    stream = extraction_stream(read_pages_stream(spark, input_path), options)
+    return _drain_to_memory(spark, stream, query_name)
 
 
 def windowed_stage_metrics_stream(
@@ -111,7 +120,9 @@ def read_warc_stream(spark: SparkSession, input_path: str,
     records are skipped, never raised, so one truncated upload cannot
     wedge the stream."""
     from ..sources.warc import PAGES_SCHEMA as WARC_PAGES_SCHEMA
-    from ..sources.warc import parse_warc_stream
+    from ..sources.warc import (
+        ROWS_PER_BATCH, _archive_records, _records_to_batches,
+    )
 
     raw = (
         spark.readStream.format("binaryFile")
@@ -123,31 +134,17 @@ def read_warc_stream(spark: SparkSession, input_path: str,
     )
 
     def parse(batches):
-        import gzip as _gzip
-        import io as _io
+        import io
 
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(WARC_PAGES_SCHEMA)
-        buf: list[dict] = []
-        for batch in batches:
-            for content in batch.column(batch.schema.names.index("content")):
-                blob = content.as_py()
-                if blob[:2] == b"\x1f\x8b":
-                    stream = _io.BufferedReader(
-                        _gzip.GzipFile(fileobj=_io.BytesIO(blob)))
-                else:
-                    stream = _io.BufferedReader(_io.BytesIO(blob))
-                with stream:
-                    for rec in parse_warc_stream(stream):
-                        buf.append(rec)
-                        if len(buf) >= 256:
-                            yield pa.RecordBatch.from_pylist(
-                                buf, schema=arrow_schema)
-                            buf = []
-        if buf:
-            yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
+        archives = (
+            io.BufferedReader(io.BytesIO(content.as_py()))
+            for batch in batches for content in batch.column(0)
+        )
+        yield from _records_to_batches(
+            _archive_records(archives), to_arrow_schema(WARC_PAGES_SCHEMA),
+            ROWS_PER_BATCH)
 
     return raw.select("content").mapInArrow(parse, schema=WARC_PAGES_SCHEMA)
 
@@ -159,12 +156,4 @@ def run_warc_stream_to_memory(spark: SparkSession, input_path: str,
     -> streaming parse -> watermark + url dedup -> the SAME kernel ->
     memory sink.  Production swaps the sink for parquet/foreachBatch."""
     stream = extraction_stream(read_warc_stream(spark, input_path), options)
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory").queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return _drain_to_memory(spark, stream, query_name)

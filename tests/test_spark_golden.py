@@ -133,6 +133,17 @@ def test_salted_host_agg_matches_direct(spark):
     assert {r["host"]: r["n"] for r in salted.collect()} == direct
 
 
+def _kernel_input_batch():
+    """One input row for the Arrow kernel closure, with no warc_ts column."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict({
+        "url": pa.array(["https://x/1"], pa.string()),
+        "html": pa.array([b"<html><body><p>x</p></body></html>"], pa.binary()),
+        "lang": pa.array(["en"], pa.string()),
+    })
+
+
 def test_kernel_error_degrades_to_row(spark, monkeypatch):
     """A page that crashes the kernel yields stage='error', not a dead task."""
     import importlib
@@ -140,37 +151,57 @@ def test_kernel_error_degrades_to_row(spark, monkeypatch):
     # attribute access resolves to the extract() FUNCTION re-exported by the
     # kernel package, so fetch the module through importlib
     kx = importlib.import_module("rs_trafilatura_spark.kernel.extract")
-    from rs_trafilatura_spark.plans import run_extraction
+    from rs_trafilatura_spark.plans.job import make_extract_arrow_batches
 
-    pages = generate_pages_df(spark, 8)
-    # poison one row: html that decodes but has a NUL-bomb the kernel chokes
-    # on is hard to craft, so simulate via a page whose url triggers a raise
-    # inside the batch path by monkeypatching at the WORKER via a wrapper df:
-    # simplest real-world probe — html=None-ish empty binary is handled, so
-    # instead assert the guard exists by running a normal job and checking
-    # no 'error' stage appears, then drive the guard directly in-process.
-    out = run_extraction(spark, pages)
+    out = run_extraction(spark, generate_pages_df(spark, 8))
     assert out.filter(F.col("stage") == "error").count() == 0
 
-    # in-process guard check (same function the workers run)
-    from rs_trafilatura_spark.plans.job import make_extract_batches
-    import pandas as pd
-
-    fn = make_extract_batches(OPTS)
-    real = kx.extract_bytes
-
+    # in-process guard check: the same closure the workers run
     def boom(html, opts):
         raise RuntimeError("synthetic kernel failure")
 
     monkeypatch.setattr(kx, "extract_bytes", boom)
-    pdf = pd.DataFrame({
-        "url": ["https://x/1"], "warc_ts": [None],
-        "html": [b"<html><body><p>x</p></body></html>"], "lang": ["en"],
-    })
-    result = list(fn(iter([pdf])))[0]
-    monkeypatch.setattr(kx, "extract_bytes", real)
-    assert result["stage"].iloc[0] == "error"
-    assert "synthetic kernel failure" in result["warnings"].iloc[0][0]
+    fn = make_extract_arrow_batches(OPTS)
+    (result,) = list(fn(iter([_kernel_input_batch()])))
+    row = result.to_pylist()[0]
+    assert row["stage"] == "error"
+    assert "synthetic kernel failure" in row["warnings"][0]
+    assert row["url"] == "https://x/1" and row["language"] == "en"
+    assert row["warc_ts"] is None  # no warc_ts column in the input
+
+
+def test_kernel_import_error_fails_batch(monkeypatch):
+    """A missing shipped module is a broken deployment, not a bad page: the
+    guard re-raises ImportError instead of emitting a stage='error' row."""
+    import importlib
+
+    kx = importlib.import_module("rs_trafilatura_spark.kernel.extract")
+    from rs_trafilatura_spark.plans.job import make_extract_arrow_batches
+
+    def missing(html, opts):
+        raise ImportError("No module named 'rs_trafilatura_spark.gone'")
+
+    monkeypatch.setattr(kx, "extract_bytes", missing)
+    fn = make_extract_arrow_batches(OPTS)
+    with pytest.raises(ImportError, match="gone"):
+        list(fn(iter([_kernel_input_batch()])))
+
+
+def test_size_aware_repartition_same_rows(spark, extracted):
+    """Pages split on both sides of ``large_threshold`` extract to the same
+    rows as the plain scan-partitioned run."""
+    from rs_trafilatura_spark.plans import size_aware_repartition
+
+    pages = generate_pages_df(spark, N_ROWS)
+    sizes = sorted(r[0] for r in pages.select(F.length("html")).collect())
+    threshold = sizes[len(sizes) // 2]
+    assert sizes[0] <= threshold < sizes[-1]
+    spread = size_aware_repartition(pages, 8, large_threshold=threshold)
+    assert spread.rdd.getNumPartitions() >= 4
+    got = run_extraction(spark, spread, OPTS)
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, extracted.collect())
+    )
 
 
 def test_checkpoint_refuses_n_chunks_mismatch(spark, tmp_path):

@@ -23,6 +23,14 @@ def test_streaming_extraction(spark, tmp_path):
         .filter(~F.col("content_text").eqNullSafe(F.col("text"))).count()
     )
     assert bad == 0
+    # every output column equals the batch path's on the same pages
+    from rs_trafilatura_spark.plans import OUTPUT_COLUMNS, run_extraction
+
+    batch = run_extraction(spark, spark.read.parquet(path),
+                           Options(deduplicate=True))
+    got = sorted(map(repr, out.select(*OUTPUT_COLUMNS).collect()))
+    want = sorted(map(repr, batch.select(*OUTPUT_COLUMNS).collect()))
+    assert got == want
 
 
 def test_fscore_spark(spark):

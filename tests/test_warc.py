@@ -29,8 +29,12 @@ def test_record_roundtrip_plain_and_gzip(tmp_path):
     # one gzip member per record — the Common Crawl layout
     gz.write_bytes(b"".join(gzip.compress(r, mtime=0) for r in recs))
 
-    for p in (plain, gz):
-        with _open_warc(str(p)) as s:
+    # each archive from its path and from an in-memory buffer
+    sources = [str(plain), str(gz)] + [
+        io.BufferedReader(io.BytesIO(p.read_bytes())) for p in (plain, gz)
+    ]
+    for src in sources:
+        with _open_warc(src) as s:
             out = list(parse_warc_stream(s))
         assert [r["url"] for r in out] == [f"https://ex.com/p{i}" for i in range(5)]
         assert out[4]["html"] == b"<html><body><p>doc 4 body text</p></body></html>"
@@ -112,6 +116,9 @@ def test_read_warc_empty_dir(spark, tmp_path):
     df = read_warc(spark, str(tmp_path))
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["url", "warc_ts", "html", "lang"]
+    # an empty file is read as an empty archive, whatever its suffix
+    (tmp_path / "x.warc.gz").write_bytes(b"")
+    assert read_warc(spark, str(tmp_path)).count() == 0
 
 
 def test_cdx_index_and_random_access(spark, tmp_path):
