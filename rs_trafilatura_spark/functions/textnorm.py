@@ -26,8 +26,6 @@ _PUNCT = frozenset(".,;:!?")
 # excluding it makes prose (one match per word boundary!) nearly match-free
 # — the sub becomes a scan instead of a 10^4-segment rebuild.
 _WS_RUN = re.compile(r"[ \t]*\t[ \t]*| {2,}")
-_SPACE_BEFORE = re.compile(r" (?=[\n.,;:!?])")
-_SPACE_AFTER_NL = re.compile(r"\n ")
 
 
 def normalize_text_output(text: str) -> str:

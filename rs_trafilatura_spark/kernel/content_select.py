@@ -229,23 +229,6 @@ def _is_inside_boilerplate(el: Element, boilerplate_ids: set[int]) -> bool:
     return False
 
 
-_NESTED_CONTENT_SELECTOR = (
-    "[class*='content_main'], [class*='content-main'], "
-    "[class*='article-content'], [class*='article_content'], "
-    "[class*='post-content'], [class*='post_content'], "
-    "[class*='story-content'], [itemprop='articleBody'], "
-    "[class*='blogInner__content'], [class*='blog-content'], "
-    "[class*='blog_content'], [class*='blogContent'], "
-    "[class*='entry-content']"
-)
-
-_WRAPPER_BOILERPLATE_SELECTOR = (
-    "[class*='sidebar'], [class*='social'], [class*='share-'], "
-    "[class*='-share'], [class*='author-'], [class*='sticky-'], "
-    "[class*='toc-'], [class*='-toc'], [class*='related-'], [class*='widget']"
-)
-
-
 _NESTED_CLASS_SUBSTRINGS = (
     "content_main", "content-main", "article-content", "article_content",
     "post-content", "post_content", "story-content", "blogInner__content",
@@ -364,49 +347,19 @@ def class_score(el: Element) -> float:
     return score
 
 
-def score_content_node(el: Element, cleaned_text: str, text_len: int,
-                       depth: int) -> int:
-    sentence_count = count_sentences(cleaned_text)
-    p_elements = select(el, "p")
-    substantive_p = sum(
-        1 for p in p_elements if len(clean_text(p.text_content())) >= 100
-    )
-    p_count = len(p_elements)
-    h_count = len(select(el, "h1, h2, h3, h4, h5, h6"))
-    link_text_len = sum(
-        len(clean_text(a.text_content())) for a in select(el, "a")
-    )
-    link_density = link_text_len / text_len if text_len > 0 else 1.0
-
-    effective_len = min(text_len, 8000)
-    effective_sentences = min(sentence_count, effective_len // 50)
-
-    score = effective_len
-    score += p_count * 200
-    score += h_count * 100
-    score += substantive_p * 300
-    score += effective_sentences * 50
-    score += depth * 10
-    score += int(class_score(el))
-
-    if link_density > 0.5:
-        score = int(score * (1.0 - link_density))
-    elif link_density > 0.25:
-        score = int(score * (1.0 - link_density * 0.5))
-    return score
-
-
 _H_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
 
 def _subtree_stats(body: Element) -> dict:
     """One post-order pass computing, for EVERY element, the quantities
-    score_content_node reads with per-candidate subtree selects:
-    (text_content, p_count, substantive_p, h_count, link_text_len).  All
+    the content score reads: (text_content, p_count, substantive_p,
+    h_count, link_text_len), where the counts cover the element's
+    descendant ``<p>`` (with >= 100 chars of clean text for
+    substantive_p), ``<h1>``-``<h6>`` and ``<a>`` elements.  All
     are additive over children (text_content(el) = el.text + sum(child +
     child.tail)), so the pass is O(n) element visits + O(total_text *
-    depth) C-speed string copies — replacing the old O(candidates *
-    subtree) select storm, the known slow path on deeply nested pages."""
+    depth) C-speed string copies instead of an O(candidates * subtree)
+    select per candidate, the slow path on deeply nested pages."""
     stats: dict = {}
     stack: list = [(body, False)]
     while stack:
@@ -440,15 +393,16 @@ def _subtree_stats(body: Element) -> dict:
     return stats
 
 
-def _score_from_stats(el: Element, stat, depth: int) -> tuple[int, int]:
-    """score_content_node, computed from the precomputed subtree stats —
-    identical arithmetic and rounding, without the per-candidate selects.
-    Returns (score, text_len)."""
+def _score_from_stats(el: Element, stat, depth: int) -> tuple[int, str]:
+    """Content score of ``el`` (reference score_content_node,
+    extract.rs:2182-2268) from its ``_subtree_stats`` entry; ``depth`` is
+    its distance below body.  Serves both heuristic node selection and
+    the multi-candidate merge.  Returns (score, cleaned text)."""
     text, p_count, substantive_p, h_count, link_text_len = stat
     cleaned = clean_text(text)
     text_len = len(cleaned)
     if text_len == 0:
-        return 0, 0
+        return 0, cleaned
     link_density = link_text_len / text_len
 
     effective_len = min(text_len, 8000)
@@ -466,7 +420,7 @@ def _score_from_stats(el: Element, stat, depth: int) -> tuple[int, int]:
         score = int(score * (1.0 - link_density))
     elif link_density > 0.25:
         score = int(score * (1.0 - link_density * 0.5))
-    return score, text_len
+    return score, cleaned
 
 
 def find_heuristic_content_node(body: Element, opts: Options) -> Optional[Element]:
@@ -491,8 +445,8 @@ def find_heuristic_content_node(body: Element, opts: Options) -> Optional[Elemen
             continue
         if is_boilerplate(el.get("class")) or is_boilerplate(el.get("id")):
             continue
-        score, text_len = _score_from_stats(el, stats[id(el)], depth)
-        if text_len == 0:
+        score, cleaned = _score_from_stats(el, stats[id(el)], depth)
+        if not cleaned:
             continue
         if score > best_score:
             best_score = score

@@ -12,6 +12,7 @@ from ..dom import Document, Element, select
 from ..functions.textnorm import clean_text, normalize_text_output
 from .boilerplate import is_boilerplate
 from .metadata import find_jsonld_article_body
+from .traversal import source_span
 
 
 def _should_discard(el: Element) -> bool:
@@ -108,16 +109,6 @@ def candidate_is_usable(cand_len: int, text_len: int,
     return text_len < min_size and favor_recall
 
 
-def _src_span(el: Element) -> list[tuple[int, int, str]]:
-    """Source-anchored span for a DOM node the fallback read (north rule:
-    spans on every stage).  Same (start, end, tag) semantics as the
-    traversal emitter's spans."""
-    if el._srcpos is None:
-        return []
-    start, end = el._srcpos
-    return [(start, max(end, start), el.tag)]
-
-
 def baseline(doc: Document) -> tuple[str, str, list[tuple[int, int, str]]]:
     """Return (text, stage, spans). Mirrors fallback.rs:259-368 over the
     UNCLEANED backup document.  Stages that read real DOM nodes (article,
@@ -144,7 +135,7 @@ def baseline(doc: Document) -> tuple[str, str, list[tuple[int, int, str]]]:
         text = article.text_content().strip()
         if len(text) > 100:
             return (normalize_text_output(_paragraphish_text(article)),
-                    "baseline_article", _src_span(article))
+                    "baseline_article", source_span(article))
 
     # 4. paragraph scrape — one source span per contributing element
     seen: set[str] = set()
@@ -169,7 +160,7 @@ def baseline(doc: Document) -> tuple[str, str, list[tuple[int, int, str]]]:
         if entry not in seen:
             seen.add(entry)
             parts.append(entry)
-            spans.extend(_src_span(el))
+            spans.extend(source_span(el))
     if parts:
         text = "\n\n".join(parts)
         return text, "baseline_rescue", spans
@@ -179,7 +170,7 @@ def baseline(doc: Document) -> tuple[str, str, list[tuple[int, int, str]]]:
     if body is not None:
         text = normalize_text_output(body.iter_text_joined("\n"))
         if len(text) > 100:
-            return text, "baseline_body", _src_span(body)
+            return text, "baseline_body", source_span(body)
 
     # 6. whole document
     return (normalize_text_output(doc.root.iter_text_joined("\n")),

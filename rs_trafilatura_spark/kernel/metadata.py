@@ -18,8 +18,6 @@ _ARTICLE_TYPES = frozenset(
     {"article", "newsarticle", "blogposting", "reportage", "report",
      "scholarlyarticle", "socialmediaposting", "liveblogposting"}
 )
-_PERSON_TYPES = frozenset({"person"})
-_ORG_TYPES = frozenset({"organization", "newsmediaorganization"})
 
 _LICENSE_CC_RE = re.compile(
     r"creativecommons\.org/licenses/([a-z-]+)/(\d\.\d)", re.I

@@ -43,8 +43,6 @@ BOILERPLATE_CLASS_NO_COMMENTS = re.compile(r"(?i)(" + _BOILERPLATE_COMMON + r")"
 
 # --- content identification (patterns.rs:78-105) --------------------------------
 
-CONTENT_CLASS = re.compile(r"(?i)(article|content|post|entry|story|text|body|main)")
-ARTICLE_CLASS = re.compile(r"(?i)(article|post|entry|story|news|blog)")
 COMMENT_CLASS = re.compile(
     r"(?i)\b(comment|comments|comment[-_]?list|respond|reply|replies|discussion"
     r"|disqus|fb[-_]?comments)\b"
@@ -53,19 +51,7 @@ COMMENT_ID = re.compile(
     r"(?i)^(comments|comment-section|disqus_thread|respond|discussion)$"
 )
 
-# --- metadata (patterns.rs:108-118) -----------------------------------------------
-
-AUTHOR_TEXT = re.compile(r"(?i)(?:by|author|written by|posted by)\s*:?\s*([^,\n]+)")
-DATE_TEXT = re.compile(
-    r"(?i)(\d{4}[-/]\d{1,2}[-/]\d{1,2}|\d{1,2}[-/]\d{1,2}[-/]\d{4}|\w+\s+\d{1,2},?\s+\d{4})"
-)
-
-TITLE_SEPARATOR = re.compile(r"\s*[\|–—\-:]\s*")
-
 # --- selectors (patterns.rs:145-160) -------------------------------------------------
 
 ARTICLE_SELECTOR = "article, [role='article'], .article, .post, .entry"
 MAIN_SELECTOR = "main, [role='main'], #main, .main, #content, .content"
-TITLE_SELECTOR = "title, h1, [class*='title'], [id*='title']"
-AUTHOR_SELECTOR = "[rel='author'], .author, .byline, [class*='author'], [itemprop='author']"
-DATE_SELECTOR = "time, [datetime], .date, [class*='date'], [itemprop='datePublished']"

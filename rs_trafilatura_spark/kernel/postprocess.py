@@ -13,19 +13,13 @@ from ..dom import Document, Element, select
 from ..functions.textnorm import clean_text
 from ..options import Options
 from .boilerplate import is_boilerplate
-from .content_select import score_content_node
+from .content_select import _score_from_stats, _subtree_stats
+from .traversal import source_span
 
 _CONTAINER_SELECTORS = (
     "main", "[role='main']", "#content", ".content",
     "section", ".feed", ".stream", ".listing", ".items",
 )
-
-
-def _node_span(el: Element) -> list[tuple[int, int, str]]:
-    if el._srcpos is None:
-        return []
-    start, end = el._srcpos
-    return [(start, max(end, start), el.tag)]
 
 
 def _collect_sibling_group(container: Element, child_tag: str,
@@ -51,43 +45,23 @@ def try_collect_repeated_items(
     """Find containers with 3+ same-tag children carrying real text
     (news card grids, product lists); biggest group by total length wins.
     Returns (text, source spans — one per collected item node)."""
-    best: Optional[list[tuple[str, Element]]] = None
-    best_total = 0
-
+    groups = []
     for sel_str in _CONTAINER_SELECTORS:
         for container in select(doc.root, sel_str):
-            group = _collect_sibling_group(container, "article", 3, min_words)
-            if group:
-                total = sum(len(t) for t, _ in group)
-                if total > best_total:
-                    best_total, best = total, group
-            for lst in select(container, "ul, ol"):
-                group = _collect_sibling_group(lst, "li", 3, min_words)
-                if group:
-                    total = sum(len(t) for t, _ in group)
-                    if total > best_total:
-                        best_total, best = total, group
+            groups.append(
+                _collect_sibling_group(container, "article", 3, min_words))
+            groups.extend(_collect_sibling_group(lst, "li", 3, min_words)
+                          for lst in select(container, "ul, ol"))
+    groups.append(_collect_sibling_group(doc.root, "article", 3, min_words))
 
-    articles = select(doc.root, "article")
-    if len(articles) >= 3:
-        texts = []
-        for el in articles:
-            cls = el.get("class")
-            if cls and is_boilerplate(cls):
-                continue
-            text = el.text_content().strip()
-            if len(text.split()) >= min_words:
-                texts.append((text, el))
-        if len(texts) >= 3:
-            total = sum(len(t) for t, _ in texts)
-            if total > best_total:
-                best_total, best = total, texts
-
-    if not best:
+    # the first group with the largest total text length wins
+    best = max((g for g in groups if g), default=None,
+               key=lambda g: sum(len(t) for t, _ in g))
+    if best is None:
         return None
     spans: list[tuple[int, int, str]] = []
     for _, el in best:
-        spans.extend(_node_span(el))
+        spans.extend(source_span(el))
     return "\n\n".join(t for t, _ in best), spans
 
 
@@ -98,7 +72,8 @@ def try_multi_candidate_merge(
     pages: sorted by score desc, keep top + others scoring >= top/5 whose
     text isn't already contained, cap 15k chars (extract.rs:644-768)."""
     body = doc.body
-    body_len = max(len(clean_text(body.text_content())), 1)
+    stats = _subtree_stats(body)
+    body_len = max(len(clean_text(stats[id(body)][0])), 1)
 
     candidates: list[tuple[int, str, Element]] = []
     for el in body.iterdesc():
@@ -106,18 +81,14 @@ def try_multi_candidate_merge(
             continue
         if is_boilerplate(el.get("class")) or is_boilerplate(el.get("id")):
             continue
-        cleaned = clean_text(el.text_content())
-        text_len = len(cleaned)
-        if text_len < 50:
-            continue
-        if text_len / body_len > 0.85:
-            continue
         depth = 0
         cur = el.parent
         while cur is not None and cur.tag != "body":
             depth += 1
             cur = cur.parent
-        score = score_content_node(el, cleaned, text_len, depth)
+        score, cleaned = _score_from_stats(el, stats[id(el)], depth)
+        if len(cleaned) < 50 or len(cleaned) / body_len > 0.85:
+            continue
         candidates.append((score, cleaned, el))
 
     if not candidates:
@@ -138,7 +109,7 @@ def try_multi_candidate_merge(
         if total + len(text) > 15_000:
             break
         merged.append(text)
-        spans.extend(_node_span(el))
+        spans.extend(source_span(el))
         total += len(text)
     if not merged:
         return None

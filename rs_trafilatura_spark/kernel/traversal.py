@@ -189,6 +189,15 @@ def _text_if_shorter(el: Element, limit: int) -> Optional[str]:
     return text if len(text) < limit else None
 
 
+def source_span(el: Element) -> list[tuple[int, int, str]]:
+    """``[(start, end, tag)]``: the char offsets of ``el`` in the decoded
+    source html, recorded at parse time; empty for a node without them."""
+    if el._srcpos is None:
+        return []
+    start, end = el._srcpos
+    return [(start, max(end, start), el.tag)]
+
+
 def extract_filtered_text(
     root: Element,
     opts: Options,
@@ -204,9 +213,8 @@ def extract_filtered_text(
     def emit_text(el: Element, text: str) -> None:
         out.append(text)
         out.append(" ")
-        if el._srcpos is not None and text.strip():
-            start, end = el._srcpos
-            spans.append((start, max(end, start), el.tag))
+        if text.strip():
+            spans.extend(source_span(el))
 
     def visit(el: Element, inside_am: bool) -> None:
         tag = el.tag
@@ -227,8 +235,7 @@ def extract_filtered_text(
                         out.append("\n\n")
                         out.append(table_text)
                         out.append("\n\n")
-                        if el._srcpos is not None:
-                            spans.append((el._srcpos[0], max(el._srcpos[1], el._srcpos[0]), "table"))
+                        spans.extend(source_span(el))
                     return
                 # layout table: fall through, traverse children normally
 

@@ -1,10 +1,19 @@
-"""Extraction options — immutable per job, shipped as a Spark broadcast
-(never a column).  Field-for-field mirror of the reference's 28-field
-``Options`` struct (options.rs:28-233, defaults options.rs:236-269)."""
+"""Extraction options — immutable per job, carried in the kernel closure
+that ``mapInArrow`` ships once per stage (plans/job.py
+``make_extract_arrow_batches``), never a column.
+
+Mirrors the reference's 28-field ``Options`` struct (options.rs:28-233,
+defaults options.rs:236-269) minus the six fields this engine never
+reads, which are dropped rather than kept as settings that change
+nothing: ``min_score`` (the heuristic selector sets its own threshold
+from ``favor_precision`` / ``favor_recall``, extract.rs:2068-2177),
+``max_duplicate_ratio``, ``max_link_density``, ``min_paragraph_cluster``,
+``include_formatting`` and ``max_tree_depth``.  Passing one raises
+``TypeError``."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass
 from typing import Optional
 
 
@@ -25,27 +34,16 @@ class Options:
     max_extracted_len: int = 1_000_000
     min_output_size: int = 50
     min_output_comm_size: int = 10
-    min_score: int = 1000
-    max_duplicate_ratio: float = 0.5
-    max_link_density: float = 0.8
-    min_paragraph_cluster: int = 3
-    include_formatting: bool = False
     only_with_metadata: bool = False
-    max_tree_depth: int = 100
     min_word_length: int = 2
     use_fallback_extraction: bool = True
     dedup_cache_size: int = 1000
     include_title_in_content: bool = False
     output_markdown: bool = False
     page_type: Optional[str] = None
-    # engine-side additions (not in the reference Options):
+    # engine-side addition (not in the reference Options):
     # emit content_html alongside text
     include_content_html: bool = True
-    # emit span offsets into the decoded source html (north rule)
-    emit_spans: bool = True
-
-    def with_url(self, url: Optional[str]) -> "Options":
-        return replace(self, url=url)
 
 
 DEFAULT_OPTIONS = Options()

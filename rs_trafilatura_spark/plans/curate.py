@@ -26,7 +26,6 @@ def curate_pages(
     min_quality: float = 0.5,
     min_chars: int = 200,
     languages: Optional[tuple[str, ...]] = None,
-    near_dup_jaccard_x1000: int = 800,
 ) -> DataFrame:
     """Return the curated corpus with a `drop_reason` column (null = kept);
     keeping rejects with reasons makes the pipeline auditable — at scale you

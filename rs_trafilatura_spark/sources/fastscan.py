@@ -15,6 +15,13 @@ from disk into the worker that parses them.  Output is a normal DataFrame
 with OUTPUT_SCHEMA; everything downstream (stage metrics, curation,
 checkpointing) composes unchanged.
 
+The file-bin scan is shared with the WARC source (sources/warc.py):
+``scan_bins`` is the one bin plan (list files -> ``pack_bins`` -> one
+``paths`` row per bin, one bin per partition -> a per-task scan over the
+bin's files), and ``extract_scanned`` runs the kernel closure on a scan's
+output.  ``extract_from_parquet``, ``read_warc`` and ``extract_from_warc``
+are each one ``scan_bins`` call.
+
 Scale notes (100 TB):
 - Tasks are file-granular, bin-packed by file size on the driver —
   production extraction corpora have uniform ~1 GB files, so bins are
@@ -86,35 +93,55 @@ def pack_bins(files: list[tuple[str, int]], n_bins: int) -> list[list[str]]:
     return bins
 
 
-def _make_scan_extract(opts: Options, columns: tuple[str, ...]):
-    """mapInArrow closure: each input row carries a list of parquet file
-    URIs; read them with pyarrow and feed the shared kernel closure."""
-    kernel = make_extract_arrow_batches(opts)
+def scan_bins(spark: SparkSession, files: list[tuple[str, int]], scan,
+              schema: T.StructType,
+              target_partitions: Optional[int] = None) -> DataFrame:
+    """The file-bin scan plan shared by the parquet and WARC sources:
+    ``files`` ([(uri, bytes)]) are LPT-packed by ``pack_bins`` into at
+    most ``target_partitions`` bins (default: the default parallelism),
+    one ``paths`` row per bin and one bin per partition; each task calls
+    ``scan`` on an iterator over its bin's files and yields its Arrow
+    batches of ``schema``."""
+    if target_partitions is None:
+        target_partitions = spark.sparkContext.defaultParallelism
+    bins = pack_bins(files, target_partitions)
+    # numSlices == len(bins): parallelize slices evenly, giving each task
+    # exactly its planned byte load with no shuffle
+    rdd = spark.sparkContext.parallelize([(b,) for b in bins], len(bins))
+    plan = spark.createDataFrame(rdd, T.StructType(
+        [T.StructField("paths", T.ArrayType(T.StringType()), False)]))
 
-    def scan_extract(batches):
-        import pyarrow.parquet as pq
+    def run_scan(batches):
+        yield from scan(uri for batch in batches
+                        for row in batch.column(0).to_pylist() for uri in row)
 
-        def file_batches(uris):
-            for uri in uris:
-                local = _local_path(uri)
-                if local is not None:
-                    pf = pq.ParquetFile(local)
-                else:  # object store: resolve via pyarrow.fs
-                    from pyarrow import fs as pafs
+    return plan.mapInArrow(run_scan, schema=schema)
 
-                    filesystem, fspath = pafs.FileSystem.from_uri(uri)
-                    pf = pq.ParquetFile(filesystem.open_input_file(fspath))
-                names = [c for c in columns if c in pf.schema_arrow.names]
-                yield from pf.iter_batches(
-                    batch_size=ROWS_PER_BATCH, columns=names
-                )
 
-        for batch in batches:
-            uris = [u for row in batch.column(0).to_pylist() for u in row]
-            if uris:
-                yield from kernel(file_batches(uris))
+def extract_scanned(scan, options: Options):
+    """``scan`` (file uris -> page batches) followed by the one kernel
+    closure (plans/job.py): a ``scan_bins`` scan that emits OUTPUT_SCHEMA
+    rows."""
+    kernel = make_extract_arrow_batches(options)
+    return lambda uris: kernel(scan(uris))
 
-    return scan_extract
+
+def _scan_parquet(uris):
+    """Page batches (the INPUT_COLUMNS present) of the parquet files
+    ``uris``, read with pyarrow."""
+    import pyarrow.parquet as pq
+
+    for uri in uris:
+        local = _local_path(uri)
+        if local is not None:
+            pf = pq.ParquetFile(local)
+        else:  # object store: resolve via pyarrow.fs
+            from pyarrow import fs as pafs
+
+            filesystem, fspath = pafs.FileSystem.from_uri(uri)
+            pf = pq.ParquetFile(filesystem.open_input_file(fspath))
+        names = [c for c in INPUT_COLUMNS if c in pf.schema_arrow.names]
+        yield from pf.iter_batches(batch_size=ROWS_PER_BATCH, columns=names)
 
 
 def extract_from_parquet(
@@ -127,19 +154,6 @@ def extract_from_parquet(
     workers (see module docstring).  Drop-in alternative to
     ``run_extraction(spark, spark.read.parquet(path), ...)`` with
     identical output rows."""
-    if target_partitions is None:
-        target_partitions = spark.sparkContext.defaultParallelism
-    files = list_parquet_files(spark, path)
-    if not files:
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
-    bins = pack_bins(files, target_partitions)
-    schema = T.StructType(
-        [T.StructField("paths", T.ArrayType(T.StringType()), False)]
-    )
-    # one bin per partition: parallelize with numSlices == len(bins) slices
-    # evenly, giving each task exactly its planned byte load — no shuffle
-    rdd = spark.sparkContext.parallelize([(b,) for b in bins], len(bins))
-    plan = spark.createDataFrame(rdd, schema)
-    return plan.mapInArrow(
-        _make_scan_extract(options, INPUT_COLUMNS), schema=OUTPUT_SCHEMA
-    )
+    return scan_bins(spark, list_parquet_files(spark, path),
+                     extract_scanned(_scan_parquet, options), OUTPUT_SCHEMA,
+                     target_partitions)

@@ -20,10 +20,11 @@ pipeline at a crawl directly:
 
 Scale notes (100 TB):
 - File-granular tasks, LPT-packed by compressed size on the driver
-  (O(files) metadata), exactly like sources/fastscan.py.  CC WARC files
+  (O(files) metadata) by the same bin plan as the parquet scan
+  (sources/fastscan.py ``scan_bins``).  CC WARC files
   are a uniform ~1 GB, so bins are byte-balanced.
 - Records stream through a bounded parser: one record's bytes in memory
-  at a time, batches emitted every ``rows_per_batch`` records — a task
+  at a time, batches emitted every ``ROWS_PER_BATCH`` records — a task
   never holds a whole 1 GB archive decompressed.
 - Per-record gzip members mean the stream is decodable as ONE gzip
   stream of concatenated members (zlib handles member boundaries), so no
@@ -51,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..options import DEFAULT_OPTIONS, Options
 from ..plans.schema import OUTPUT_SCHEMA
-from .fastscan import ROWS_PER_BATCH, pack_bins
+from .fastscan import ROWS_PER_BATCH, extract_scanned, scan_bins
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -64,14 +65,6 @@ WRITE_RESULT_SCHEMA = T.StructType([
     T.StructField("file", T.StringType(), False),
     T.StructField("n_records", T.LongType(), False),
     T.StructField("bytes", T.LongType(), False),
-])
-
-CDX_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("warc_ts", T.TimestampType(), True),
-    T.StructField("file", T.StringType(), False),
-    T.StructField("offset", T.LongType(), False),
-    T.StructField("length", T.LongType(), False),
 ])
 
 _CRLF = b"\r\n"
@@ -220,60 +213,36 @@ def _archive_records(sources: Iterable) -> Iterator[dict]:
             yield from parse_warc_stream(stream)
 
 
-def _records_to_batches(records: Iterable[dict], arrow_schema,
-                        rows_per_batch: int):
-    """Group record dicts into Arrow batches of ``rows_per_batch``."""
+def _records_to_batches(records: Iterable[dict]):
+    """Group record dicts into PAGES_SCHEMA Arrow batches of
+    ROWS_PER_BATCH rows."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    arrow_schema = to_arrow_schema(PAGES_SCHEMA)
     buf: list[dict] = []
     for rec in records:
         buf.append(rec)
-        if len(buf) >= rows_per_batch:
+        if len(buf) >= ROWS_PER_BATCH:
             yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
             buf = []
     if buf:
         yield pa.RecordBatch.from_pylist(buf, schema=arrow_schema)
 
 
-def _make_warc_scan(rows_per_batch: int):
-    def scan(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(PAGES_SCHEMA)
-        for batch in batches:
-            paths = [p for row in batch.column(0).to_pylist() for p in row]
-            yield from _records_to_batches(
-                _archive_records(paths), arrow_schema, rows_per_batch)
-
-    return scan
-
-
-def _bin_plan(spark: SparkSession, path: str, target_partitions: Optional[int]):
-    if target_partitions is None:
-        target_partitions = spark.sparkContext.defaultParallelism
-    files = list_warc_files(path)
-    if not files:
-        return None
-    bins = pack_bins(files, target_partitions)
-    schema = T.StructType(
-        [T.StructField("paths", T.ArrayType(T.StringType()), False)]
-    )
-    rdd = spark.sparkContext.parallelize([(b,) for b in bins], len(bins))
-    return spark.createDataFrame(rdd, schema)
+def _scan_warc(paths: Iterable[str]):
+    """Page batches of the WARC files ``paths``."""
+    return _records_to_batches(_archive_records(paths))
 
 
 def read_warc(spark: SparkSession, path: str,
-              target_partitions: Optional[int] = None,
-              rows_per_batch: int = ROWS_PER_BATCH) -> DataFrame:
+              target_partitions: Optional[int] = None) -> DataFrame:
     """WARC files -> pages DataFrame (url, warc_ts, html, lang): the
     crawl-archive twin of ``spark.read.parquet(pages_table)``.  Files are
     LPT-packed into one bin per task; records stream through the parser
     with bounded memory."""
-    plan = _bin_plan(spark, path, target_partitions)
-    if plan is None:
-        return spark.createDataFrame([], PAGES_SCHEMA)
-    return plan.mapInArrow(_make_warc_scan(rows_per_batch),
-                           schema=PAGES_SCHEMA)
+    return scan_bins(spark, list_warc_files(path), _scan_warc, PAGES_SCHEMA,
+                     target_partitions)
 
 
 def extract_from_warc(
@@ -281,23 +250,13 @@ def extract_from_warc(
     path: str,
     options: Options = DEFAULT_OPTIONS,
     target_partitions: Optional[int] = None,
-    rows_per_batch: int = ROWS_PER_BATCH,
 ) -> DataFrame:
     """Single-hop WARC extraction: one mapInArrow stage parses the
     archive AND runs the kernel, so HTML bytes move disk -> extracting
     worker exactly once (the fastscan pattern, sources/fastscan.py)."""
-    from ..plans.job import make_extract_arrow_batches
-
-    plan = _bin_plan(spark, path, target_partitions)
-    if plan is None:
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
-    kernel = make_extract_arrow_batches(options)
-    parse = _make_warc_scan(rows_per_batch)
-
-    def scan_extract(batches):
-        yield from kernel(parse(batches))
-
-    return plan.mapInArrow(scan_extract, schema=OUTPUT_SCHEMA)
+    return scan_bins(spark, list_warc_files(path),
+                     extract_scanned(_scan_warc, options), OUTPUT_SCHEMA,
+                     target_partitions)
 
 
 # --- Spark sink --------------------------------------------------------------------
@@ -427,8 +386,7 @@ def fetch_warc_record(archive_dir: str, file: str, offset: int,
     return None
 
 
-def fetch_records(cdx: DataFrame, archive_dir: str,
-                  rows_per_batch: int = ROWS_PER_BATCH) -> DataFrame:
+def fetch_records(cdx: DataFrame, archive_dir: str) -> DataFrame:
     """Distributed random access: resolve a CDX selection back into pages
     (url, warc_ts, html, lang) — one seek + one-member gunzip per row,
     never a sequential archive scan.  This is the Common-Crawl re-fetch
@@ -441,8 +399,6 @@ def fetch_records(cdx: DataFrame, archive_dir: str,
     has_url = "url" in cdx.columns
 
     def fetch(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         def records():
             for batch in batches:
                 for row in batch.to_pylist():
@@ -456,8 +412,7 @@ def fetch_records(cdx: DataFrame, archive_dir: str,
                     if rec is not None:
                         yield rec
 
-        yield from _records_to_batches(
-            records(), to_arrow_schema(PAGES_SCHEMA), rows_per_batch)
+        yield from _records_to_batches(records())
 
     cols = (["url"] if has_url else []) + ["file", "offset", "length"]
     return cdx.select(*cols).mapInArrow(fetch, schema=PAGES_SCHEMA)

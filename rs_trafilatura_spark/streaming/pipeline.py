@@ -120,9 +120,7 @@ def read_warc_stream(spark: SparkSession, input_path: str,
     records are skipped, never raised, so one truncated upload cannot
     wedge the stream."""
     from ..sources.warc import PAGES_SCHEMA as WARC_PAGES_SCHEMA
-    from ..sources.warc import (
-        ROWS_PER_BATCH, _archive_records, _records_to_batches,
-    )
+    from ..sources.warc import _archive_records, _records_to_batches
 
     raw = (
         spark.readStream.format("binaryFile")
@@ -136,15 +134,11 @@ def read_warc_stream(spark: SparkSession, input_path: str,
     def parse(batches):
         import io
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         archives = (
             io.BufferedReader(io.BytesIO(content.as_py()))
             for batch in batches for content in batch.column(0)
         )
-        yield from _records_to_batches(
-            _archive_records(archives), to_arrow_schema(WARC_PAGES_SCHEMA),
-            ROWS_PER_BATCH)
+        yield from _records_to_batches(_archive_records(archives))
 
     return raw.select("content").mapInArrow(parse, schema=WARC_PAGES_SCHEMA)
 

@@ -372,3 +372,20 @@ def test_top_level_api_reexports():
     assert r["content_markdown"]
     assert rt.extract_bytes(b"<p>x</p>")["stage"]
     assert rt.extract_bytes_with_options(b"<p>x</p>", rt.Options())["stage"]
+
+
+def test_every_option_is_read():
+    """Each Options field is read somewhere in the package outside
+    options.py: no setting that changes nothing."""
+    import dataclasses
+    import pathlib
+    import re
+
+    import rs_trafilatura_spark
+
+    pkg = pathlib.Path(rs_trafilatura_spark.__file__).parent
+    src = "\n".join(p.read_text() for p in pkg.rglob("*.py")
+                    if p != pkg / "options.py")
+    unread = [f.name for f in dataclasses.fields(Options)
+              if not re.search(rf"\.{f.name}\b", src)]
+    assert unread == []

@@ -100,6 +100,37 @@ def test_multi_candidate_merge_service():
     assert "Service section 2" in r["content_text"]
 
 
+def test_merge_ranks_candidates_on_structure_and_links():
+    """The merge's candidate score counts <p>, heading and substantive
+    paragraphs and scales down link-heavy nodes, so a short structured
+    section outranks a blob more than twice its length, and a longer
+    link farm falls below a fifth of the top score."""
+    from rs_trafilatura_spark.dom import Document
+    from rs_trafilatura_spark.kernel.postprocess import (
+        try_multi_candidate_merge,
+    )
+
+    blob = " ".join(f"Plain blob sentence {i} runs on without any "
+                    "paragraph markup at all." for i in range(20))
+    paras = "".join(
+        f"<p>Structured paragraph {j} explains the offering in one long "
+        "sentence of prose that keeps going past a hundred characters.</p>"
+        for j in range(4))
+    links = "".join(f"<a href='/l{i}'>link farm entry number {i} here</a> "
+                    for i in range(30))
+    html = wrap(f"<div>{blob}</div>"
+                f"<div><h2>Overview</h2>{paras}<h3>Details</h3></div>"
+                f"<div>{links} LINK_FARM_TAIL</div>")
+    text, spans = try_multi_candidate_merge(Document(html), Options())
+    blocks = text.split("\n\n")
+    assert len(blocks) == 2
+    assert blocks[0].startswith("Overview") and len(blocks[0]) < 500
+    assert blocks[1].startswith("Plain blob") and len(blocks[1]) > 1000
+    assert "LINK_FARM_TAIL" not in text
+    assert [kind for _, _, kind in spans] == ["div", "div"]
+    assert spans[0][0] > spans[1][0]  # the later node in the source ranks first
+
+
 def test_collection_description_category():
     desc = ("This category collects long-form guides about growing vegetables "
             "in small spaces, with seasonal advice and detailed walkthroughs "
