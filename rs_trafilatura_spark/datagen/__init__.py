@@ -5,7 +5,6 @@ from .corpus import (
     generate_pages_df,
     generate_row,
     generate_rows,
-    write_parquet_corpus,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "generate_pages_df",
     "generate_row",
     "generate_rows",
-    "write_parquet_corpus",
 ]

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import random
 from datetime import datetime, timedelta
-from typing import Optional
 
 _WORDS = (
     "amber basin cedar delta ember fjord grove harbor inlet juniper kestrel "
@@ -553,22 +552,24 @@ def generate_rows(n: int, seed: int = 42) -> list[dict]:
     return [generate_row(i, seed) for i in range(n)]
 
 
-_INPUT_COLUMNS = ("url", "warc_ts", "html", "text", "lang")
+def _corpus_schema():
+    """The generated table, the input_hint shape (BASELINE.json): the
+    pages contract (plans/schema.py ``PAGES_SCHEMA``) with the page's
+    ground-truth ``text`` before ``lang``, every field non-null."""
+    from pyspark.sql import types as T
+
+    from ..plans.schema import PAGES_SCHEMA
+
+    fields = [T.StructField(f.name, f.dataType, False) for f in PAGES_SCHEMA]
+    fields.insert(3, T.StructField("text", T.StringType(), False))
+    return T.StructType(fields)
 
 
 def generate_pages_df(spark, n_rows: int, seed: int = 42):
     """Spark DataFrame in exactly the input_hint shape (BASELINE.json)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-    ])
+    schema = _corpus_schema()
     rows = [
-        tuple(r[c] for c in _INPUT_COLUMNS) for r in generate_rows(n_rows, seed)
+        tuple(r[c] for c in schema.names) for r in generate_rows(n_rows, seed)
     ]
     return spark.createDataFrame(rows, schema)
 
@@ -599,22 +600,13 @@ def materialize_corpus(spark, path: str, n_rows: int, seed: int = 42,
     This is how the bench corpus is built — driver-side generation would
     serialize on one core."""
     import pandas as pd
-    from pyspark.sql import functions as F, types as T
 
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-    ])
+    schema = _corpus_schema()
 
     def gen(batches):
         for pdf in batches:
             rows = [generate_row(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {c: [r[c] for r in rows] for c in _INPUT_COLUMNS}
-            )
+            yield pd.DataFrame({c: [r[c] for r in rows] for c in schema.names})
 
     ids = spark.range(0, n_rows, 1, partitions)
     ids.mapInPandas(gen, schema=schema).write.mode("overwrite").parquet(path)
@@ -678,45 +670,14 @@ def materialize_large_corpus(spark, path: str, n_rows: int, seed: int = 42,
     """Parallel-generate the ~300 KB-page corpus (same mechanism as
     materialize_corpus; generation is a pure function of (seed, id))."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-    ])
+    schema = _corpus_schema()
 
     def gen(batches):
         for pdf in batches:
             rows = [generate_large_row(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {c: [r[c] for r in rows] for c in _INPUT_COLUMNS}
-            )
+            yield pd.DataFrame({c: [r[c] for r in rows] for c in schema.names})
 
     ids = spark.range(0, n_rows, 1, partitions)
     ids.mapInPandas(gen, schema=schema).write.mode("overwrite").parquet(path)
 
-
-def write_parquet_corpus(path: str, n_rows: int, seed: int = 42,
-                         batch: int = 2000) -> None:
-    """Write the corpus to parquet without Spark (for bench caching)."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema([
-        ("url", pa.string()),
-        ("warc_ts", pa.timestamp("us")),
-        ("html", pa.binary()),
-        ("text", pa.string()),
-        ("lang", pa.string()),
-    ])
-    writer = pq.ParquetWriter(path, schema)
-    for start in range(0, n_rows, batch):
-        rows = [generate_row(i, seed) for i in range(start, min(start + batch, n_rows))]
-        pdf = pd.DataFrame({c: [r[c] for r in rows] for c in _INPUT_COLUMNS})
-        writer.write_table(pa.Table.from_pandas(pdf, schema=schema,
-                                                preserve_index=False))
-    writer.close()

@@ -351,9 +351,6 @@ class Element:
         del parent.children[idx]
         self.parent = None
 
-    def remove_keep_tail(self) -> None:
-        self.drop_tree()
-
     def unwrap(self) -> None:
         """Strip this tag but keep children in place (lxml strip_tags for one
         element; reference TAGS_TO_STRIP semantics, extractor/tags.rs:110-113)."""

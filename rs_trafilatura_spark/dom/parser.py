@@ -9,16 +9,16 @@ tree (reference robustness tests: extract.rs:3807-3847).
 
 from __future__ import annotations
 
-import os
 from html import unescape
 from html.parser import HTMLParser
 from typing import Optional
 
 from .element import Element, VOID_TAGS, bump_generation
 
-# A/B escape hatch for the fast scanner below; semantics are identical by
-# construction (same parse_* methods), so this exists only for debugging.
-_USE_FAST_SCAN = os.environ.get("RS_TRAF_SLOW_PARSE", "") != "1"
+# The fast scanner below and the stdlib feed() path have identical
+# semantics by construction (same parse_* methods); the stdlib path is the
+# fuzz test's reference (tests/test_dom.py), which flips this flag.
+_USE_FAST_SCAN = True
 
 # the stdlib tokenizer's own compiled regexes (CPython html/parser.py) —
 # reusing them keeps the fused fast paths token-identical to HTMLParser
@@ -77,7 +77,7 @@ class _TreeBuilder(HTMLParser):
             finally:
                 self.rawdata = ""
             return
-        # stdlib path (RS_TRAF_SLOW_PARSE=1): C-speed newline scan
+        # stdlib path (the fuzz test's reference): C-speed newline scan
         # (str.find), offsets reconstructed from getpos() line/col
         starts = [0]
         idx = data.find("\n")
@@ -99,8 +99,8 @@ class _TreeBuilder(HTMLParser):
         have the full page), and the newline pre-scan — the source
         offset of a construct is just its index (self._off).  Mirrors
         CPython 3.11 goahead() with convert_charrefs=True and end=True;
-        divergence here is a bug, so the slow path stays one env var
-        away (RS_TRAF_SLOW_PARSE=1)."""
+        divergence here is a bug: the stdlib path, reached through
+        ``_USE_FAST_SCAN``, is the fuzz test's reference."""
         n = len(rawdata)
         i = 0
         handle_data = self.handle_data

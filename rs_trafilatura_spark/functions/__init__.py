@@ -5,38 +5,22 @@ from .encoding import detect_encoding, transcode_to_utf8
 from .textnorm import (
     clean_text,
     count_sentences,
-    count_words,
-    escape_html,
     normalize_text_output,
     normalize_title,
-    text_chars_test,
     titles_match,
 )
-from .urlutils import (
-    create_absolute_url,
-    extract_domain,
-    extract_filename,
-    extract_hostname,
-    filenames_match,
-    validate_url,
-)
+from .urlutils import extract_filename, extract_hostname, filenames_match
 
 __all__ = [
     "clean_text",
     "count_sentences",
-    "count_words",
-    "create_absolute_url",
     "detect_encoding",
-    "escape_html",
-    "extract_domain",
     "extract_filename",
     "extract_hostname",
     "filenames_match",
     "normalize_text_output",
     "normalize_title",
     "parse_date",
-    "text_chars_test",
     "titles_match",
     "transcode_to_utf8",
-    "validate_url",
 ]

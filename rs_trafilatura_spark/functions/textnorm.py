@@ -14,18 +14,8 @@ import re
 
 LINE_WHITESPACE = re.compile(r"(?m)^[ \t]+|[ \t]+$")
 MULTIPLE_NEWLINES = re.compile(r"\n{3,}")
-# all-whitespace -> single space, but skip lone plain spaces (they map to
-# themselves): runs containing a non-space whitespace char, or 2+ spaces
-WHITESPACE_NORMALIZE = re.compile(r"\s*[^\S ]\s*| {2,}")
 
 _PUNCT = frozenset(".,;:!?")
-
-
-# only runs that actually CHANGE under "collapse to one space": a run
-# containing a tab, or 2+ spaces.  A single plain space maps to itself, and
-# excluding it makes prose (one match per word boundary!) nearly match-free
-# — the sub becomes a scan instead of a 10^4-segment rebuild.
-_WS_RUN = re.compile(r"[ \t]*\t[ \t]*| {2,}")
 
 
 def normalize_text_output(text: str) -> str:
@@ -33,15 +23,15 @@ def normalize_text_output(text: str) -> str:
     pending-space machine (extract.rs:3081-3118) — property-tested against
     ``normalize_text_output_reference`` below.
 
-    Equivalence notes: after the _WS_RUN pass every [ \\t] run is a single
-    space, so " <punct>"/" \\n"/"\\n " are the only pending-space shapes
-    left and each is a disjoint 2-char pattern — plain str.replace (one C
-    scan each) does what the old " (?=[\\n.,;:!?])" sub did without a
-    regex match attempt at every space in prose.  Line-edge whitespace is
+    Equivalence notes: after the whitespace-run pass every [ \\t] run is
+    a single space, so " <punct>"/" \\n"/"\\n " are the only pending-space
+    shapes left and each is a disjoint 2-char pattern — plain str.replace
+    (one C scan each) does what the old " (?=[\\n.,;:!?])" sub did without
+    a regex match attempt at every space in prose.  Line-edge whitespace is
     then impossible except at the string edges (strip handles those), so
     the old LINE_WHITESPACE pass is provably a no-op and is dropped."""
     s = text.replace("\r", "")
-    # _WS_RUN ("[ \t]*\t[ \t]*| {2,}" -> " ") re-expressed as two C-speed
+    # the whitespace-run rule ("[ \t]*\t[ \t]*| {2,}" -> " ") as two C-speed
     # replace passes: mapping every tab to a space turns any [ \t]-run
     # that contained a tab into an all-space run of the same length >= 1,
     # and the fixpoint of replace("  ", " ") maps every space run to one
@@ -101,20 +91,8 @@ def normalize_text_output_reference(text: str) -> str:
 def clean_text(s: str) -> str:
     """Collapse ALL whitespace to single spaces (single-line metadata).
     split/join is the same collapse (both use Unicode whitespace) at C
-    speed — the old WHITESPACE_NORMALIZE + MULTIPLE_NEWLINES sub pair
-    reduced to exactly this once every run becomes one space."""
+    speed."""
     return " ".join(s.split())
-
-
-def escape_html(s: str) -> str:
-    """5-entity escape (reference extract.rs:3066-3079)."""
-    return (
-        s.replace("&", "&amp;")
-        .replace("<", "&lt;")
-        .replace(">", "&gt;")
-        .replace('"', "&quot;")
-        .replace("'", "&#39;")
-    )
 
 
 def normalize_title(s: str) -> str:
@@ -151,12 +129,3 @@ def count_sentences(text: str) -> int:
     """Runs of sentence terminators count once (extract.rs:2270-2283);
     one C-speed findall instead of a per-character Python loop."""
     return len(_SENT_RUNS.findall(text))
-
-
-def count_words(text: str) -> int:
-    return len(text.split())
-
-
-def text_chars_test(s: str) -> bool:
-    """True if the string contains at least one alphanumeric character."""
-    return any(c.isalnum() for c in s)

@@ -1,53 +1,15 @@
-"""URL helpers (reference url_utils.rs:134-277, html_processing.rs:730-769)."""
+"""URL helpers (reference url_utils.rs:16-277)."""
 
 from __future__ import annotations
 
 from typing import Optional
-from urllib.parse import urljoin, urlparse
+from urllib.parse import urlparse
 
 
 def extract_hostname(url: str) -> Optional[str]:
     try:
         host = urlparse(url).hostname
         return host or None
-    except ValueError:
-        return None
-
-
-def extract_domain(url: str) -> Optional[str]:
-    """Registrable-ish domain: last two labels (good enough for salting;
-    a public-suffix list is overkill for a shuffle key)."""
-    host = extract_hostname(url)
-    if not host:
-        return None
-    parts = host.split(".")
-    return ".".join(parts[-2:]) if len(parts) >= 2 else host
-
-
-def validate_url(url: str) -> bool:
-    try:
-        p = urlparse(url)
-        return p.scheme in ("http", "https") and bool(p.netloc)
-    except ValueError:
-        return False
-
-
-def create_absolute_url(href: str, base_url: str) -> Optional[str]:
-    """Resolve relative/protocol-relative hrefs; reject fragments and
-    data:/javascript: (reference html_processing.rs:730-769)."""
-    href = href.strip()
-    if not href or href.startswith("#"):
-        return None
-    low = href.lower()
-    if low.startswith(("data:", "javascript:", "mailto:", "tel:")):
-        return None
-    if low.startswith(("http://", "https://")):
-        return href
-    if href.startswith("//"):
-        scheme = urlparse(base_url).scheme or "https"
-        return f"{scheme}:{href}"
-    try:
-        return urljoin(base_url, href)
     except ValueError:
         return None
 

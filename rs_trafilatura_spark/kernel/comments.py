@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from ..dom import Document, Element, select, select_first
+from ..dom import Document, Element
 from ..functions.textnorm import clean_text
 from ..options import Options
 from .patterns import COMMENT_CLASS, COMMENT_ID

@@ -13,8 +13,9 @@ from typing import Callable, Optional
 from ..dom import Element, select
 from ..functions.textnorm import clean_text, count_sentences
 from ..options import Options
-from .boilerplate import is_boilerplate
+from .boilerplate import _SPLIT_DASH, _sidebar_parts_match, is_boilerplate
 from .patterns import ARTICLE_SELECTOR, MAIN_SELECTOR
+from .tags import HEADING_TAGS
 
 MIN_CONTENT_TEXT_LEN = 1000
 
@@ -158,7 +159,6 @@ _BOILERPLATE_CLASS_PATTERNS = (
     "overlay", "listing", "latest", "recent", "related", "hero",
 )
 _EXACT_WORD_PATTERNS = ("menu", "nav", "modal", "footer", "header", "banner")
-_SIDEBAR_POSITION_WORDS = frozenset({"left", "right", "primary", "secondary", "main", "widget"})
 _WORD_SPLIT = re.compile(r"[^a-z0-9]+")
 
 
@@ -186,13 +186,10 @@ def _has_exact_word_match(s: str, pattern: str) -> bool:
 
 def _has_sidebar_match(s: str) -> bool:
     for token in s.lower().split():
-        parts = re.split(r"[-_]", token)
+        parts = _SPLIT_DASH.split(token)
         for i, part in enumerate(parts):
-            if part == "sidebar":
-                if len(parts) == 1 or i == 0:
-                    return True
-                if parts[i - 1] in _SIDEBAR_POSITION_WORDS:
-                    return True
+            if part == "sidebar" and _sidebar_parts_match(parts, i):
+                return True
     return False
 
 
@@ -347,9 +344,6 @@ def class_score(el: Element) -> float:
     return score
 
 
-_H_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
-
-
 def _subtree_stats(body: Element) -> dict:
     """One post-order pass computing, for EVERY element, the quantities
     the content score reads: (text_content, p_count, substantive_p,
@@ -385,7 +379,7 @@ def _subtree_stats(body: Element) -> dict:
                 p += 1
                 if len(clean_text(ctext)) >= 100:
                     sp += 1
-            elif ctag in _H_TAGS:
+            elif ctag in HEADING_TAGS:
                 h += 1
             elif ctag == "a":
                 link += len(clean_text(ctext))

@@ -16,7 +16,7 @@ from __future__ import annotations
 import sys
 from typing import Optional
 
-from ..dom import Document, Element, select
+from ..dom import Document, Element
 from ..functions.textnorm import clean_text
 from ..functions.urlutils import extract_hostname
 from ..options import DEFAULT_OPTIONS, Options

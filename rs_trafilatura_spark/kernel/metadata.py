@@ -9,7 +9,7 @@ import json
 import re
 from typing import Any, Optional
 
-from ..dom import Document, Element, select, select_first
+from ..dom import Document, select
 from ..functions.dates import parse_date
 from ..functions.textnorm import clean_text
 from ..functions.urlutils import extract_hostname
@@ -220,8 +220,7 @@ def find_jsonld_product_description(doc: Document) -> Optional[str]:
     return None
 
 
-def _jsonld_metadata(doc: Document, meta: dict,
-                     idx: dict | None = None) -> None:
+def _jsonld_metadata(doc: Document, meta: dict, idx: dict) -> None:
     """Article schemas win by importance: article base 100, others 50
     (json_ld.rs:137-140 simplified: first article-typed object wins)."""
     article_obj = None
@@ -283,9 +282,8 @@ def _jsonld_metadata(doc: Document, meta: dict,
 # --- meta tags ------------------------------------------------------------------------
 
 
-def _meta_tags(doc: Document, meta: dict, idx: dict | None = None) -> None:
-    metas = idx.get("meta", ()) if idx is not None else select(doc.root, "meta")
-    for m in metas:
+def _meta_tags(meta: dict, idx: dict) -> None:
+    for m in idx.get("meta", ()):
         # http-equiv="content-language" is the legacy language channel the
         # reference reads too (extract.rs:1753-1757)
         key = (m.get("property") or m.get("name") or m.get("itemprop")
@@ -331,13 +329,10 @@ def _meta_tags(doc: Document, meta: dict, idx: dict | None = None) -> None:
 # --- DOM fallbacks -----------------------------------------------------------------------
 
 
-def _title_from_dom(doc: Document, meta: dict,
-                    idx: dict | None = None) -> None:
+def _title_from_dom(meta: dict, idx: dict) -> None:
     def _first(tag):
-        if idx is not None:
-            lst = idx.get(tag)
-            return lst[0] if lst else None
-        return select_first(doc.root, tag)
+        lst = idx.get(tag)
+        return lst[0] if lst else None
 
     if not meta.get("title"):
         title_el = _first("title")
@@ -408,17 +403,13 @@ def _author_from_dom(doc: Document, meta: dict,
             return
 
 
-def _canonical_url(doc: Document, meta: dict,
-                   idx: dict | None = None) -> None:
+def _canonical_url(meta: dict, idx: dict) -> None:
     if meta.get("url"):
         return
-    if idx is not None:
-        link = next(
-            (l for l in idx.get("link", ()) if l.get("rel") == "canonical"),
-            None,
-        )
-    else:
-        link = select_first(doc.root, "link[rel='canonical']")
+    link = next(
+        (l for l in idx.get("link", ()) if l.get("rel") == "canonical"),
+        None,
+    )
     if link is not None and link.get("href"):
         meta["url"] = link.get("href")
 
@@ -436,8 +427,7 @@ def _language_from_dom(doc: Document, meta: dict) -> None:
 _CC_HREF_RE = re.compile(r"creativecommons\.org/licenses/([a-z-]+)/")
 
 
-def _categories_from_dom(doc: Document, meta: dict,
-                         idx: dict | None = None) -> None:
+def _categories_from_dom(meta: dict, idx: dict) -> None:
     """Category links (rel=category / breadcrumb-ish category anchors),
     capped at 5 (dom_extraction.rs:342-369).  Anchor-centric: every
     alternative of the old 4-way comma selector can only match an <a>,
@@ -448,9 +438,8 @@ def _categories_from_dom(doc: Document, meta: dict,
     tree; anchors are in document order, so result order is identical."""
     if meta.get("categories"):
         return
-    anchors = idx.get("a", ()) if idx is not None else select(doc.root, "a")
     cats: list[str] = []
-    for a in anchors:
+    for a in idx.get("a", ()):
         rel = a.attrib.get("rel")
         ok = rel == "category" or rel == "category tag"
         if not ok:
@@ -536,13 +525,13 @@ def extract_metadata(doc: Document, author_blacklist: tuple[str, ...] = ()) -> d
     meta: dict = {}
     idx = _tag_index(doc)
     _jsonld_metadata(doc, meta, idx)
-    _meta_tags(doc, meta, idx)
-    _title_from_dom(doc, meta, idx)
+    _meta_tags(meta, idx)
+    _title_from_dom(meta, idx)
     _date_from_dom(doc, meta, idx)
     _author_from_dom(doc, meta, idx)
-    _canonical_url(doc, meta, idx)
+    _canonical_url(meta, idx)
     _language_from_dom(doc, meta)
-    _categories_from_dom(doc, meta, idx)
+    _categories_from_dom(meta, idx)
     _license_from_dom(doc, meta, idx)
     _sitename_from_title(meta)
 

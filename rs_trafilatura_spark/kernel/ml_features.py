@@ -47,6 +47,7 @@ from .page_type import (
     SERVICE_PATH_RE,
     SERVICE_SUFFIX_RE,
 )
+from .tags import HEADING_TAGS
 
 N_FEATURES = 89
 _MAX_ENHANCED_BYTES = 500_000
@@ -347,7 +348,6 @@ _PRODCARD_CLS = ("product-card", "product-tile", "product-item")
 _CARD_CLS = ("product-card", "product-tile", "product-item",
              "product-grid-item", "grid-item", "collection-item")
 _PRICE_CLS = ("price", "cost", "amount")
-_HEADING_TAGS = ("h1", "h2", "h3", "h4", "h5", "h6")
 
 # class-attribute flag bits (bitmask memo below)
 _F_AUTHOR = 1 << 0
@@ -579,7 +579,7 @@ def extract_ml_features(
 
         if tag == "p":
             ps.append(el)
-        elif tag in _HEADING_TAGS:
+        elif tag in HEADING_TAGS:
             headings.append(el)
         elif tag == "a":
             links.append(el)

@@ -12,7 +12,7 @@ The 7 ExtractionProfiles re-express page_type/mod.rs:99-344.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 from urllib.parse import urlparse
 

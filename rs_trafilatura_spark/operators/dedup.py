@@ -17,7 +17,6 @@ to meet (SURVEY.md §2.12).
 from __future__ import annotations
 
 import hashlib
-import zlib
 from collections import Counter
 
 import numpy as np
@@ -241,11 +240,6 @@ def _shingle_hashes64(text: str) -> list[int]:
     return np.unique(h.astype(np.int64)).tolist()
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def shingle_hash_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(_shingle_hashes64)
-
-
 _SIG_SHINGLE_SCHEMA = T.StructType([
     T.StructField("sig", T.ArrayType(T.LongType())),
     T.StructField("sh", T.ArrayType(T.LongType())),
@@ -257,8 +251,8 @@ def sig_shingle_udf(texts: pd.Series) -> pd.DataFrame:
     """MinHash signature AND shingle-hash set in ONE pass over the text.
 
     lsh_near_dup_pairs needs both, and the signature is derived from the
-    shingle hashes anyway — running minhash_udf and shingle_hash_udf as
-    separate expressions tokenizes and hashes every document twice (and,
+    shingle hashes anyway — running a signature UDF and a shingle-hash UDF
+    as separate expressions tokenizes and hashes every document twice (and,
     fed into a self-join, up to four times across plan branches).  One
     struct-returning UDF halves the Python-side work before any caching
     even starts."""
@@ -332,7 +326,7 @@ def lsh_features(documents: DataFrame, materialize: bool = True,
 def jaccard_x1000_udf(a_sh: pd.Series, b_sh: pd.Series) -> pd.Series:
     """floor(1000 * |A∩B| / |A∪B|) over pre-hashed shingle sets
     (vectorized numpy intersection; inputs are the unique sorted arrays
-    shingle_hash_udf emits).  Exists because Catalyst's array_intersect
+    _shingle_hashes64 returns).  Exists because Catalyst's array_intersect
     measured ~4.5 ms per pair on ~600-element long arrays (interpreted,
     per-row hash set) — 134k verify pairs turned into a 600 CPU-second
     stage; numpy does the same intersection in ~30 µs."""
@@ -401,6 +395,18 @@ def _lsh_banded_candidates(sigs: DataFrame,
     )
 
 
+def _est_jaccard_x1000(a_sig, b_sig):
+    """MinHash Jaccard estimate x1000 of two signature columns:
+    floor(1000 * agreeing slots / N_HASHES)."""
+    agree = F.size(
+        F.filter(
+            F.zip_with(a_sig, b_sig, lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return F.floor(F.lit(1000) * agree / F.lit(N_HASHES))
+
+
 def lsh_candidate_pairs(documents: DataFrame,
                         jaccard_threshold_x1000: int = 500) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, verified by signature agreement
@@ -419,17 +425,11 @@ def lsh_candidate_pairs(documents: DataFrame,
                          F.col("sig").alias("a_sig"))
     b_sig = feats.select(F.col("doc_id").alias("b_id"),
                          F.col("sig").alias("b_sig"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("a_sig", "b_sig", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
     return (
         cands.join(a_sig, "a_id").join(b_sig, "b_id")
         .select(
             "a_id", "b_id",
-            F.floor(F.lit(1000) * agree / F.lit(N_HASHES))
+            _est_jaccard_x1000("a_sig", "b_sig")
             .cast("long")
             .alias("est_jaccard_x1000"),
         )
@@ -529,15 +529,8 @@ def lsh_near_dup_pairs(documents: DataFrame,
     prefiltered = cands.join(a_f, "a_id").join(b_f, "b_id")
     if estimate_prefilter:
         est_floor = max(0, threshold_x1000 - 200)
-        agree = F.size(
-            F.filter(
-                F.zip_with("a_sig", "b_sig",
-                           lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        )
         prefiltered = prefiltered.filter(
-            F.floor(F.lit(1000) * agree / F.lit(N_HASHES)) >= est_floor
+            _est_jaccard_x1000("a_sig", "b_sig") >= est_floor
         )
     prefiltered = (
         prefiltered

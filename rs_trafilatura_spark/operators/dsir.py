@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .lm import TOKEN_SEP, _tokens
+from .lm import _tokens
 
 DEFAULT_BUCKETS = 10_000
 

@@ -35,13 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .lm import _tokens
+
 DEFAULT_MIN_SPAN_WORDS = 50
-
-
-def _words(text_col):
-    return F.filter(
-        F.split(text_col, "[ \\t\\n\\r]+"), lambda t: F.length(t) > 0
-    )
 
 
 def _gram_hash(gram_col):
@@ -54,7 +50,7 @@ def positional_gram_hashes(documents: DataFrame,
                            n: int = DEFAULT_MIN_SPAN_WORDS) -> DataFrame:
     """(doc_id, i, h): hash of words[i .. i+n-1] (0-based start) for
     every position.  Docs shorter than n words emit no rows."""
-    words = _words(F.col("text"))
+    words = _tokens(F.col("text"))
 
     def per_words(w):
         return F.transform(
@@ -86,7 +82,7 @@ def exact_substring_dedup(documents: DataFrame,
     dup = pos.groupBy("h").agg(F.count("*").alias("c")) \
         .filter(F.col("c") >= 2).select("h")
     cand = pos.join(dup, "h").select("doc_id", "i")
-    words_col = _words(F.col("text"))
+    words_col = _tokens(F.col("text"))
     cand_grams = cand.join(
         documents.select("doc_id", words_col.alias("_w")), "doc_id"
     ).select(
@@ -99,7 +95,7 @@ def exact_substring_dedup(documents: DataFrame,
         .groupBy("doc_id").agg(
             F.array_sort(F.collect_list("i")).alias("starts")
         )
-    words = _words(F.col("text"))
+    words = _tokens(F.col("text"))
     joined = documents.join(starts, "doc_id", "left").select(
         "doc_id",
         words.alias("_w"),

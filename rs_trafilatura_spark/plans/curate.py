@@ -260,7 +260,9 @@ def mark_near_duplicates(curated: DataFrame,
     ones — a long-lived session never accumulates caches.  At warehouse
     scale the same role is played by writing the extraction output table
     (and a narrow dedup staging table) before the dedup pass."""
-    from ..operators.dedup import lsh_candidate_pairs, lsh_near_dup_pairs
+    from ..operators.dedup import (
+        lsh_candidate_pairs, lsh_near_dup_pairs, near_dup_clusters,
+    )
 
     def _id(url_col):
         return (F.xxhash64(url_col) if id_col is None
@@ -313,17 +315,14 @@ def mark_near_duplicates(curated: DataFrame,
         pairs = lsh_candidate_pairs(docs, jaccard_threshold_x1000)
         losers = pairs.select(F.col("b_id").alias("_loser")).distinct()
     elif method == "clusters":
-        # cluster-survivor semantics: exact-verified pairs -> alternating
-        # large-star/small-star connected components -> every non-minimal
-        # member of a component is a loser.  Same O(pairs) verify cost as
-        # "exact" plus the CC iterations over the (tiny) edge list.
-        from ..operators.dedup import connected_components
-
-        pairs = lsh_near_dup_pairs(docs, jaccard_threshold_x1000)
-        cc = connected_components(pairs)
+        # cluster-survivor semantics: every non-minimal member of a
+        # connected component of the exact-verified pairs is a loser.
+        # Same O(pairs) verify cost as "exact" plus the CC iterations
+        # over the (tiny) edge list.
         losers = (
-            cc.filter(F.col("node") != F.col("component"))
-            .select(F.col("node").alias("_loser"))
+            near_dup_clusters(docs, jaccard_threshold_x1000)
+            .filter(~F.col("keep"))
+            .select(F.col("doc_id").alias("_loser"))
             .distinct()
         )
     else:

@@ -42,27 +42,20 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..options import DEFAULT_OPTIONS, Options
-from .schema import OUTPUT_COLUMNS, OUTPUT_SCHEMA
+from .schema import OUTPUT_COLUMNS, OUTPUT_SCHEMA, PAGE_COLUMNS
 
 # pages larger than this go to the dedicated large-row partition set
 LARGE_HTML_BYTES = 1_000_000
 SALT_BUCKETS = 16
 
 
-# kernel result key -> output column (canonical_url renames `url`)
+# kernel result key -> output column: each column the kernel fills keeps
+# its name, except that the kernel's `url` fills canonical_url; the input's
+# url and warc_ts, the language fallback and the spans are assembled in
+# _result_arrays
 _RESULT_KEYS = [
-    ("content_text", "content_text"), ("content_html", "content_html"),
-    ("content_markdown", "content_markdown"),
-    ("comments_text", "comments_text"), ("comments_html", "comments_html"),
-    ("images", "images"), ("title", "title"), ("author", "author"),
-    ("url", "canonical_url"), ("hostname", "hostname"),
-    ("description", "description"), ("sitename", "sitename"),
-    ("date", "date"), ("categories", "categories"), ("tags", "tags"),
-    ("id", "id"), ("fingerprint", "fingerprint"), ("license", "license"),
-    ("image", "image"), ("page_type", "page_type"),
-    ("classification_confidence", "classification_confidence"),
-    ("extraction_quality", "extraction_quality"),
-    ("warnings", "warnings"), ("stage", "stage"),
+    ("url" if col == "canonical_url" else col, col) for col in OUTPUT_COLUMNS
+    if col not in ("url", "warc_ts", "language", "spans")
 ]
 
 
@@ -125,9 +118,10 @@ def _result_arrays(urls: list, ts, langs: list, results: list[dict],
 
 def make_extract_arrow_batches(opts: Options):
     """The one kernel closure, for ``mapInArrow`` in the batch, fastscan,
-    WARC and streaming paths: consumes input record batches (url,
-    warc_ts?, html, lang?), emits OUTPUT_SCHEMA batches.  ``opts`` rides
-    in the closure, which Spark ships once per stage: no broadcast."""
+    WARC and streaming paths: consumes batches of the page columns
+    (PAGE_COLUMNS; warc_ts and lang may be absent), emits OUTPUT_SCHEMA
+    batches.  ``opts`` rides in the closure, which Spark ships once per
+    stage: no broadcast."""
 
     def extract_arrow_batches(batches):
         pin_zip_importers()
@@ -141,9 +135,10 @@ def make_extract_arrow_batches(opts: Options):
         def safe_extract(url: str, html) -> dict:
             # a single pathological page must never fail the task: at
             # 10^12 documents *something* will hit an unforeseen code path;
-            # degrade to an empty row carrying the error as lineage
+            # degrade to an empty row carrying the error as lineage.  A
+            # null html is an empty page (reference extract.rs:161-169)
             try:
-                return extract_bytes(bytes(html), replace(opts, url=url))
+                return extract_bytes(bytes(html or b""), replace(opts, url=url))
             except ImportError:
                 # missing shipped module = broken deployment, not a bad
                 # page: degrading 10^12 rows to 'error' would be far worse
@@ -222,8 +217,7 @@ def run_extraction(
     """
     if target_partitions is None:
         target_partitions = spark.sparkContext.defaultParallelism
-    cols = [c for c in ("url", "warc_ts", "html", "lang") if c in pages.columns]
-    df = pages.select(*cols)
+    df = pages.select(*(c for c in PAGE_COLUMNS if c in pages.columns))
     if df.rdd.getNumPartitions() < max(2, target_partitions // 2):
         # too few input splits to use the cluster: one-time spread
         df = df.repartition(target_partitions)

@@ -1,10 +1,25 @@
-"""Output table schema — StructType mirror of the reference's
-ExtractResult/Metadata (result.rs:36-136; SURVEY.md §1.2), plus the engine's
-`spans` (source offsets) and `stage` (lineage) columns."""
+"""The engine's two table contracts (SURVEY.md §1).
+
+- ``PAGES_SCHEMA`` / ``PAGE_COLUMNS``: the one pages contract, what every
+  source yields and the kernel reads — (url, warc_ts, html, lang).  The
+  parquet, fastscan, WARC and streaming paths all take it from here.
+- ``OUTPUT_SCHEMA``: StructType mirror of the reference's
+  ExtractResult/Metadata (result.rs:36-136; SURVEY.md §1.2), plus the
+  engine's `spans` (source offsets) and `stage` (lineage) columns.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
+
+PAGES_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType(), False),
+    T.StructField("warc_ts", T.TimestampType(), True),
+    T.StructField("html", T.BinaryType(), True),
+    T.StructField("lang", T.StringType(), True),
+])
+# the page columns the kernel reads; warc_ts and lang may be absent
+PAGE_COLUMNS = tuple(PAGES_SCHEMA.names)
 
 IMAGE_STRUCT = T.StructType([
     T.StructField("src", T.StringType(), True),

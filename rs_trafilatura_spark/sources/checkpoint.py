@@ -24,7 +24,6 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -90,7 +89,6 @@ def run_extraction_checkpointed(
     output_path: str,
     options: Options = DEFAULT_OPTIONS,
     n_chunks: int = 8,
-    target_partitions: Optional[int] = None,
     verify_input_fingerprint: bool = False,
     chunk_col=None,
 ) -> dict:
@@ -154,9 +152,8 @@ def run_extraction_checkpointed(
         t0 = time.time()
         chunk_df = chunked.filter(F.col("_chunk") == k).drop("_chunk")
         observed = Observation()
-        extracted = run_extraction(
-            spark, chunk_df, options, target_partitions=target_partitions
-        ).observe(observed, *_manifest_metrics())
+        extracted = run_extraction(spark, chunk_df, options).observe(
+            observed, *_manifest_metrics())
         extracted.write.mode("overwrite").parquet(
             os.path.join(output_path, f"chunk={k}")
         )

@@ -11,7 +11,9 @@ pass-through floor vs ~5 s of kernel work at 32 cores).
 parquet files (O(files) metadata only), packs them into size-balanced
 bins, and a single ``mapInArrow`` stage both READS its files with
 ``pyarrow.parquet`` and runs the kernel — HTML bytes move exactly once,
-from disk into the worker that parses them.  Output is a normal DataFrame
+from disk into the worker that parses them.  It reads the page columns
+of the one pages contract (plans/schema.py ``PAGE_COLUMNS`` /
+``PAGES_SCHEMA``), the same columns ``run_extraction`` selects.  Output is a normal DataFrame
 with OUTPUT_SCHEMA; everything downstream (stage metrics, curation,
 checkpointing) composes unchanged.
 
@@ -48,9 +50,8 @@ from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..options import DEFAULT_OPTIONS, Options
 from ..plans.job import make_extract_arrow_batches
-from ..plans.schema import OUTPUT_SCHEMA
+from ..plans.schema import OUTPUT_SCHEMA, PAGE_COLUMNS
 
-INPUT_COLUMNS = ("url", "warc_ts", "html", "lang")
 # rows per kernel batch: large pages (~300 KB) => ~80 MB of HTML per batch
 ROWS_PER_BATCH = 256
 
@@ -127,7 +128,7 @@ def extract_scanned(scan, options: Options):
 
 
 def _scan_parquet(uris):
-    """Page batches (the INPUT_COLUMNS present) of the parquet files
+    """Page batches (the PAGE_COLUMNS present) of the parquet files
     ``uris``, read with pyarrow."""
     import pyarrow.parquet as pq
 
@@ -140,7 +141,7 @@ def _scan_parquet(uris):
 
             filesystem, fspath = pafs.FileSystem.from_uri(uri)
             pf = pq.ParquetFile(filesystem.open_input_file(fspath))
-        names = [c for c in INPUT_COLUMNS if c in pf.schema_arrow.names]
+        names = [c for c in PAGE_COLUMNS if c in pf.schema_arrow.names]
         yield from pf.iter_batches(batch_size=ROWS_PER_BATCH, columns=names)
 
 

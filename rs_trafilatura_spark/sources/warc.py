@@ -1,9 +1,9 @@
 """WARC source + sink: ingest Common-Crawl-style crawl archives directly.
 
 The engine's canonical input is the Iceberg/parquet pages table
-(url, warc_ts, html, lang — SURVEY.md §1), but at web scale that table is
-itself MADE from WARC files: Common Crawl publishes ~100 TB/crawl as
-``*.warc.gz`` — concatenated per-record gzip members, each member one
+(plans/schema.py ``PAGES_SCHEMA`` — SURVEY.md §1), but at web scale that
+table is itself MADE from WARC files: Common Crawl publishes ~100 TB/crawl
+as ``*.warc.gz`` — concatenated per-record gzip members, each member one
 WARC/1.0 record.  This module closes that gap so a user can point the
 pipeline at a crawl directly:
 
@@ -51,15 +51,8 @@ from typing import Iterable, Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..options import DEFAULT_OPTIONS, Options
-from ..plans.schema import OUTPUT_SCHEMA
+from ..plans.schema import OUTPUT_SCHEMA, PAGE_COLUMNS, PAGES_SCHEMA
 from .fastscan import ROWS_PER_BATCH, extract_scanned, scan_bins
-
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("warc_ts", T.TimestampType(), True),
-    T.StructField("html", T.BinaryType(), True),
-    T.StructField("lang", T.StringType(), True),
-])
 
 WRITE_RESULT_SCHEMA = T.StructType([
     T.StructField("file", T.StringType(), False),
@@ -277,8 +270,7 @@ def write_warc(pages: DataFrame, out_dir: str, n_files: int = 16) -> DataFrame:
     assigned = pages.withColumn(
         "_file_idx", F.pmod(F.xxhash64("url"), F.lit(n_files)).cast("int")
     )
-    cols = [c for c in ("url", "warc_ts", "html", "lang")
-            if c in pages.columns]
+    cols = [c for c in PAGE_COLUMNS if c in pages.columns]
 
     def write_partition(batches):
         import pyarrow as pa

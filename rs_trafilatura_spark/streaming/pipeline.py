@@ -6,33 +6,27 @@ on the pages table -> the SAME mapInArrow kernel closure as the batch path
 -> sink, with a watermark on warc_ts for late data and dropDuplicates(url)
 within the watermark as the streaming generalization of the LRU dedup
 (SURVEY.md §2.12).
+
+Both stream sources yield the one pages contract (plans/schema.py
+``PAGES_SCHEMA`` / ``PAGE_COLUMNS``), the same rows the batch sources
+yield.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from ..options import DEFAULT_OPTIONS, Options
 from ..plans.job import make_extract_arrow_batches
-from ..plans.schema import OUTPUT_SCHEMA
-
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("warc_ts", T.TimestampType(), False),
-    T.StructField("html", T.BinaryType(), False),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("lang", T.StringType(), True),
-])
+from ..plans.schema import OUTPUT_SCHEMA, PAGE_COLUMNS, PAGES_SCHEMA
 
 
-def read_pages_stream(spark: SparkSession, input_path: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
+def read_pages_stream(spark: SparkSession, input_path: str) -> DataFrame:
+    """readStream over a parquet pages table, at most 8 new files per
+    micro-batch."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 8)
         .parquet(input_path)
     )
 
@@ -41,14 +35,14 @@ def extraction_stream(
     pages_stream: DataFrame,
     options: Options = DEFAULT_OPTIONS,
     watermark: str = "10 minutes",
-    dedup_urls: bool = True,
 ) -> DataFrame:
     """Streaming extraction: watermark late crawls, drop duplicate urls
     within the watermark, then the batch kernel unchanged."""
-    df = pages_stream.withWatermark("warc_ts", watermark)
-    if dedup_urls:
-        df = df.dropDuplicates(["url"])
-    df = df.select("url", "warc_ts", "html", "lang")
+    df = (
+        pages_stream.withWatermark("warc_ts", watermark)
+        .dropDuplicates(["url"])
+        .select(*PAGE_COLUMNS)
+    )
     return df.mapInArrow(make_extract_arrow_batches(options),
                          schema=OUTPUT_SCHEMA)
 
@@ -105,21 +99,19 @@ def windowed_stage_metrics_stream(
     )
 
 
-def read_warc_stream(spark: SparkSession, input_path: str,
-                     max_files_per_trigger: int = 4) -> DataFrame:
+def read_warc_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """readStream over a GROWING directory of ``*.warc.gz`` crawl archives
     — the live-crawler ingest: each micro-batch picks up newly landed
     archive files (binaryFile streaming source, one row per new file),
     parses them with the same bounded parser the batch WARC source uses,
-    and emits pages rows (url, warc_ts, html, lang).
+    and emits PAGES_SCHEMA rows.
 
-    Scale notes: ``maxFilesPerTrigger`` bounds a micro-batch to a few
+    Scale notes: ``maxFilesPerTrigger`` bounds a micro-batch to 4
     archives; one archive's bytes live in one task (the binaryFile
     contract — CC's ~1 GB files fit comfortably under Spark's 2 GB row
     limit, and the parse itself streams record-by-record).  Malformed
     records are skipped, never raised, so one truncated upload cannot
     wedge the stream."""
-    from ..sources.warc import PAGES_SCHEMA as WARC_PAGES_SCHEMA
     from ..sources.warc import _archive_records, _records_to_batches
 
     raw = (
@@ -127,7 +119,7 @@ def read_warc_stream(spark: SparkSession, input_path: str,
         .schema("path STRING, modificationTime TIMESTAMP, "
                 "length LONG, content BINARY")
         .option("pathGlobFilter", "*.warc*")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", 4)
         .load(input_path)
     )
 
@@ -140,7 +132,7 @@ def read_warc_stream(spark: SparkSession, input_path: str,
         )
         yield from _records_to_batches(_archive_records(archives))
 
-    return raw.select("content").mapInArrow(parse, schema=WARC_PAGES_SCHEMA)
+    return raw.select("content").mapInArrow(parse, schema=PAGES_SCHEMA)
 
 
 def run_warc_stream_to_memory(spark: SparkSession, input_path: str,

@@ -21,7 +21,7 @@ host: exact reference semantics, right for moderate-skew corpora.
 from __future__ import annotations
 
 import zlib
-from typing import Any, Iterable, Iterator
+from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F

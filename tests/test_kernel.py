@@ -389,3 +389,67 @@ def test_every_option_is_read():
     unread = [f.name for f in dataclasses.fields(Options)
               if not re.search(rf"\.{f.name}\b", src)]
     assert unread == []
+
+
+def test_every_top_level_name_has_a_caller():
+    """Each top-level function, class and constant of the package is
+    loaded, imported or attribute-accessed by some .py file of the repo.
+    Its own definition and the packages' ``__init__`` re-exports do not
+    count."""
+    import ast
+    import os
+    import pathlib
+
+    import rs_trafilatura_spark
+
+    pkg = pathlib.Path(rs_trafilatura_spark.__file__).parent
+    root = pkg.parent
+    # SIGNATURE_VERSION is a deployment contract (see its comment)
+    allowed = {"__all__", "__version__", "__getattr__", "SIGNATURE_VERSION"}
+
+    def top_level(tree):
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                yield node.name, node
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            yield n.id, node
+
+    defined = []  # (module path, name, defining node)
+    used: set[str] = set()
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames
+                       if not d.startswith(".") and d != "__pycache__"]
+        for fn in filenames:
+            if not fn.endswith(".py"):
+                continue
+            path = pathlib.Path(dirpath, fn)
+            tree = ast.parse(path.read_text(), str(path))
+            in_pkg = pkg in path.parents
+            own = {}
+            if in_pkg:
+                for name, node in top_level(tree):
+                    if name not in allowed:
+                        defined.append((path, name))
+                        own[id(node)] = name
+            reexport = in_pkg and fn == "__init__.py"
+            stack = [(tree, None)]
+            while stack:
+                node, inside = stack.pop()
+                inside = own.get(id(node), inside)
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    if node.id != inside:
+                        used.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    used.add(node.attr)
+                elif isinstance(node, ast.ImportFrom) and not reexport:
+                    used.update(a.name for a in node.names)
+                stack.extend((c, inside) for c in ast.iter_child_nodes(node))
+    unused = sorted(f"{p.relative_to(root)}:{name}"
+                    for p, name in defined if name not in used)
+    assert unused == []

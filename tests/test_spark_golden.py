@@ -187,6 +187,25 @@ def test_kernel_import_error_fails_batch(monkeypatch):
         list(fn(iter([_kernel_input_batch()])))
 
 
+def test_null_html_is_an_empty_page():
+    """A null html gets the reference's empty-input result
+    (extract.rs:161-169), the same row as an empty html, not an error."""
+    import pyarrow as pa
+
+    from rs_trafilatura_spark.plans.job import make_extract_arrow_batches
+
+    batch = pa.RecordBatch.from_pydict({
+        "url": pa.array(["https://x/null", "https://x/empty"], pa.string()),
+        "html": pa.array([None, b""], pa.binary()),
+        "lang": pa.array(["en", "en"], pa.string()),
+    })
+    (result,) = list(make_extract_arrow_batches(OPTS)(iter([batch])))
+    null, empty = result.to_pylist()
+    assert null["stage"] == empty["stage"] == "empty"
+    assert null["warnings"] == ["Empty input document"]
+    assert {**null, "url": None} == {**empty, "url": None}
+
+
 def test_size_aware_repartition_same_rows(spark, extracted):
     """Pages split on both sides of ``large_threshold`` extract to the same
     rows as the plain scan-partitioned run."""
