@@ -71,8 +71,7 @@ class Element:
                  "_srcpos", "_desc_cache", "_desc_gen",
                  "_text_cache", "_text_gen",
                  "_classed_cache", "_classed_gen",
-                 "_attred_cache", "_attred_gen",
-                 "_tagidx_cache", "_tagidx_gen")
+                 "_attred_cache", "_attred_gen")
 
     def __init__(self, tag: str, attrib: Optional[dict] = None):
         self.tag = tag
@@ -91,8 +90,6 @@ class Element:
         self._classed_gen: int = -1
         self._attred_cache: Optional[list] = None
         self._attred_gen: int = -1
-        self._tagidx_cache: Optional[dict] = None
-        self._tagidx_gen: int = -1
 
     # --- construction -----------------------------------------------------
     def append(self, child: "Element") -> None:
@@ -143,15 +140,18 @@ class Element:
         return iter(self.desc_list())
 
     def desc_list(self) -> list:
-        """Descendants (excluding self) as a flat pre-order list.  The
-        selector engine's scan loops use this instead of iterdesc():
-        iterating a built list skips one generator resumption per element
-        (~0.8 µs each; profiled at 660k yields per 31-page batch).
+        """Descendants (excluding self) as a flat pre-order list: the
+        snapshot iter_select scans when a selector can match elements
+        without attributes.  Iterating a built list skips one generator
+        resumption per element (~0.8 µs each; profiled at 660k yields per
+        31-page batch).
 
         Cached per structural generation (_TREE_GEN): consecutive
         selector scans with no tree mutation in between — the dominant
         pattern in the content cascade's rule tables — share one walk.
-        Callers MUST NOT mutate the returned list."""
+        Only membership and order are cached, never tags or attributes,
+        so a rename() needs no new generation.  Callers MUST NOT mutate
+        the returned list."""
         if self._desc_gen == _TREE_GEN and self._desc_cache is not None:
             return self._desc_cache
         out: list = []
@@ -169,13 +169,14 @@ class Element:
 
     def classed_desc_list(self) -> list:
         """Descendants carrying a ``class`` or ``id`` attribute, in
-        document order — the only elements a tagless class/id selector
-        can possibly match, typically a small fraction of the tree.
-        Cached per structural generation like desc_list(); derived from
-        it, so the full walk is shared.  Attribute EDITS don't bump the
-        generation, but the kernel never adds class/id attributes after
-        parse (grep-audited: attrib writes are confined to the parser and
-        to copies), so membership is stable within a generation."""
+        document order: the snapshot iter_select scans when every
+        alternative's last compound needs a class or id, typically a
+        small fraction of the tree.  Cached per structural generation
+        like desc_list(); derived from it, so the full walk is shared.
+        Attribute EDITS don't bump the generation, but the kernel never
+        adds class/id attributes after parse (grep-audited: attrib writes
+        are confined to the parser and to copies), so membership is
+        stable within a generation."""
         if self._classed_gen == _TREE_GEN and self._classed_cache is not None:
             return self._classed_cache
         out = [el for el in self.desc_list()
@@ -185,51 +186,19 @@ class Element:
         return out
 
     def attributed_desc_list(self) -> list:
-        """Descendants carrying ANY attribute, in document order — the
-        only elements an attribute-requiring selector ([rel=...],
-        [itemprop=...], [datetime], class/id forms) can possibly match.
-        Same caching/stability contract as classed_desc_list: the kernel
-        never writes attributes after parse (grep-audited — attrib
-        writes are confined to the parser), so membership is stable
-        within a generation."""
+        """Descendants carrying ANY attribute, in document order: the
+        snapshot iter_select scans when every alternative's last
+        compound needs some attribute ([rel=...], [itemprop=...],
+        [datetime], class/id forms).  Same caching/stability contract as
+        classed_desc_list: the kernel never writes attributes after parse
+        (grep-audited — attrib writes are confined to the parser), so
+        membership is stable within a generation."""
         if self._attred_gen == _TREE_GEN and self._attred_cache is not None:
             return self._attred_cache
         out = [el for el in self.desc_list() if el.attrib]
         self._attred_cache = out
         self._attred_gen = _TREE_GEN
         return out
-
-    def tag_index(self) -> Optional[dict]:
-        """{tag: (elements, ordinals)} over the CURRENT desc_list()
-        snapshot, document order — lets tag-anchored selectors visit only
-        their tag's elements instead of the whole tree (ordinals allow
-        doc-order merges for comma unions).
-
-        Returns None when desc_list() is not already cached for this
-        generation: the first scan after a mutation stays a plain walk,
-        so mutate-select-mutate phases (doc cleaning) never pay an index
-        build they can't amortize; select-heavy stable phases (metadata
-        cascade, rule tables) build it on their second scan.  Same
-        snapshot semantics and no-mutation contract as desc_list()."""
-        if self._tagidx_gen == _TREE_GEN and self._tagidx_cache is not None:
-            return self._tagidx_cache
-        if self._desc_gen != _TREE_GEN or self._desc_cache is None:
-            return None
-        # small trees: a plain filtered scan beats the build+dict churn
-        # (measured crossover on the fixture mix, ~5 KB pages)
-        if len(self._desc_cache) < 512:
-            return None
-        idx: dict = {}
-        get = idx.get
-        for i, el in enumerate(self._desc_cache):
-            bucket = get(el.tag)
-            if bucket is None:
-                idx[el.tag] = bucket = ([], [])
-            bucket[0].append(el)
-            bucket[1].append(i)
-        self._tagidx_cache = idx
-        self._tagidx_gen = _TREE_GEN
-        return idx
 
     def ancestors(self) -> Iterator["Element"]:
         cur = self.parent

@@ -4,20 +4,20 @@ Supports exactly the selector forms the extraction rules need (the reference
 drives dom_query with simple selectors — tag, #id, .class, [attr], [attr=v],
 [attr*=v], [attr~=v], [attr^=v], compounds, comma unions, and descendant
 chains; see e.g. patterns.rs:145-160, selector/content.rs:519-543).
-Selectors are parsed once and cached.
+
+Each selector compiles once (cached) to one plan: a predicate and the
+narrowest per-generation descendant snapshot it can match in.
+``iter_select`` has one path, that predicate over that snapshot;
+``matches`` is the brute-force per-element reference.
 """
 
 from __future__ import annotations
 
 import re
 from functools import lru_cache
-from operator import itemgetter
 from typing import Callable, Iterator, Optional
 
 from .element import Element
-
-# doc-order merge key for tag-index buckets (ordinals are unique)
-_ordinal_key = itemgetter(0)
 
 _SIMPLE_RE = re.compile(
     r"""
@@ -30,28 +30,37 @@ _PART_RE = re.compile(r"\#([\w-]+)|\.([\w-]+)|\[([^\]]+)\]")
 _ATTR_RE = re.compile(r"^([\w:-]+)\s*(?:([*~^$|]?=)\s*(.*))?$")
 
 
-def _parse_attr(body: str) -> Callable[[Element], bool]:
+def _never(el: Element) -> bool:
+    return False
+
+
+def _parse_attr(body: str) -> tuple[Callable[[Element], bool], Optional[str]]:
+    """Compile one ``[...]`` body to ``(predicate, required)``.
+    ``required`` names the attribute every match must carry; it is None
+    when an element without it can match (an empty comparison value
+    against the ``get(n, "")`` default) or when nothing can."""
     m = _ATTR_RE.match(body.strip())
     if not m:
-        return lambda el: False
-    name, op, val = m.group(1), m.group(2), m.group(3)
-    if val is not None:
-        val = val.strip()
-        if len(val) >= 2 and val[0] in "\"'" and val[-1] == val[0]:
-            val = val[1:-1]
+        return _never, None
+    name, op, val = m.groups()
     if op is None:
-        return lambda el, n=name: n in el.attrib
+        return (lambda el, n=name: n in el.attrib), name
+    val = val.strip()
+    if len(val) >= 2 and val[0] in "\"'" and val[-1] == val[0]:
+        val = val[1:-1]
     if op == "=":
-        return lambda el, n=name, v=val: el.attrib.get(n) == v
-    if op == "*=":
-        return lambda el, n=name, v=val: v in el.attrib.get(n, "")
-    if op == "~=":
-        return lambda el, n=name, v=val: v in el.attrib.get(n, "").split()
-    if op == "^=":
-        return lambda el, n=name, v=val: el.attrib.get(n, "").startswith(v)
-    if op == "$=":
-        return lambda el, n=name, v=val: el.attrib.get(n, "").endswith(v)
-    return lambda el: False
+        pred = lambda el, n=name, v=val: el.attrib.get(n) == v
+    elif op == "*=":
+        pred = lambda el, n=name, v=val: v in el.attrib.get(n, "")
+    elif op == "~=":
+        pred = lambda el, n=name, v=val: v in el.attrib.get(n, "").split()
+    elif op == "^=":
+        pred = lambda el, n=name, v=val: el.attrib.get(n, "").startswith(v)
+    elif op == "$=":
+        pred = lambda el, n=name, v=val: el.attrib.get(n, "").endswith(v)
+    else:
+        return _never, None
+    return pred, (name if op == "=" or val else None)
 
 
 class _Compound:
@@ -61,13 +70,10 @@ class _Compound:
         m = _SIMPLE_RE.match(token)
         self.tag: Optional[str] = None
         self.preds: list[Callable[[Element], bool]] = []
-        # True when no element LACKING both class and id can match: lets
-        # iter_select scan the (much shorter) classed_desc_list snapshot
+        # True when no element lacking both class and id can match (gates
+        # the scan to classed_desc_list); needs_attr is the weaker "no
+        # attribute-less element can match" (attributed_desc_list)
         self.needs_cls_or_id = False
-        # weaker gate: True when no ATTRIBUTE-LESS element can match —
-        # presence/[attr=v]/non-empty-value substring forms all require
-        # the attribute to exist, so iter_select can scan the
-        # attributed_desc_list snapshot (class/id forms imply this too)
         self.needs_attr = False
         if not m:
             return
@@ -76,44 +82,23 @@ class _Compound:
             self.tag = tag.lower()
         for pm in _PART_RE.finditer(m.group("parts") or ""):
             if pm.group(1):
-                ident = pm.group(1)
-                self.preds.append(lambda el, i=ident: el.attrib.get("id") == i)
-                self.needs_cls_or_id = True
-                self.needs_attr = True
+                pred = lambda el, i=pm.group(1): el.attrib.get("id") == i
+                required = "id"
             elif pm.group(2):
-                cls = pm.group(2)
                 # substring pre-filter: token membership implies substring,
                 # so the (allocating) split only runs on candidate hits
-                self.preds.append(
-                    lambda el, c=cls: (
-                        (a := el.attrib.get("class")) is not None
-                        and c in a and c in a.split()
-                    )
+                pred = lambda el, c=pm.group(2): (
+                    (a := el.attrib.get("class")) is not None
+                    and c in a and c in a.split()
                 )
-                self.needs_cls_or_id = True
+                required = "class"
+            else:
+                pred, required = _parse_attr(pm.group(3))
+            self.preds.append(pred)
+            if required is not None:
                 self.needs_attr = True
-            elif pm.group(3):
-                body = pm.group(3).strip()
-                attr_m = _ATTR_RE.match(body)
-                if attr_m and attr_m.group(1) in ("class", "id"):
-                    # presence/[class*=..]/[id^=..] etc. all require the
-                    # attribute to exist, except never-matching bodies
-                    # (which _parse_attr maps to const-False — also safe
-                    # to restrict to any subset)
+                if required in ("class", "id"):
                     self.needs_cls_or_id = True
-                if attr_m is not None:
-                    op, val = attr_m.group(2), attr_m.group(3)
-                    if val is not None:
-                        val = val.strip()
-                        if (len(val) >= 2 and val[0] in "\"'"
-                                and val[-1] == val[0]):
-                            val = val[1:-1]
-                    # presence always requires the attr; comparison forms
-                    # require it unless a degenerate empty value could
-                    # match an absent attr via the get(n, "") default
-                    if op is None or op == "=" or (val or "") != "":
-                        self.needs_attr = True
-                self.preds.append(_parse_attr(body))
 
     def matches(self, el: Element) -> bool:
         if self.tag is not None and el.tag != self.tag:
@@ -175,183 +160,62 @@ def _compile(selector: str) -> tuple:
 
 
 @lru_cache(maxsize=4096)
-def _tag_only(selector: str):
-    """Fast path: selectors like 'p' / 'td, th' compile to a tag frozenset."""
-    tags = []
-    for chain in _compile(selector):
-        if len(chain.steps) != 1:
-            return None
-        comp = chain.steps[0][1]
-        if comp.preds or comp.tag is None:
-            return None
-        tags.append(comp.tag)
-    return frozenset(tags) if tags else None
-
-
-@lru_cache(maxsize=4096)
-def _last_tag_dispatch(selector: str):
-    """For comma unions where every chain's last step names a tag, build
-    {tag: [chains]} — None when any chain is tag-open (must scan all)."""
-    by_tag: dict = {}
-    for ch in _compile(selector):
-        t = ch.steps[-1][1].tag if ch.steps else None
-        if t is None:
-            return None
-        by_tag.setdefault(t, []).append(ch)
-    return by_tag
-
-
-@lru_cache(maxsize=4096)
-def _single_step_compounds(selector: str):
-    """[(tag, preds, needs_cls_or_id, needs_attr)] when every chain is
-    one compound; else None."""
-    out = []
-    for ch in _compile(selector):
-        if len(ch.steps) != 1:
-            return None
-        comp = ch.steps[0][1]
-        out.append((comp.tag, tuple(comp.preds), comp.needs_cls_or_id,
-                    comp.needs_attr))
-    return tuple(out) if out else None
+def _plan(selector: str) -> tuple[Callable[[Element], bool],
+                                  Callable[[Element], list]]:
+    """``(match, gate)`` for one selector.  ``match`` is one predicate:
+    tag-set membership when every alternative is a bare tag, else the one
+    alternative's test or the first-hit loop over them.  An alternative's
+    test is its chain's ``matches``, cut down for a single compound to the
+    compound's ``matches`` or, tagless with one part, to that part.
+    ``gate`` is the narrowest per-generation snapshot method that every
+    alternative's last compound is confined to."""
+    chains = _compile(selector)
+    lasts = [ch.steps[-1][1] for ch in chains if ch.steps]
+    tests = []
+    for ch in chains:
+        comp = ch.steps[0][1] if len(ch.steps) == 1 else None
+        if comp is None:
+            tests.append(ch.matches)
+        elif comp.tag is None and len(comp.preds) == 1:
+            tests.append(comp.preds[0])
+        else:
+            tests.append(comp.matches)
+    if all(len(ch.steps) == 1 and ch.steps[0][1].tag is not None
+           and not ch.steps[0][1].preds for ch in chains):
+        tags = frozenset(c.tag for c in lasts)
+        match = lambda el: el.tag in tags
+    elif len(tests) == 1:
+        match = tests[0]
+    else:
+        def match(el: Element) -> bool:
+            for test in tests:  # plain loop: any(genexpr) costs a frame
+                if test(el):
+                    return True
+            return False
+    if all(c.needs_cls_or_id for c in lasts):
+        gate = Element.classed_desc_list
+    elif all(c.needs_attr for c in lasts):
+        gate = Element.attributed_desc_list
+    else:
+        gate = Element.desc_list
+    return match, gate
 
 
 def iter_select(root: Element, selector: str) -> Iterator[Element]:
     """Yield descendants of ``root`` (excluding root itself) matching the
-    selector, in document order.
+    selector, in document order.  One path for every selector: its
+    compiled predicate over the narrowest snapshot (see ``_plan``).
 
-    SNAPSHOT SEMANTICS: the walk runs over a ``desc_list()`` snapshot
-    built at first resumption, so elements detached/pruned by the caller
-    DURING iteration are still yielded (a lazy walk would skip subtrees
-    detached before reaching them).  Callers that prune while consuming
-    matches must materialize first (``select()`` does) — audited: every
-    kernel pruning site goes through ``select()``; the one lazy consumer
-    (find_main_content_node's profile probe) only reads.  Early-exit
-    consumers pay the O(subtree) snapshot build once per call — measured
-    cheaper than per-element generator resumption on the cascade's
-    workloads (see desc_list)."""
-    tags = _tag_only(selector)
-    if tags is not None:
-        idx = root.tag_index()
-        if idx is not None:
-            if len(tags) == 1:
-                bucket = idx.get(next(iter(tags)))
-                if bucket is not None:
-                    yield from bucket[0]
-                return
-            pairs: list = []
-            for t in tags:
-                bucket = idx.get(t)
-                if bucket is not None:
-                    pairs.extend(zip(bucket[1], bucket[0]))
-            # ordinals are unique, so tuple sort never compares Elements
-            pairs.sort()
-            for _, el in pairs:
-                yield el
-            return
-        for el in root.desc_list():
-            if el.tag in tags:
-                yield el
-        return
-    chains = _compile(selector)
-    # single simple compound (the dominant shape in the cascade's rule
-    # tables): inline the tag/pred checks — the generic path's two method
-    # hops + all(generator) per element are ~40% of kernel select time
-    if len(chains) == 1 and len(chains[0].steps) == 1:
-        comp = chains[0].steps[0][1]
-        tag, preds = comp.tag, comp.preds
-        if tag is not None:
-            # tag-anchored compound: visit only that tag's elements when
-            # the index is warm (strictly a subset of any full snapshot)
-            idx = root.tag_index()
-            if idx is not None:
-                bucket = idx.get(tag)
-                if bucket is None:
-                    return
-                for el in bucket[0]:
-                    for p in preds:
-                        if not p(el):
-                            break
-                    else:
-                        yield el
-                return
-        # class/id-gated compounds can only match elements that HAVE a
-        # class or id: scan that (much shorter) per-generation snapshot;
-        # other attribute-requiring compounds scan the attributed subset
-        scan = (root.classed_desc_list() if comp.needs_cls_or_id
-                else root.attributed_desc_list() if comp.needs_attr
-                else root.desc_list())
-        if len(preds) == 1:
-            pred = preds[0]
-            for el in scan:
-                if (tag is None or el.tag == tag) and pred(el):
-                    yield el
-            return
-        for el in scan:
-            if tag is None or el.tag == tag:
-                for p in preds:
-                    if not p(el):
-                        break
-                else:
-                    yield el
-        return
-    # multi-chain path: dispatch on each chain's LAST-step tag so most
-    # elements cost one dict probe instead of len(chains) matches() calls
-    by_tag = _last_tag_dispatch(selector)
-    if by_tag is not None:
-        idx = root.tag_index()
-        if idx is not None:
-            pairs: list = []
-            for t, lst in by_tag.items():
-                bucket = idx.get(t)
-                if bucket is not None:
-                    els, ords = bucket
-                    for i, el in zip(ords, els):
-                        pairs.append((i, el, lst))
-            pairs.sort(key=_ordinal_key)
-            for _, el, lst in pairs:
-                for ch in lst:
-                    if ch.matches(el):
-                        yield el
-                        break
-            return
-        for el in root.desc_list():
-            lst = by_tag.get(el.tag)
-            if lst is not None:
-                for ch in lst:
-                    if ch.matches(el):
-                        yield el
-                        break
-        return
-    # tagless unions of simple compounds (the discard/content rule tables'
-    # dominant shape, e.g. "[class*='a'], [id*='b']"): inline the
-    # tag/pred checks, skipping two method hops per chain per element
-    comps = _single_step_compounds(selector)
-    if comps is not None:
-        # the union can only skip class/id-less elements when EVERY
-        # branch is class/id-gated (a branch is an OR alternative);
-        # likewise attribute-less elements when every branch needs an attr
-        scan = (root.classed_desc_list()
-                if all(c[2] for c in comps)
-                else root.attributed_desc_list()
-                if all(c[2] or c[3] for c in comps)
-                else root.desc_list())
-        for el in scan:
-            tag = el.tag
-            for ctag, preds, _needs, _na in comps:
-                if ctag is not None and tag != ctag:
-                    continue
-                for p in preds:
-                    if not p(el):
-                        break
-                else:
-                    yield el
-                    break
-        return
-    for el in root.desc_list():
-        for ch in chains:
-            if ch.matches(el):
-                yield el
-                break
+    SNAPSHOT SEMANTICS: the scan runs over a generation-cached snapshot
+    taken at first resumption, so elements detached/pruned by the caller
+    DURING iteration are still yielded.  Callers that prune while
+    consuming matches must materialize first (``select()`` does) —
+    every kernel pruning site goes through ``select()``; the one lazy
+    consumer (find_main_content_node's profile probe) only reads."""
+    match, gate = _plan(selector)
+    for el in gate(root):
+        if match(el):
+            yield el
 
 
 def select(root: Element, selector: str) -> list[Element]:

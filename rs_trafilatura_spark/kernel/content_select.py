@@ -14,6 +14,7 @@ from ..dom import Element, select
 from ..functions.textnorm import clean_text, count_sentences
 from ..options import Options
 from .boilerplate import _SPLIT_DASH, _sidebar_parts_match, is_boilerplate
+from .metadata import _norm_lang
 from .patterns import ARTICLE_SELECTOR, MAIN_SELECTOR
 from .tags import HEADING_TAGS
 
@@ -518,10 +519,6 @@ def find_content_node_bottom_up(body: Element) -> Optional[Element]:
     return best if len(best.text_content().strip()) > 200 else None
 
 
-def _normalize_lang(value: str) -> str:
-    return value.strip().lower().split("-")[0].split("_")[0]
-
-
 def matches_target_language(el: Element, doc_lang: Optional[str],
                             target: Optional[str]) -> bool:
     """Element lang attr, else document language, else graceful pass-through
@@ -530,13 +527,13 @@ def matches_target_language(el: Element, doc_lang: Optional[str],
         return True
     el_lang = el.get("lang")
     if el_lang:
-        return _normalize_lang(el_lang) == _normalize_lang(target)
+        return _norm_lang(el_lang) == _norm_lang(target)
     for anc in el.ancestors():
         anc_lang = anc.get("lang")
         if anc_lang:
-            return _normalize_lang(anc_lang) == _normalize_lang(target)
+            return _norm_lang(anc_lang) == _norm_lang(target)
     if doc_lang:
-        return _normalize_lang(doc_lang) == _normalize_lang(target)
+        return _norm_lang(doc_lang) == _norm_lang(target)
     return True
 
 
@@ -546,14 +543,13 @@ def find_main_content_node(body: Element, opts: Options,
     """Full selection cascade (extract.rs:1831-1897)."""
     target = opts.target_language
     if profile_selectors:
-        # probe each selector in priority order through iter_select's
-        # compiled fast paths with an early exit — the first (selector
-        # index, document order) element with real text wins.  An element
-        # matching several selectors is only ever RETURNED from the
-        # highest-priority one, and an element failing the text check
-        # fails it for every selector, so this is outcome-identical to
-        # the old every-element x every-selector matches() walk at a
-        # fraction of the per-element dispatch cost.
+        # probe each selector in priority order through iter_select (one
+        # compiled predicate over the narrowest snapshot) with an early
+        # exit: the first (selector index, document order) element with
+        # real text wins.  An element matching several selectors is only
+        # ever RETURNED from the highest-priority one, and an element
+        # failing the text check fails it for every selector, so this
+        # equals an every-element x every-selector matches() walk.
         from ..dom.select import iter_select as _iter_sel
 
         for sel_str in profile_selectors:

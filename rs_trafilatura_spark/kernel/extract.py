@@ -25,6 +25,7 @@ from .content_select import find_main_content_node
 from .dedup import LruCache, dedup_blocks
 from .fallback import baseline
 from .metadata import (
+    _norm_lang,
     extract_metadata,
     find_jsonld_article_body,
     find_jsonld_product_description,
@@ -150,7 +151,7 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
         body, opts, profile.content_selectors, doc_lang=meta.get("language")
     )
     if (opts.target_language and meta.get("language")
-            and meta["language"] != opts.target_language.split("-")[0].lower()):
+            and meta["language"] != _norm_lang(opts.target_language)):
         warnings.append(
             f"Document language {meta['language']!r} does not match target "
             f"{opts.target_language!r}"
@@ -343,7 +344,7 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
     # 13. content html
     content_html: Optional[str] = None
     if opts.include_content_html and content_node is not None and stage in (
-        "main", "ancestor_walkup", "relaxed_boilerplate", "body"
+        "main", "ancestor_walkup", "relaxed_boilerplate"
     ):
         content_html = extract_filtered_html(
             content_node, opts,
@@ -366,7 +367,7 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
             content_node, include_links=opts.include_links
         ) or None
 
-    # 13. final validations (extract.rs:1081-1136).  Order matters: the
+    # 16. final validations (extract.rs:1081-1136).  Order matters: the
     # reference evaluates the insufficiency thresholds on the
     # PRE-truncation text (extract.rs:1095-1099) and truncates after
     # (extract.rs:1113-1120)
@@ -437,7 +438,7 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
     if not spans and text:
         spans = _output_block_spans(text, stage)
 
-    # 14. quality (extract.rs:401-406)
+    # 17. quality (extract.rs:401-406)
     quality = compute_extraction_quality(text, content_html, html_len, page_type)
 
     # content fingerprint (result.rs:122 declares it; engine fills it:

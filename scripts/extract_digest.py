@@ -2,9 +2,11 @@
 """Differential byte-identity check of the extraction kernel.
 
 Runs ``extract_bytes`` over a fixed page set under four option sets and
-prints one sha256 over every result, plus the count of results per
-extraction stage.  Two checkouts whose kernels produce identical output
-print the same digest:
+prints one sha256 over every result, a second sha256 over the results of
+the generated pages only, and the count of results per extraction stage.
+Two checkouts whose kernels produce identical output print the same
+digests.  The second one does not depend on the perfbench input cache, so
+it compares runs made in different checkouts:
 
     python3 scripts/extract_digest.py                      # this checkout
     python3 scripts/extract_digest.py --tree /path/to/parent
@@ -37,8 +39,9 @@ CACHED_CORPORA = 3
 CACHED_ROWS = 400
 
 
-def pages(inputs_dir: str) -> list[tuple[str, bytes]]:
-    """(url, html) for every page of the check, in a fixed order."""
+def pages(inputs_dir: str) -> tuple[list, list]:
+    """(url, html) for every page of the check, in a fixed order: the
+    generated pages, then the cached corpora's."""
     import pyarrow.parquet as pq
 
     from rs_trafilatura_spark.datagen.corpus import (
@@ -48,13 +51,14 @@ def pages(inputs_dir: str) -> list[tuple[str, bytes]]:
     rows = [generate_row(i, seed) for seed in FIXTURE_SEEDS
             for i in range(FIXTURE_ROWS)]
     rows += [generate_large_row(i, 1) for i in range(LARGE_ROWS)]
-    out = [(r["url"], bytes(r["html"])) for r in rows]
+    generated = [(r["url"], bytes(r["html"])) for r in rows]
+    cached = []
     corpora = sorted(glob.glob(os.path.join(inputs_dir, "*", "pages")))
     for path in corpora[:CACHED_CORPORA]:
         table = pq.read_table(path, columns=["url", "html"])
         head = table.slice(0, CACHED_ROWS).to_pylist()
-        out += [(r["url"], bytes(r["html"] or b"")) for r in head]
-    return out
+        cached += [(r["url"], bytes(r["html"] or b"")) for r in head]
+    return generated, cached
 
 
 def option_sets():
@@ -81,22 +85,30 @@ def main() -> None:
 
     from rs_trafilatura_spark.kernel.extract import extract_bytes
 
-    page_set = pages(os.path.join(HERE, ".perfbench", "inputs"))
+    generated, cached = pages(os.path.join(HERE, ".perfbench", "inputs"))
+    page_set = generated + cached
     digest = hashlib.sha256()
+    generated_digest = hashlib.sha256()
     stages: collections.Counter = collections.Counter()
-    for opts in option_sets():
-        for url, html in page_set:
+    opt_sets = option_sets()
+    for opts in opt_sets:
+        for i, (url, html) in enumerate(page_set):
             try:
                 result = extract_bytes(html, replace(opts, url=url))
             except Exception as exc:  # noqa: BLE001 - hashed as a result
                 result = {"stage": "error",
                           "error": f"{type(exc).__name__}: {exc}"}
-            digest.update(json.dumps(result, sort_keys=True, default=str,
-                                     ensure_ascii=False).encode())
-            digest.update(b"\n")
+            line = json.dumps(result, sort_keys=True, default=str,
+                              ensure_ascii=False).encode() + b"\n"
+            digest.update(line)
+            if i < len(generated):
+                generated_digest.update(line)
             stages[result["stage"]] += 1
     print(f"sha256 {digest.hexdigest()}  "
           f"({sum(stages.values())} results, {len(page_set)} pages)")
+    print(f"sha256 {generated_digest.hexdigest()}  "
+          f"({len(opt_sets) * len(generated)} results, "
+          f"{len(generated)} generated pages only)")
     for stage, n in sorted(stages.items()):
         print(f"  {stage:20s} {n}")
 

@@ -245,51 +245,43 @@ def test_text_content_child_cache_reuse_is_byte_identical():
     assert warm.text_content() == want
 
 
-def test_tag_index_order_parity_and_invalidation():
-    """tag_index-backed selects yield the same elements in the same
-    document order as a plain snapshot scan, across single tags, comma
-    unions, tag-anchored compounds, and last-tag-dispatch unions; the
-    index invalidates on mutation and never builds before a desc_list
-    snapshot exists."""
+def test_select_order_parity_and_invalidation():
+    """On a tree above 512 descendants, selects on a scanned (snapshot
+    cached) tree yield the same elements in the same document order as
+    on a fresh tree, across single tags, comma unions, tag-anchored
+    compounds and mixed unions; a drop_tree invalidates the snapshot."""
     from rs_trafilatura_spark.dom.parser import parse_html
     from rs_trafilatura_spark.dom.select import select
 
     body = "".join(
         f"<section class='s{i}'><p class='x'>p{i}</p><span>t{i}</span>"
         f"<td>c{i}</td><th>h{i}</th></section>"
-        for i in range(200)  # > the 512-descendant index threshold
+        for i in range(200)  # > 512 descendants
     )
     root = parse_html(f"<div>{body}</div>")
+    assert len(root.desc_list()) > 512
 
-    # cold root: no snapshot yet -> no index, plain scan path
-    assert root.tag_index() is None
-    plain_p = select(root, "p")          # first scan: builds desc_list
-    assert root.tag_index() is not None  # warm: index now available
-
+    plain_p = select(root, "p")
     for sel in ("p", "td, th", "p.x", "section[class*='s1'], span",
                 "p, section"):
-        via_index = select(root, sel)
-        # force the plain path on an identical fresh tree
-        fresh = parse_html(f"<div>{body}</div>")
-        plain = select(fresh, sel)
-        assert [id(e) for e in via_index] != []  # non-trivial
-        assert [(e.tag, e.get("class")) for e in via_index] == \
-            [(e.tag, e.get("class")) for e in plain], sel
+        warm = select(root, sel)
+        fresh = select(parse_html(f"<div>{body}</div>"), sel)
+        assert warm != []  # non-trivial
+        assert [(e.tag, e.get("class")) for e in warm] == \
+            [(e.tag, e.get("class")) for e in fresh], sel
         # document order: strictly increasing positions in desc_list
         pos = {id(e): i for i, e in enumerate(root.desc_list())}
-        ords = [pos[id(e)] for e in via_index]
+        ords = [pos[id(e)] for e in warm]
         assert ords == sorted(ords), sel
 
-    # mutation bumps the generation: index rebuilt, dropped node gone
-    plain_p[0].drop_tree()
-    root.desc_list()
-    idx = root.tag_index()
-    assert idx is not None and len(idx["p"][0]) == 199
+    # mutation bumps the generation: the dropped node is gone
+    dropped = plain_p[0]
+    dropped.drop_tree()
+    after = select(root, "p")
+    assert len(after) == 199 and dropped not in after
 
-    # small trees never index (plain scan wins below the threshold)
     small = parse_html("<div><p>a</p><p>b</p></div>")
     small.desc_list()
-    assert small.tag_index() is None
     assert [e.text for e in select(small, "p")] == ["a", "b"]
 
 
@@ -322,8 +314,83 @@ def test_attributed_desc_list_and_attr_selector_gating():
     # degenerate: [class*=''] matches EVERYTHING (empty substring of the
     # '' default) — must not be restricted to attributed elements
     assert len(select(root, "[foo*='']")) == len(root.desc_list())
+    assert len(select(root, "[class*='']")) == len(root.desc_list())
     # invalidation: structural mutation rebuilds the snapshot
     from rs_trafilatura_spark.dom.element import Element
     root.children[0].append(Element("i", {"x": "1"}))
     assert [e.tag for e in root.attributed_desc_list()] == \
         ["a", "span", "time", "i"]
+
+
+def _digest_option_sets():
+    """The four option sets of scripts/extract_digest.py."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).parents[1] / "scripts" / "extract_digest.py"
+    spec = importlib.util.spec_from_file_location("extract_digest", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.option_sets()
+
+
+def test_kernel_selectors_match_reference_scan(monkeypatch):
+    """Every selector the kernel hands iter_select, on the generated
+    fixture pages and large pages under the digest's option sets, selects
+    exactly the elements (in document order) that a brute-force
+    ``matches`` walk finds, from both the document root and the body, on
+    trees above and below 512 descendants."""
+    import sys
+    from dataclasses import replace
+
+    from rs_trafilatura_spark.datagen.corpus import (
+        generate_large_row, generate_row,
+    )
+    from rs_trafilatura_spark.functions.encoding import transcode_to_utf8
+    from rs_trafilatura_spark.kernel.extract import extract_bytes
+
+    S = sys.modules["rs_trafilatura_spark.dom.select"]
+    rows = [generate_row(i, 1) for i in range(300)]
+    rows += [generate_large_row(i, 1) for i in range(4)]
+    pages = [(r["url"], bytes(r["html"])) for r in rows]
+
+    seen: dict = {}  # insertion-ordered set of selector strings
+    orig = S.iter_select
+
+    def recording(root, selector):
+        seen[selector] = None
+        return orig(root, selector)
+
+    monkeypatch.setattr(S, "iter_select", recording)
+    for opts in _digest_option_sets():
+        for url, html in pages:
+            extract_bytes(html, replace(opts, url=url))
+    monkeypatch.undo()
+    assert len(seen) > 20
+
+    sizes = []
+    for _, html in pages:
+        doc = Document(transcode_to_utf8(html))
+        for root in (doc.root, doc.body):
+            sizes.append(len(list(root.iter())) - 1)
+            for sel in seen:
+                want = [el for el in root.iter()
+                        if el is not root and S.matches(el, sel)]
+                assert S.select(root, sel) == want, sel
+    assert min(sizes) < 512 < max(sizes)
+
+
+def test_select_after_rename():
+    """A renamed element is selected under its new tag and not its old
+    one, even on a large tree that earlier selects have scanned."""
+    from rs_trafilatura_spark.dom.parser import parse_html
+
+    body = parse_html(
+        "<body>" + "<p>x</p>" * 600 + "<figure>f</figure></body>"
+    )
+    assert len(select(body, "p")) == 600
+    assert len(select(body, "p")) == 600
+    fig = select_first(body, "figure")
+    fig.rename("div")
+    assert fig in select(body, "div")
+    assert select(body, "figure") == []

@@ -453,3 +453,21 @@ def test_every_top_level_name_has_a_caller():
     unused = sorted(f"{p.relative_to(root)}:{name}"
                     for p, name in defined if name not in used)
     assert unused == []
+
+
+def test_target_language_region_tag_is_one_language():
+    """A region-qualified target (``en_US``) and a page in ``en`` are the
+    same language everywhere: the content matches and no mismatch
+    warning is raised."""
+    html = (
+        '<html lang="en"><body><article>'
+        "<p>This is English content that should be extracted. It has "
+        "multiple sentences to ensure good scoring.</p>"
+        "<p>More English content here to make it substantial.</p>"
+        "</article></body></html>"
+    )
+    for target in ("en_US", "en-GB", "EN"):
+        r = extract(html, Options(target_language=target))
+        assert r["stage"] == "main", target
+        assert "English content" in r["content_text"]
+        assert not [w for w in r["warnings"] if "does not match" in w], target
