@@ -5,42 +5,25 @@ from __future__ import annotations
 
 from typing import Optional
 
-from ..dom import Document, Element
+from ..dom import Document, Element, select_first
 from ..functions.textnorm import clean_text
 from ..options import Options
 from .patterns import COMMENT_CLASS, COMMENT_ID
 from .traversal import extract_filtered_text
 
-_ID_PROBES = ("comments", "comment-section", "disqus_thread", "respond", "discussion")
-_CLASS_PROBES = ("comments", "comment-list", "respond", "discussion", "disqus",
-                 "fb-comments")
+_PROBES = ("#comments", "#comment-section", "#disqus_thread", "#respond",
+           "#discussion", ".comments", ".comment-list", ".respond",
+           ".discussion", ".disqus", ".fb-comments")
 
 
 def find_comment_section(doc: Document) -> Optional[Element]:
-    # one walk collecting the first doc-order hit per probe (semantics
-    # identical to the reference's per-probe select_first loop: probe
-    # order outranks document order)
-    id_hits: dict[str, Element] = {}
-    cls_hits: dict[str, Element] = {}
-    id_probe_set = set(_ID_PROBES)
-    for el in doc.root.iterdesc():
-        attrib = el.attrib
-        if not attrib:
-            continue
-        id_ = attrib.get("id")
-        if id_ and id_ in id_probe_set and id_ not in id_hits:
-            id_hits[id_] = el
-        cls = attrib.get("class")
-        if cls:
-            for c in el.classes:
-                if c in _CLASS_PROBES and c not in cls_hits:
-                    cls_hits[c] = el
-    for id_ in _ID_PROBES:
-        if id_ in id_hits:
-            return id_hits[id_]
-    for cls in _CLASS_PROBES:
-        if cls in cls_hits:
-            return cls_hits[cls]
+    """The first hit of the id probes, then of the class probes: probe
+    order outranks document order.  Failing those, the largest
+    COMMENT_ID / COMMENT_CLASS match by cleaned text length."""
+    for sel in _PROBES:
+        el = select_first(doc.root, sel)
+        if el is not None:
+            return el
     best: Optional[Element] = None
     best_len = 0
     for el in doc.body.iterdesc():

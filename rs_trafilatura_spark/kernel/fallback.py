@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from ..dom import Document, Element, select
+from ..dom import Document, Element, select, select_first
 from ..functions.textnorm import clean_text, normalize_text_output
 from .boilerplate import is_boilerplate
 from .metadata import find_jsonld_article_body
@@ -31,11 +31,7 @@ def extract_discourse_content(doc: Document) -> Optional[str]:
     (reference extractor/fallback.rs:44-110)."""
     import json
 
-    el = None
-    for cand in doc.root.iterdesc():
-        if cand.attrib.get("id") == "data-preloaded":
-            el = cand
-            break
+    el = select_first(doc.root, "#data-preloaded")
     if el is None:
         return None
     raw = el.get("data-preloaded")

@@ -1,6 +1,7 @@
 """Metadata extraction cascade: JSON-LD -> meta tags -> DOM fallbacks ->
 post-process -> hostname backfill (reference metadata/mod.rs:39-82,
-meta_tags.rs:24-186, dom_extraction.rs, json_ld.rs).
+meta_tags.rs:24-186, dom_extraction.rs, json_ld.rs).  Each step selects
+the elements it reads with ``dom.select`` / ``select_first``.
 """
 
 from __future__ import annotations
@@ -9,7 +10,7 @@ import json
 import re
 from typing import Any, Optional
 
-from ..dom import Document, select
+from ..dom import Document, select, select_first
 from ..functions.dates import parse_date
 from ..functions.textnorm import clean_text
 from ..functions.urlutils import extract_hostname
@@ -100,73 +101,9 @@ def strip_site_suffix(title: str, sitename: Optional[str] = None) -> str:
 # --- JSON-LD --------------------------------------------------------------------
 
 
-def _tag_index(doc: Document) -> dict:
-    """One walk -> {tag: [elements in doc order]}: the metadata cascade
-    probes a dozen tag-known selectors, and sharing a single index walk
-    replaces a dozen full-tree scans (semantics identical — the lists are
-    in document order, exactly what select() yields).
-
-    The same walk also buckets the cascade's three ATTRIBUTE-probing
-    selector families (license footers, date candidates, author
-    candidates) under reserved ``"\\0"``-prefixed keys — tag names never
-    start with NUL, so they cannot collide.  Each bucket holds, in
-    document order, exactly the elements the corresponding comma
-    selector matches (same raw-attribute substring / token / equality
-    probes), so _date_from_dom/_author_from_dom/_license_from_dom skip
-    their own full-tree scans.  Nothing in the cascade mutates the tree,
-    so the buckets stay valid for its whole duration (the idx lists
-    already rely on that)."""
-    idx: dict = {}
-    date_cand: list = []    # [class*='date'], [class*='published'], [itemprop='datePublished']
-    author_cand: list = []  # [rel='author'], [itemprop='author'], .author, .byline
-    lic: list[list] = [[], [], [], [], []]  # footer tag/cls-token/id, license cls, copyright cls
-    for el in doc.root.iterdesc():
-        tag = el.tag
-        idx.setdefault(tag, []).append(el)
-        attrib = el.attrib
-        cls = attrib.get("class")
-        itemprop = attrib.get("itemprop")
-        if cls:
-            if ("date" in cls or "published" in cls
-                    or itemprop == "datePublished"):
-                date_cand.append(el)
-            split = None
-            if ("author" in cls or "byline" in cls):
-                split = cls.split()
-            if (attrib.get("rel") == "author" or itemprop == "author"
-                    or (split is not None
-                        and ("author" in split or "byline" in split))):
-                author_cand.append(el)
-            if "footer" in cls.split():
-                lic[1].append(el)
-            if "license" in cls:
-                lic[3].append(el)
-            if "copyright" in cls:
-                lic[4].append(el)
-        else:
-            if itemprop == "datePublished":
-                date_cand.append(el)
-            if attrib.get("rel") == "author" or itemprop == "author":
-                author_cand.append(el)
-        if tag == "footer":
-            lic[0].append(el)
-        if attrib.get("id") == "footer":
-            lic[2].append(el)
-    idx["\0date"] = date_cand
-    idx["\0author"] = author_cand
-    idx["\0license"] = lic
-    return idx
-
-
-def iter_jsonld_objects(doc: Document, idx: dict | None = None):
+def iter_jsonld_objects(doc: Document):
     """Yield every parsed JSON-LD object (flattening @graph and lists)."""
-    scripts = (
-        [s for s in idx.get("script", ())
-         if s.get("type") == "application/ld+json"]
-        if idx is not None
-        else select(doc.root, "script[type='application/ld+json']")
-    )
-    for script in scripts:
+    for script in select(doc.root, "script[type='application/ld+json']"):
         raw = script.text.strip()
         if not raw:
             continue
@@ -220,11 +157,11 @@ def find_jsonld_product_description(doc: Document) -> Optional[str]:
     return None
 
 
-def _jsonld_metadata(doc: Document, meta: dict, idx: dict) -> None:
+def _jsonld_metadata(doc: Document, meta: dict) -> None:
     """Article schemas win by importance: article base 100, others 50
     (json_ld.rs:137-140 simplified: first article-typed object wins)."""
     article_obj = None
-    for obj in iter_jsonld_objects(doc, idx):
+    for obj in iter_jsonld_objects(doc):
         types = _jsonld_types(obj)
         if any(t in _ARTICLE_TYPES for t in types):
             article_obj = obj
@@ -282,8 +219,8 @@ def _jsonld_metadata(doc: Document, meta: dict, idx: dict) -> None:
 # --- meta tags ------------------------------------------------------------------------
 
 
-def _meta_tags(meta: dict, idx: dict) -> None:
-    for m in idx.get("meta", ()):
+def _meta_tags(doc: Document, meta: dict) -> None:
+    for m in select(doc.root, "meta"):
         # http-equiv="content-language" is the legacy language channel the
         # reference reads too (extract.rs:1753-1757)
         key = (m.get("property") or m.get("name") or m.get("itemprop")
@@ -320,8 +257,6 @@ def _meta_tags(meta: dict, idx: dict) -> None:
                 meta["categories"] = cats
         elif key in _META_LANG_NAMES and not meta.get("language"):
             meta["language"] = _norm_lang(content)
-        elif key == "og:type" and not meta.get("page_type_hint"):
-            meta["page_type_hint"] = content.lower()
         elif key in ("license", "dcterms.license", "dc.rights") and not meta.get("license"):
             meta["license"] = normalize_license(content)
 
@@ -329,13 +264,10 @@ def _meta_tags(meta: dict, idx: dict) -> None:
 # --- DOM fallbacks -----------------------------------------------------------------------
 
 
-def _title_from_dom(meta: dict, idx: dict) -> None:
-    def _first(tag):
-        lst = idx.get(tag)
-        return lst[0] if lst else None
-
+def _title_from_dom(doc: Document, meta: dict) -> None:
+    h1 = select_first(doc.root, "h1")
     if not meta.get("title"):
-        title_el = _first("title")
+        title_el = select_first(doc.root, "title")
         if title_el is not None:
             raw = clean_text(title_el.text_content())
             if raw:
@@ -343,16 +275,13 @@ def _title_from_dom(meta: dict, idx: dict) -> None:
                 # longest segment when separators present
                 meta["title_raw"] = raw
                 meta["title"] = strip_site_suffix(raw, meta.get("sitename"))
-        if not meta.get("title"):
-            h1 = _first("h1")
-            if h1 is not None:
-                t = clean_text(h1.text_content())
-                if t:
-                    meta["title"] = t
+        if not meta.get("title") and h1 is not None:
+            t = clean_text(h1.text_content())
+            if t:
+                meta["title"] = t
     else:
         meta.setdefault("title_raw", meta["title"])
     # h1 preference when contained in title (dom_extraction.rs:112-128)
-    h1 = _first("h1")
     if h1 is not None and meta.get("title"):
         h1_text = clean_text(h1.text_content())
         raw = meta.get("title_raw", meta["title"])
@@ -360,11 +289,10 @@ def _title_from_dom(meta: dict, idx: dict) -> None:
             meta["title"] = h1_text
 
 
-def _date_from_dom(doc: Document, meta: dict,
-                   idx: dict | None = None) -> None:
+def _date_from_dom(doc: Document, meta: dict) -> None:
     if meta.get("date"):
         return
-    times = idx.get("time", ()) if idx is not None else select(doc.root, "time")
+    times = select(doc.root, "time")
     for t in times:
         dt_attr = t.get("datetime")
         if dt_attr:
@@ -377,10 +305,8 @@ def _date_from_dom(doc: Document, meta: dict,
         if d:
             meta["date"] = d
             return
-    cands = (idx["\0date"] if idx is not None
-             else select(doc.root, "[class*='date'], [class*='published'], "
-                                   "[itemprop='datePublished']"))
-    for el in cands:
+    for el in select(doc.root, "[class*='date'], [class*='published'], "
+                               "[itemprop='datePublished']"):
         cand = el.get("content") or el.get("datetime") or clean_text(el.text_content())
         d = parse_date(cand)
         if d:
@@ -388,14 +314,11 @@ def _date_from_dom(doc: Document, meta: dict,
             return
 
 
-def _author_from_dom(doc: Document, meta: dict,
-                     idx: dict | None = None) -> None:
+def _author_from_dom(doc: Document, meta: dict) -> None:
     if meta.get("author"):
         return
-    cands = (idx["\0author"] if idx is not None
-             else select(doc.root, "[rel='author'], [itemprop='author'], "
-                                   ".author, .byline"))
-    for el in cands:
+    for el in select(doc.root, "[rel='author'], [itemprop='author'], "
+                               ".author, .byline"):
         text = clean_text(el.text_content())
         text = re.sub(r"(?i)^by\s+", "", text).strip()
         if validate_metadata_name(text):
@@ -403,13 +326,10 @@ def _author_from_dom(doc: Document, meta: dict,
             return
 
 
-def _canonical_url(meta: dict, idx: dict) -> None:
+def _canonical_url(doc: Document, meta: dict) -> None:
     if meta.get("url"):
         return
-    link = next(
-        (l for l in idx.get("link", ()) if l.get("rel") == "canonical"),
-        None,
-    )
+    link = select_first(doc.root, "link[rel='canonical']")
     if link is not None and link.get("href"):
         meta["url"] = link.get("href")
 
@@ -427,19 +347,16 @@ def _language_from_dom(doc: Document, meta: dict) -> None:
 _CC_HREF_RE = re.compile(r"creativecommons\.org/licenses/([a-z-]+)/")
 
 
-def _categories_from_dom(meta: dict, idx: dict) -> None:
+def _categories_from_dom(doc: Document, meta: dict) -> None:
     """Category links (rel=category / breadcrumb-ish category anchors),
-    capped at 5 (dom_extraction.rs:342-369).  Anchor-centric: every
-    alternative of the old 4-way comma selector can only match an <a>,
-    so probing the tag-index anchor list (rel equality, else one
-    ancestor scan for the two [class*=] container forms — the chain
-    matcher walks ancestors unbounded, as here) visits O(#anchors)
-    elements instead of matching 4 compiled chains against the whole
-    tree; anchors are in document order, so result order is identical."""
+    capped at 5 (dom_extraction.rs:342-369).  Every alternative of the
+    reference's 4-way comma selector ends in an <a>, so this scans the
+    anchors in document order: rel equality, else one unbounded ancestor
+    scan for the two [class*=] container forms."""
     if meta.get("categories"):
         return
     cats: list[str] = []
-    for a in idx.get("a", ()):
+    for a in select(doc.root, "a"):
         rel = a.attrib.get("rel")
         ok = rel == "category" or rel == "category tag"
         if not ok:
@@ -462,43 +379,22 @@ def _categories_from_dom(meta: dict, idx: dict) -> None:
         meta["categories"] = cats
 
 
-def _license_from_dom(doc: Document, meta: dict,
-                      idx: dict | None = None) -> None:
-    """Footer CC mentions + rel=license links (dom_extraction.rs:519-563).
-    One tree walk buckets the five selector families (tag footer, class
-    token footer, id footer, class substrings license/copyright) in
-    document order; buckets are then probed in the original selector
-    priority, which is outcome-identical to five separate selects."""
+_LICENSE_SELECTORS = ("footer", ".footer", "#footer", "[class*='license']",
+                      "[class*='copyright']")
+
+
+def _license_from_dom(doc: Document, meta: dict) -> None:
+    """Footer CC mentions + rel=license links (dom_extraction.rs:519-563),
+    probed in selector priority, each selector in document order."""
     if meta.get("license"):
         return
-    if idx is not None:
-        buckets = idx["\0license"]
-    else:
-        buckets = [[], [], [], [], []]
-        for el in doc.root.iterdesc():
-            cls = el.get("class")
-            if el.tag == "footer":
-                buckets[0].append(el)
-            if cls:
-                if "footer" in cls.split():
-                    buckets[1].append(el)
-                if "license" in cls:
-                    buckets[3].append(el)
-                if "copyright" in cls:
-                    buckets[4].append(el)
-            if el.get("id") == "footer":
-                buckets[2].append(el)
-    for bucket in buckets:
-        for el in bucket:
+    for sel in _LICENSE_SELECTORS:
+        for el in select(doc.root, sel):
             m = _CC_HREF_RE.search(el.text_content())
             if m:
                 meta["license"] = f"CC {m.group(1).upper()}"
                 return
-    anchors = (
-        [a for a in idx.get("a", ()) if a.get("rel") == "license"]
-        if idx is not None else select(doc.root, "a[rel='license']")
-    )
-    for a in anchors:
+    for a in select(doc.root, "a[rel='license']"):
         href = a.get("href")
         if href:
             m = _CC_HREF_RE.search(href)
@@ -523,16 +419,15 @@ def extract_metadata(doc: Document, author_blacklist: tuple[str, ...] = ()) -> d
     """Fixed-order cascade (metadata/mod.rs:39-82). Runs on the UNCLEANED
     document (meta/script tags still present, extract.rs:52)."""
     meta: dict = {}
-    idx = _tag_index(doc)
-    _jsonld_metadata(doc, meta, idx)
-    _meta_tags(meta, idx)
-    _title_from_dom(meta, idx)
-    _date_from_dom(doc, meta, idx)
-    _author_from_dom(doc, meta, idx)
-    _canonical_url(meta, idx)
+    _jsonld_metadata(doc, meta)
+    _meta_tags(doc, meta)
+    _title_from_dom(doc, meta)
+    _date_from_dom(doc, meta)
+    _author_from_dom(doc, meta)
+    _canonical_url(doc, meta)
     _language_from_dom(doc, meta)
-    _categories_from_dom(meta, idx)
-    _license_from_dom(doc, meta, idx)
+    _categories_from_dom(doc, meta)
+    _license_from_dom(doc, meta)
     _sitename_from_title(meta)
 
     # post-process
@@ -546,5 +441,4 @@ def extract_metadata(doc: Document, author_blacklist: tuple[str, ...] = ()) -> d
     if meta.get("url") and not meta.get("hostname"):
         meta["hostname"] = extract_hostname(meta["url"])
     meta.pop("title_raw", None)
-    meta.pop("page_type_hint", None)
     return meta

@@ -472,18 +472,13 @@ def model_only_ok() -> bool:
 def extract_ml_features(
     doc: Document, url: str = "", model_only: bool = False,
     _url_parts: Optional[tuple] = None,
-    _signals_out: Optional[dict] = None,
 ) -> list[float]:
     """89-feature vector; with ``model_only=True`` (classify_page's hot
     path) the blocks whose indices no shipped tree splits on are skipped
     and left 0.0 — classification output is bit-identical because the
     ensemble never reads them (guarded by model_only_ok() + pytest).
     ``_url_parts`` is classify_page's already-computed
-    (url_lower, domain, path) — derived exactly as below.
-    ``_signals_out``, when a dict, is filled with stage 2's walk-derived
-    signals (og_type + forum/docs/product markers + pre>code count,
-    probed exactly as refine_with_html_signals' own walk does) so
-    classify_page pays ONE full-tree walk instead of two."""
+    (url_lower, domain, path) — derived exactly as below."""
     if model_only and not model_only_ok():
         model_only = False
     f = [0.0] * N_FEATURES
@@ -541,41 +536,12 @@ def extract_ml_features(
     cards: list = []
     card_set: set = set()
     price_els: list = []
-    collect_signals = _signals_out is not None
-    s_forum = s_docs_nav = s_product = False
-    s_n_code = 0
 
     for el in root.iterdesc():
         tag = el.tag
         # raw, not lowercased: the selector engine's [class*=...] compares
         # the raw attribute, and parity with the slow path must be exact
         cls = el.attrib.get("class", "")
-
-        if collect_signals:
-            # stage 2's marker probes, latched exactly as refine's walk
-            # latches them (same substring tests on the raw attributes)
-            if not s_forum and (
-                    "post-stream" in cls
-                    or "DiscussionForumPosting" in el.attrib.get("itemtype", "")
-                    or "discourse" in el.attrib.get("id", "")):
-                s_forum = True
-            if not s_docs_nav and (
-                    "docs-sidebar" in cls or "doc-nav" in cls
-                    or "toc" in cls):
-                s_docs_nav = True
-            if not s_product and (
-                    "add-to-cart" in cls
-                    or "add-to-cart" in el.attrib.get("id", "")
-                    or "product-price" in cls):
-                s_product = True
-            if tag == "code":
-                # 'pre code' descendant semantics, not just direct child
-                anc = el.parent
-                while anc is not None:
-                    if anc.tag == "pre":
-                        s_n_code += 1
-                        break
-                    anc = anc.parent
 
         if tag == "p":
             ps.append(el)
@@ -710,13 +676,6 @@ def extract_ml_features(
                     card_set.add(id(el))
                 if m & _F_PRICE:
                     price_els.append(el)
-
-    if collect_signals:
-        _signals_out["og_type"] = og_type
-        _signals_out["forum"] = s_forum
-        _signals_out["docs_nav"] = s_docs_nav
-        _signals_out["product"] = s_product
-        _signals_out["n_code"] = s_n_code
 
     # ---- features from the collected pass ------------------------------------
     p_texts = [p.text_content() for p in ps]

@@ -16,7 +16,7 @@ from dataclasses import dataclass
 from typing import Optional
 from urllib.parse import urlparse
 
-from ..dom import Document, select
+from ..dom import Document, select, select_first
 
 ARTICLE = "article"
 FORUM = "forum"
@@ -143,37 +143,17 @@ def _classify_url_parts(host: str, path: str, path_q: str) -> Optional[str]:
     return None
 
 
-# the keys extract_ml_features(_signals_out=...) fills for stage 2
-WALK_SIGNAL_KEYS = frozenset({"og_type", "forum", "docs_nav", "product",
-                              "n_code"})
-
-
-def refine_with_html_signals(doc: Document, url_type: Optional[str],
-                             _walk_signals: Optional[dict] = None
+def refine_with_html_signals(doc: Document, url_type: Optional[str]
                              ) -> tuple[str, float]:
     """Stage 2 HTML signals + agreement logic (page_type/mod.rs:728-793,
-    extract.rs:55-92 condensed).  Returns (page_type, confidence).
-    ``_walk_signals`` is classify_page's hand-off of the og:type and the
-    four walk-derived markers already gathered by the ml feature walk
-    (same document order, same substring probes) — it skips this
-    function's own tree walk, nothing else; the signal-accumulation
-    order below (and with it the max() tie-break) is unchanged."""
+    extract.rs:55-92 condensed).  Returns (page_type, confidence).  The
+    og:type, JSON-LD types, attribute markers and ``pre code`` count are
+    each read with one selector probe; signals accumulate in that order,
+    which fixes the max() tie-break."""
     signals: dict[str, float] = {}
 
-    if _walk_signals is not None:
-        missing = WALK_SIGNAL_KEYS.difference(_walk_signals)
-        if missing:
-            raise ValueError(
-                "page-type signal hand-off is missing "
-                f"{sorted(missing)}: extract_ml_features returned before "
-                "filling _signals_out"
-            )
-        og_type = _walk_signals["og_type"]
-    else:
-        og_type = ""
-        for m in select(doc.root, "meta[property='og:type']"):
-            og_type = (m.get("content") or "").lower()
-            break
+    og = select_first(doc.root, "meta[property='og:type']")
+    og_type = (og.get("content") or "").lower() if og is not None else ""
     if og_type == "article":
         signals[ARTICLE] = signals.get(ARTICLE, 0) + 2
     elif og_type in ("product", "og:product"):
@@ -192,52 +172,17 @@ def refine_with_html_signals(doc: Document, url_type: Optional[str],
             elif t in ("itemlist", "collectionpage"):
                 signals[CATEGORY] = signals.get(CATEGORY, 0) + 1
 
-    # forum / docs / product attribute markers + code-block count, gathered
-    # in ONE walk (semantics identical to the previous [attr*=] selector
-    # probes — substring on the raw attribute value)
-    if _walk_signals is not None:
-        has_forum_marker = _walk_signals["forum"]
-        has_docs_nav = _walk_signals["docs_nav"]
-        has_product_marker = _walk_signals["product"]
-        n_code = _walk_signals["n_code"]
-    else:
-        has_forum_marker = has_docs_nav = has_product_marker = False
-        n_code = 0
-        for el in doc.root.iterdesc():
-            attrib = el.attrib
-            cls = attrib.get("class", "")
-            if not has_forum_marker:
-                if ("DiscussionForumPosting" in attrib.get("itemtype", "")
-                        or "post-stream" in cls
-                        or "discourse" in attrib.get("id", "")):
-                    has_forum_marker = True
-            if not has_docs_nav:
-                if "docs-sidebar" in cls or "doc-nav" in cls or "toc" in cls:
-                    has_docs_nav = True
-            if not has_product_marker:
-                if ("add-to-cart" in cls
-                        or "add-to-cart" in attrib.get("id", "")
-                        or "product-price" in cls):
-                    has_product_marker = True
-            if el.tag == "code":
-                # 'pre code' descendant semantics, not just direct child
-                anc = el.parent
-                while anc is not None:
-                    if anc.tag == "pre":
-                        n_code += 1
-                        break
-                    anc = anc.parent
-    if has_forum_marker:
+    # forum / docs / product attribute markers + code-block count
+    if select_first(doc.root, "[itemtype*='DiscussionForumPosting'], "
+                    "[class*='post-stream'], [id*='discourse']") is not None:
         signals[FORUM] = signals.get(FORUM, 0) + 3
-
-    # docs markers: code blocks + docs nav
-    if n_code >= 3:
+    if len(select(doc.root, "pre code")) >= 3:
         signals[DOCUMENTATION] = signals.get(DOCUMENTATION, 0) + 2
-    if has_docs_nav:
+    if select_first(doc.root, "[class*='docs-sidebar'], [class*='doc-nav'], "
+                    "[class*='toc']") is not None:
         signals[DOCUMENTATION] = signals.get(DOCUMENTATION, 0) + 1
-
-    # product markers
-    if has_product_marker:
+    if select_first(doc.root, "[class*='add-to-cart'], [id*='add-to-cart'], "
+                    "[class*='product-price']") is not None:
         signals[PRODUCT] = signals.get(PRODUCT, 0) + 2
 
     html_type = max(signals, key=signals.get) if signals else None
@@ -295,15 +240,10 @@ def classify_page(doc: Document, url: Optional[str]) -> tuple[str, float]:
         url_type = None
     # model_only skips feature blocks no shipped tree splits on — the
     # classification result is bit-identical (ml_features.model_only_ok
-    # guards against a retrained model reading a skipped index).  The
-    # feature walk doubles as stage 2's signal walk (_signals_out), so
-    # classification costs ONE full-tree walk, not two.
-    sig: dict = {}
+    # guards against a retrained model reading a skipped index)
     features = extract_ml_features(doc, url or "", model_only=True,
-                                   _url_parts=(url_lower, host, path),
-                                   _signals_out=sig)
-    refined, _heur_conf = refine_with_html_signals(doc, url_type,
-                                                   _walk_signals=sig)
+                                   _url_parts=(url_lower, host, path))
+    refined, _heur_conf = refine_with_html_signals(doc, url_type)
     ml_type, ml_conf = classify_ml(features)
     if url_type is not None and url_type != ARTICLE and ml_type == url_type:
         return url_type, 1.0

@@ -3,12 +3,12 @@ checkpoint with per-partition lineage + metrics").
 
 Work is split into deterministic chunks by ``pmod(xxhash64(url), n_chunks)``.
 Each chunk is written to ``<output>/chunk=<k>/`` and, on success, a manifest
-line (chunk id, input fingerprint, row count, per-stage counters, wall time)
-is appended atomically to ``_manifest/chunk-<k>.json``.  On restart the
-driver lists completed chunk ids and anti-joins them away — equivalently a
-left anti-join against the done set (SURVEY.md §2.3) — so only unfinished
-chunks re-run.  At cluster scale chunks map to Iceberg partition writes; on
-parquet the mechanism is identical.
+line (chunk id, input fingerprint, row count, per-stage counters, wall time,
+Options digest) is appended atomically to ``_manifest/chunk-<k>.json``.  On
+restart the driver lists completed chunk ids and anti-joins them away —
+equivalently a left anti-join against the done set (SURVEY.md §2.3) — so
+only unfinished chunks re-run.  At cluster scale chunks map to Iceberg
+partition writes; on parquet the mechanism is identical.
 
 One Spark job per chunk: the manifest's numbers are computed inside the
 write job by ``DataFrame.observe`` on the extracted frame — no re-read of
@@ -21,6 +21,8 @@ the output row count equal the input fingerprint and input row count.
 
 from __future__ import annotations
 
+import dataclasses
+import hashlib
 import json
 import os
 import time
@@ -83,6 +85,13 @@ def _manifest_metrics() -> list:
     ]
 
 
+def _options_digest(options: Options) -> str:
+    """sha256 over every Options field: chunks extracted under other
+    options must not be resumed."""
+    fields = json.dumps(dataclasses.asdict(options), sort_keys=True)
+    return hashlib.sha256(fields.encode()).hexdigest()
+
+
 def run_extraction_checkpointed(
     spark: SparkSession,
     pages: DataFrame,
@@ -96,7 +105,7 @@ def run_extraction_checkpointed(
 
     The chunk column is a pure function of url, so a restarted run assigns
     identical chunks — provided n_chunks is unchanged, which is enforced
-    against the manifest. ``verify_input_fingerprint=True`` additionally
+    against the manifest, as is a digest of the Options. ``verify_input_fingerprint=True`` additionally
     recomputes each skipped chunk's url-fingerprint and refuses to skip a
     chunk whose input changed (costs one extra scan of the skipped rows;
     off by default since at scale resume exists to avoid rescans).
@@ -109,9 +118,12 @@ def run_extraction_checkpointed(
     )
     chunked = pages.withColumn("_chunk", chunk_expr)
     done = completed_chunks(output_path)
+    options_digest = _options_digest(options)
     # Chunk ids are only meaningful for the n_chunks they were computed
     # with: resuming a k=8 run with k=16 would silently skip half of every
-    # old chunk and re-extract the rest. Refuse instead of corrupting.
+    # old chunk and re-extract the rest. Chunks extracted under other
+    # Options hold other output. Refuse both instead of corrupting;
+    # entries written before a key existed resume.
     for k, entry in done.items():
         prev = entry.get("n_chunks")
         if prev is not None and prev != n_chunks:
@@ -120,6 +132,14 @@ def run_extraction_checkpointed(
                 f"refusing to resume with n_chunks={n_chunks}; "
                 "delete the manifest (full restart) or rerun with the "
                 "original chunk count"
+            )
+        prev = entry.get("options_digest")
+        if prev is not None and prev != options_digest:
+            raise ValueError(
+                f"manifest chunk {k} was written with other Options "
+                f"(digest {prev}, now {options_digest}), refusing to "
+                "resume; delete the manifest (full restart) or rerun "
+                "with the original Options"
             )
     summary = {"chunks_total": n_chunks, "chunks_skipped": len(done),
                "chunks_run": 0, "rows_written": 0}
@@ -170,7 +190,7 @@ def run_extraction_checkpointed(
             "input_fingerprint": str(metrics["fingerprint"]),
             "stages": stage_counts,
             "wall_time_sec": round(time.time() - t0, 3),
-            "options_dedup": options.deduplicate,
+            "options_digest": options_digest,
         })
         summary["chunks_run"] += 1
         summary["rows_written"] += n_rows

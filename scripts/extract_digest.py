@@ -73,25 +73,18 @@ def option_sets():
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--tree", default=HERE,
-                    help="checkout whose rs_trafilatura_spark is run "
-                         "(default: the one holding this script)")
-    args = ap.parse_args()
-    sys.path.insert(0, os.path.abspath(args.tree))
-
+def digests(page_set: list, n_generated: int):
+    """Extract every page under every option set.  Returns the sha256 hex
+    digest over all results, the one over the results of the first
+    ``n_generated`` pages only, and the count of results per stage."""
     from dataclasses import replace
 
     from rs_trafilatura_spark.kernel.extract import extract_bytes
 
-    generated, cached = pages(os.path.join(HERE, ".perfbench", "inputs"))
-    page_set = generated + cached
     digest = hashlib.sha256()
     generated_digest = hashlib.sha256()
     stages: collections.Counter = collections.Counter()
-    opt_sets = option_sets()
-    for opts in opt_sets:
+    for opts in option_sets():
         for i, (url, html) in enumerate(page_set):
             try:
                 result = extract_bytes(html, replace(opts, url=url))
@@ -101,13 +94,27 @@ def main() -> None:
             line = json.dumps(result, sort_keys=True, default=str,
                               ensure_ascii=False).encode() + b"\n"
             digest.update(line)
-            if i < len(generated):
+            if i < n_generated:
                 generated_digest.update(line)
             stages[result["stage"]] += 1
-    print(f"sha256 {digest.hexdigest()}  "
+    return digest.hexdigest(), generated_digest.hexdigest(), stages
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--tree", default=HERE,
+                    help="checkout whose rs_trafilatura_spark is run "
+                         "(default: the one holding this script)")
+    args = ap.parse_args()
+    sys.path.insert(0, os.path.abspath(args.tree))
+
+    generated, cached = pages(os.path.join(HERE, ".perfbench", "inputs"))
+    page_set = generated + cached
+    digest, generated_digest, stages = digests(page_set, len(generated))
+    print(f"sha256 {digest}  "
           f"({sum(stages.values())} results, {len(page_set)} pages)")
-    print(f"sha256 {generated_digest.hexdigest()}  "
-          f"({len(opt_sets) * len(generated)} results, "
+    print(f"sha256 {generated_digest}  "
+          f"({len(option_sets()) * len(generated)} results, "
           f"{len(generated)} generated pages only)")
     for stage, n in sorted(stages.items()):
         print(f"  {stage:20s} {n}")

@@ -322,19 +322,7 @@ def test_attributed_desc_list_and_attr_selector_gating():
         ["a", "span", "time", "i"]
 
 
-def _digest_option_sets():
-    """The four option sets of scripts/extract_digest.py."""
-    import importlib.util
-    import pathlib
-
-    path = pathlib.Path(__file__).parents[1] / "scripts" / "extract_digest.py"
-    spec = importlib.util.spec_from_file_location("extract_digest", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.option_sets()
-
-
-def test_kernel_selectors_match_reference_scan(monkeypatch):
+def test_kernel_selectors_match_reference_scan(monkeypatch, extract_digest):
     """Every selector the kernel hands iter_select, on the generated
     fixture pages and large pages under the digest's option sets, selects
     exactly the elements (in document order) that a brute-force
@@ -362,7 +350,7 @@ def test_kernel_selectors_match_reference_scan(monkeypatch):
         return orig(root, selector)
 
     monkeypatch.setattr(S, "iter_select", recording)
-    for opts in _digest_option_sets():
+    for opts in extract_digest.option_sets():
         for url, html in pages:
             extract_bytes(html, replace(opts, url=url))
     monkeypatch.undo()

@@ -471,3 +471,16 @@ def test_target_language_region_tag_is_one_language():
         assert r["stage"] == "main", target
         assert "English content" in r["content_text"]
         assert not [w for w in r["warnings"] if "does not match" in w], target
+
+
+def test_generated_pages_digest(extract_digest, tmp_path):
+    """Byte identity of the kernel: the generated pages of
+    scripts/extract_digest.py, under its four option sets, hash to the
+    script's pinned generated-pages digest.  A change to any extraction
+    result changes it."""
+    generated, cached = extract_digest.pages(str(tmp_path))
+    assert cached == []
+    _, digest, stages = extract_digest.digests(generated, len(generated))
+    assert sum(stages.values()) == 4 * len(generated) == 9624
+    assert digest == (
+        "d0e1e222ae4ab454e8ffe9e11033a6b3953f5b2c558f71fd5d2c04427f9856fe")

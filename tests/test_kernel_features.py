@@ -256,12 +256,13 @@ def test_ml_feature_size_guard():
     assert f[58] > 500_000 and f[63] == 0.0 and f[75] == 0.0
 
 
-def test_metadata_index_buckets_match_selector_scans():
-    """_tag_index's reserved \\0-buckets (date/author/license candidates)
-    must yield the same metadata as the functions' own selector scans,
-    for every attribute family the buckets replace."""
-    import rs_trafilatura_spark.kernel.metadata as M
+def test_metadata_dom_fallback_values():
+    """The date / author / license that extract_metadata finds through
+    the DOM fallback selectors, for every attribute family they probe."""
+    from datetime import datetime
+
     from rs_trafilatura_spark.dom import Document
+    from rs_trafilatura_spark.kernel.metadata import extract_metadata
 
     cases = [
         "<html><body><span class='post-date'>January 5, 2021</span></body></html>",
@@ -295,12 +296,29 @@ def test_metadata_index_buckets_match_selector_scans():
         "<time itemprop='datePublished'>2001-02-03</time>"
         "<div class='byline'>A B</div><a rel='author'>C D</a></body></html>",
     ]
-    for html in cases:
-        doc = Document(html)
-        idx = M._tag_index(doc)
-        for fn in (M._date_from_dom, M._author_from_dom, M._license_from_dom):
-            with_idx: dict = {}
-            with_select: dict = {}
-            fn(doc, with_idx, idx)
-            fn(doc, with_select, None)
-            assert with_idx == with_select, (html, fn.__name__)
+    # (date, author, license); a CC link's href is not footer text, so
+    # the two footer-anchor cases find no license
+    want = [
+        (datetime(2021, 1, 5), None, None),
+        (datetime(2020, 3, 4), None, None),
+        (datetime(2019, 7, 8), None, None),
+        (datetime(2018, 1, 2), None, None),
+        (None, "Jane Roe", None),
+        (None, "Sam Poe", None),
+        (None, "Max Moe", None),
+        (None, "Kim Doe", None),
+        (None, None, None),
+        (None, None, None),
+        (None, None, None),
+        (None, None, "CC BY-NC"),
+        (None, None, "CC BY-ND"),
+        (None, None, "CC ZERO"),
+        (None, None, None),
+        (None, None, "CC BY"),
+        (datetime(2001, 2, 3), "A B", None),
+    ]
+    assert len(cases) == len(want)
+    for html, expected in zip(cases, want):
+        meta = extract_metadata(Document(html))
+        got = (meta.get("date"), meta.get("author"), meta.get("license"))
+        assert got == expected, html

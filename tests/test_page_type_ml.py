@@ -75,11 +75,10 @@ def test_tree_trainer_deterministic_and_vectorized():
     assert np.allclose(one, tree_predict_proba(m1["trees"][0], X[:20]))
 
 
-def test_fused_signal_walk_matches_refines_own_walk():
-    """classify_page hands refine_with_html_signals the markers gathered
-    by the ml feature walk (_signals_out) — the fused path must agree
-    with refine's own tree walk on every marker family and og:type
-    shape, for every url_type branch of the agreement logic."""
+def test_html_signals_table():
+    """refine_with_html_signals' (page_type, confidence) for every marker
+    family and og:type shape, under every url_type branch of the
+    agreement logic."""
     from rs_trafilatura_spark.kernel.page_type import refine_with_html_signals
 
     cases = [
@@ -111,31 +110,29 @@ def test_fused_signal_walk_matches_refines_own_walk():
         # no markers at all
         "<html><body><p>nothing special</p></body></html>",
     ]
-    for html in cases:
-        for ut in (None, "article", "product", "forum", "documentation"):
-            doc = Document(html)
-            expected = refine_with_html_signals(doc, ut)
-            sig: dict = {}
-            extract_ml_features(doc, "", model_only=True, _signals_out=sig)
-            fused = refine_with_html_signals(doc, ut, _walk_signals=sig)
-            assert fused == expected, (html, ut, sig)
-
-
-def test_signal_hand_off_checks_its_keys():
-    """A partially filled hand-off fails at refine_with_html_signals with
-    the missing keys named, and a full one carries exactly the keys
-    extract_ml_features fills."""
-    from rs_trafilatura_spark.kernel.page_type import (
-        WALK_SIGNAL_KEYS, refine_with_html_signals,
-    )
-
-    doc = Document("<html><body><p>x</p></body></html>")
-    sig: dict = {}
-    extract_ml_features(doc, "", model_only=True, _signals_out=sig)
-    assert set(sig) == WALK_SIGNAL_KEYS
-    del sig["n_code"]
-    with pytest.raises(ValueError, match="n_code"):
-        refine_with_html_signals(doc, None, _walk_signals=sig)
+    url_types = (None, "article", "product", "forum", "documentation")
+    forum = [("forum", 0.7), ("forum", 0.95), ("forum", 0.95),
+             ("forum", 1.0), ("forum", 0.95)]
+    product = [("product", 0.7), ("product", 0.95), ("product", 1.0),
+               ("product", 0.95), ("product", 0.95)]
+    want = [
+        forum,
+        forum,
+        forum,
+        [("documentation", 0.7), ("article", 0.8), ("product", 0.8),
+         ("forum", 0.8), ("documentation", 1.0)],
+        product,
+        product,
+        [("product", 0.7), ("article", 0.8), ("product", 1.0),
+         ("forum", 0.8), ("documentation", 0.8)],
+        [("article", 0.5), ("article", 0.8), ("product", 0.8),
+         ("forum", 0.8), ("documentation", 0.8)],
+    ]
+    assert len(cases) == len(want)
+    for html, expected in zip(cases, want):
+        got = [refine_with_html_signals(Document(html), ut)
+               for ut in url_types]
+        assert got == expected, html
 
 
 def test_marker_tables_refuse_empty_markers():

@@ -3,6 +3,9 @@
 per-family metadata assertions and checkpoint/resume behavior.
 """
 
+import dataclasses
+import hashlib
+import json
 import os
 
 import pytest
@@ -235,6 +238,36 @@ def test_checkpoint_refuses_n_chunks_mismatch(spark, tmp_path):
         run_extraction_checkpointed(spark, pages, out_dir, OPTS, n_chunks=4)
 
 
+def test_checkpoint_refuses_options_mismatch(spark, tmp_path):
+    """A resume under changed Options is refused; the same Options skip
+    every chunk; manifest entries without an Options digest (written
+    before it existed) still resume."""
+    from rs_trafilatura_spark.sources import run_extraction_checkpointed
+
+    out_dir = str(tmp_path / "out")
+    pages = generate_pages_df(spark, 20)
+    run_extraction_checkpointed(spark, pages, out_dir, OPTS, n_chunks=2)
+    changed = Options(deduplicate=True, output_markdown=True)
+    with pytest.raises(ValueError, match="Options"):
+        run_extraction_checkpointed(spark, pages, out_dir, changed,
+                                    n_chunks=2)
+    same = run_extraction_checkpointed(spark, pages, out_dir, OPTS,
+                                       n_chunks=2)
+    assert same["chunks_skipped"] == 2 and same["chunks_run"] == 0
+
+    mdir = os.path.join(out_dir, "_manifest")
+    for name in os.listdir(mdir):
+        path = os.path.join(mdir, name)
+        with open(path) as f:
+            entry = json.load(f)
+        del entry["options_digest"]
+        with open(path, "w") as f:
+            json.dump(entry, f)
+    old = run_extraction_checkpointed(spark, pages, out_dir, changed,
+                                      n_chunks=2)
+    assert old["chunks_skipped"] == 2 and old["chunks_run"] == 0
+
+
 def test_checkpoint_fingerprint_verify_detects_changed_input(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
@@ -313,7 +346,9 @@ def test_checkpoint_one_job_per_chunk_same_manifest(spark, tmp_path):
             "chunk_id": k, "n_chunks": n_chunks,
             "rows": sum(stages.values()), "input_rows": fp["n"],
             "input_fingerprint": str(fp["f"]), "stages": stages,
-            "options_dedup": OPTS.deduplicate,
+            "options_digest": hashlib.sha256(json.dumps(
+                dataclasses.asdict(OPTS), sort_keys=True).encode()
+            ).hexdigest(),
         }
         got = {key: v for key, v in entry.items() if key != "wall_time_sec"}
         assert got == want, k
