@@ -15,11 +15,15 @@ PySpark's ``setup_spark_files``, which ends in
 archive.  There is one importer per imported package directory, 22-23 in
 all over ``pyspark.zip``, the shipped package zip, py4j and the
 spark-core jar, and together they cost 0.18-0.27 CPU-s per task (4-CPU
-x86 VM) — about half of the workers' CPU on small-page jobs.  The kernel
-closure therefore starts with ``pin_zip_importers()``: on a worker it
-swaps those importers for a subclass whose ``invalidate_caches()`` keeps
-the directory it already read (the archives never change while a worker
-lives), which cuts that step to ~0.1 ms.
+x86 VM) — about half of the workers' CPU on small-page jobs.  Every
+kernel closure and every scan closure (sources/fastscan.py ``scan_bins``,
+streaming/pipeline.py ``read_warc_stream``) therefore starts with
+``pin_zip_importers()``: on a worker it swaps those importers for a
+subclass whose ``invalidate_caches()`` keeps the directory it already
+read (the archives never change while a worker lives), which cuts that
+step to ~0.1 ms.  The file-bin scan plan's leaf is a JVM ``Range``, so
+it runs no Python of its own: a scan task starts one Python worker, the
+one that scans, not a second one to read a row of bin paths.
 
 Distribution concerns are explicit and DataFrame-native:
 

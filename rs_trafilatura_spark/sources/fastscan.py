@@ -18,11 +18,15 @@ with OUTPUT_SCHEMA; everything downstream (stage metrics, curation,
 checkpointing) composes unchanged.
 
 The file-bin scan is shared with the WARC source (sources/warc.py):
-``scan_bins`` is the one bin plan (list files -> ``pack_bins`` -> one
-``paths`` row per bin, one bin per partition -> a per-task scan over the
-bin's files), and ``extract_scanned`` runs the kernel closure on a scan's
-output.  ``extract_from_parquet``, ``read_warc`` and ``extract_from_warc``
-are each one ``scan_bins`` call.
+``scan_bins`` is the one bin plan (list files -> ``pack_bins`` ->
+``spark.range`` with one bin id per partition -> a per-task scan over
+that bin's files), and ``extract_scanned`` runs the kernel closure on a
+scan's output.  ``extract_from_parquet``, ``read_warc`` and
+``extract_from_warc`` are each one ``scan_bins`` call.  The plan's leaf
+is a JVM ``Range``: the bins ride in the task function's closure, so
+the only Python worker a task starts is the one that scans (and
+extracts), and it pins its zip importers first (plans/job.py
+``pin_zip_importers``).
 
 Scale notes (100 TB):
 - Tasks are file-granular, bin-packed by file size on the driver —
@@ -30,11 +34,14 @@ Scale notes (100 TB):
   byte-balanced the same way byte-bounded JVM splits would be.  Row-group
   granularity could be added with ``ParquetFile.metadata`` if single files
   ever dominate a bin.
+- The bins are pickled with the task function, once per stage.  Above
+  1 MB (about 10k file URIs) PySpark ships that command as a broadcast,
+  so 100k files cost one broadcast, not 100k copies in task payloads.
 - Predicate pushdown is irrelevant on this path (extraction reads every
   page); column pruning is explicit via ``columns=[...]``.
 - Object-store URIs (s3://...) resolve through ``pyarrow.fs`` — the same
   FileSystem machinery Arrow-native engines use; local file:// URIs from
-  ``DataFrame.inputFiles()`` are handled directly.
+  ``DataFrame.inputFiles()`` are percent-decoded and read directly.
 - The kernel closure is the SAME Arrow-batched function the DataFrame
   path uses (plans/job.py), so results are bit-identical regardless of
   which source fed them (pinned by tests/test_fastscan.py).
@@ -44,12 +51,12 @@ from __future__ import annotations
 
 import os
 from typing import Optional
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..options import DEFAULT_OPTIONS, Options
-from ..plans.job import make_extract_arrow_batches
+from ..plans.job import make_extract_arrow_batches, pin_zip_importers
 from ..plans.schema import OUTPUT_SCHEMA, PAGE_COLUMNS
 
 # rows per kernel batch: large pages (~300 KB) => ~80 MB of HTML per batch
@@ -57,10 +64,13 @@ ROWS_PER_BATCH = 256
 
 
 def _local_path(uri: str) -> Optional[str]:
-    """file:// URI or bare path -> filesystem path; None for remote URIs."""
+    """file:// URI (percent-encoded, as ``inputFiles()`` gives it) or bare
+    path -> filesystem path; None for remote URIs."""
     parsed = urlparse(uri)
-    if parsed.scheme in ("", "file"):
-        return parsed.path or uri
+    if parsed.scheme == "file":
+        return unquote(parsed.path)
+    if parsed.scheme == "":
+        return uri
     return None
 
 
@@ -99,24 +109,30 @@ def scan_bins(spark: SparkSession, files: list[tuple[str, int]], scan,
               target_partitions: Optional[int] = None) -> DataFrame:
     """The file-bin scan plan shared by the parquet and WARC sources:
     ``files`` ([(uri, bytes)]) are LPT-packed by ``pack_bins`` into at
-    most ``target_partitions`` bins (default: the default parallelism),
-    one ``paths`` row per bin and one bin per partition; each task calls
-    ``scan`` on an iterator over its bin's files and yields its Arrow
-    batches of ``schema``."""
+    most ``target_partitions`` bins (default: the default parallelism).
+    ``spark.range`` gives exactly one bin id per partition, so the plan
+    is made in the JVM and reading it runs no Python; the bins ride in
+    the task function's closure (broadcast by PySpark above 1 MB, see the
+    module docstring).  Each task calls ``scan`` on an iterator over its
+    bin's files and yields its Arrow batches of ``schema``."""
     if target_partitions is None:
         target_partitions = spark.sparkContext.defaultParallelism
     bins = pack_bins(files, target_partitions)
-    # numSlices == len(bins): parallelize slices evenly, giving each task
-    # exactly its planned byte load with no shuffle
-    rdd = spark.sparkContext.parallelize([(b,) for b in bins], len(bins))
-    plan = spark.createDataFrame(rdd, T.StructType(
-        [T.StructField("paths", T.ArrayType(T.StringType()), False)]))
+    return (spark.range(0, len(bins), 1, len(bins))
+            .mapInArrow(_bin_task(bins, scan), schema=schema))
+
+
+def _bin_task(bins: list[list[str]], scan):
+    """The ``scan_bins`` task function: batches of bin ids -> ``scan``
+    over those bins' files.  It pins the worker's zip importers first, as
+    the kernel closure does (plans/job.py)."""
 
     def run_scan(batches):
+        pin_zip_importers()
         yield from scan(uri for batch in batches
-                        for row in batch.column(0).to_pylist() for uri in row)
+                        for i in batch.column(0).to_pylist() for uri in bins[i])
 
-    return plan.mapInArrow(run_scan, schema=schema)
+    return run_scan
 
 
 def extract_scanned(scan, options: Options):

@@ -14,11 +14,14 @@ yield.
 
 from __future__ import annotations
 
+import io
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..options import DEFAULT_OPTIONS, Options
-from ..plans.job import make_extract_arrow_batches
+from ..plans.job import make_extract_arrow_batches, pin_zip_importers
 from ..plans.schema import OUTPUT_SCHEMA, PAGE_COLUMNS, PAGES_SCHEMA
+from ..sources.warc import _archive_records, _records_to_batches
 
 
 def read_pages_stream(spark: SparkSession, input_path: str) -> DataFrame:
@@ -112,8 +115,6 @@ def read_warc_stream(spark: SparkSession, input_path: str) -> DataFrame:
     limit, and the parse itself streams record-by-record).  Malformed
     records are skipped, never raised, so one truncated upload cannot
     wedge the stream."""
-    from ..sources.warc import _archive_records, _records_to_batches
-
     raw = (
         spark.readStream.format("binaryFile")
         .schema("path STRING, modificationTime TIMESTAMP, "
@@ -122,17 +123,20 @@ def read_warc_stream(spark: SparkSession, input_path: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .load(input_path)
     )
+    return raw.select("content").mapInArrow(_parse_archives,
+                                            schema=PAGES_SCHEMA)
 
-    def parse(batches):
-        import io
 
-        archives = (
-            io.BufferedReader(io.BytesIO(content.as_py()))
-            for batch in batches for content in batch.column(0)
-        )
-        yield from _records_to_batches(_archive_records(archives))
-
-    return raw.select("content").mapInArrow(parse, schema=PAGES_SCHEMA)
+def _parse_archives(batches):
+    """``read_warc_stream``'s task function: batches of archive bytes ->
+    PAGES_SCHEMA batches.  It pins the worker's zip importers first, as
+    the kernel closure does (plans/job.py)."""
+    pin_zip_importers()
+    archives = (
+        io.BufferedReader(io.BytesIO(content.as_py()))
+        for batch in batches for content in batch.column(0)
+    )
+    yield from _records_to_batches(_archive_records(archives))
 
 
 def run_warc_stream_to_memory(spark: SparkSession, input_path: str,

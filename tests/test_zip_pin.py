@@ -1,7 +1,7 @@
 """pin_zip_importers: on a Python worker, importlib.invalidate_caches() must
 stop re-reading the zip archives on sys.path, and later imports from those
-archives must still resolve.  Runs without Spark: the worker flag is set by
-hand."""
+archives must still resolve; the scan task functions pin as the kernel
+closure does.  Runs without Spark: the worker flag is set by hand."""
 
 import importlib
 import sys
@@ -12,6 +12,8 @@ import pytest
 from pyspark.core.files import SparkFiles
 
 from rs_trafilatura_spark.plans.job import pin_zip_importers
+from rs_trafilatura_spark.sources.fastscan import _bin_task
+from rs_trafilatura_spark.streaming.pipeline import _parse_archives
 
 PKG = "zip_pin_probe_pkg"
 
@@ -75,3 +77,17 @@ def test_pin_is_a_no_op_outside_a_worker(zipped_pkg, monkeypatch):
     reads = _count_reads(monkeypatch)
     importlib.invalidate_caches()
     assert reads
+
+
+@pytest.mark.parametrize("task", [_bin_task([["a.parquet"]], iter),
+                                  _parse_archives],
+                         ids=["scan_bins", "read_warc_stream"])
+def test_scan_task_functions_pin(zipped_pkg, monkeypatch, task):
+    """A scan task function pins before it scans: a worker that runs no
+    kernel closure is pinned too."""
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+    reads = _count_reads(monkeypatch)
+    assert list(task(iter([]))) == []
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads == []
