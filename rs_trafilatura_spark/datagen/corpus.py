@@ -70,8 +70,8 @@ _SECTION = {
 }
 
 
-def _sentence(rnd: random.Random, lo: int = 8, hi: int = 14) -> str:
-    n = rnd.randint(lo, hi)
+def _sentence(rnd: random.Random) -> str:
+    n = rnd.randint(8, 14)
     words = [rnd.choice(_WORDS) for _ in range(n)]
     words[0] = words[0].capitalize()
     return " ".join(words) + "."
@@ -565,16 +565,16 @@ def _corpus_schema():
     return T.StructType(fields)
 
 
-def generate_pages_df(spark, n_rows: int, seed: int = 42):
-    """Spark DataFrame in exactly the input_hint shape (BASELINE.json)."""
+def generate_pages_df(spark, n_rows: int):
+    """Spark DataFrame in exactly the input_hint shape (BASELINE.json):
+    the first ``n_rows`` pages of seed 42."""
     schema = _corpus_schema()
-    rows = [
-        tuple(r[c] for c in schema.names) for r in generate_rows(n_rows, seed)
-    ]
+    rows = [tuple(r[c] for c in schema.names) for r in generate_rows(n_rows)]
     return spark.createDataFrame(rows, schema)
 
 
-def generate_expected_meta_df(spark, n_rows: int, seed: int = 42):
+def generate_expected_meta_df(spark, n_rows: int):
+    """The ground-truth metadata of ``generate_pages_df``'s pages."""
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -589,7 +589,7 @@ def generate_expected_meta_df(spark, n_rows: int, seed: int = 42):
         T.StructField("exp_stage", T.StringType(), True),
     ])
     cols = [f.name for f in schema.fields]
-    rows = [tuple(r[c] for c in cols) for r in generate_rows(n_rows, seed)]
+    rows = [tuple(r[c] for c in cols) for r in generate_rows(n_rows)]
     return spark.createDataFrame(rows, schema)
 
 

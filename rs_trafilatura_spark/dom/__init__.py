@@ -37,20 +37,5 @@ class Document:
         return el if el is not None else self.root
 
     @property
-    def head(self) -> Optional[Element]:
-        return self.root.find("head")
-
-    @property
     def html_el(self) -> Optional[Element]:
         return self.root.find("html")
-
-    def select(self, selector: str) -> list[Element]:
-        return select(self.root, selector)
-
-    def select_first(self, selector: str) -> Optional[Element]:
-        return select_first(self.root, selector)
-
-    def copy(self) -> "Document":
-        new = Document.__new__(Document)
-        new.root = self.root.copy()
-        return new

@@ -98,23 +98,9 @@ class Element:
         child.parent = self
         self.children.append(child)
 
-    def insert(self, idx: int, child: "Element") -> None:
-        global _TREE_GEN
-        _TREE_GEN += 1
-        child.parent = self
-        self.children.insert(idx, child)
-
     # --- attributes --------------------------------------------------------
     def get(self, name: str, default: str = "") -> str:
         return self.attrib.get(name, default)
-
-    @property
-    def classes(self) -> list[str]:
-        return self.get("class").split()
-
-    @property
-    def id(self) -> str:
-        return self.get("id")
 
     # --- traversal ----------------------------------------------------------
     def iter(self, tag: Optional[str] = None) -> Iterator["Element"]:
@@ -211,9 +197,6 @@ class Element:
             return el
         return None
 
-    def findall(self, tag: str) -> list["Element"]:
-        return list(self.iter(tag))
-
     def next_element_sibling(self) -> Optional["Element"]:
         if self.parent is None:
             return None
@@ -225,22 +208,16 @@ class Element:
         return sibs[i + 1] if i + 1 < len(sibs) else None
 
     # --- text ----------------------------------------------------------------
-    def itertext(self, skip_tags: frozenset = frozenset()) -> Iterator[str]:
-        """All text content in document order (text + child subtrees + tails).
-        Iterative; ``skip_tags`` subtrees contribute no text (their tails,
-        which belong to the parent, still do)."""
+    def itertext(self) -> Iterator[str]:
+        """All text of the subtree in document order: each element's text,
+        then its children's subtrees, each followed by that child's tail.
+        Every tag contributes, script and style included.  Iterative."""
         # stack holds either Element (to open) or str (tail to emit)
-        if self.tag in skip_tags:
-            return
         stack: list = [self]
         while stack:
             item = stack.pop()
             if isinstance(item, str):
                 yield item
-                continue
-            if item is not self and item.tag in skip_tags:
-                if item.tail:
-                    yield item.tail
                 continue
             if item.text:
                 yield item.text
@@ -351,43 +328,8 @@ class Element:
     def rename(self, tag: str) -> None:
         self.tag = tag
 
-    # --- serialization -----------------------------------------------------------
-    def inner_html(self) -> str:
-        parts: list[str] = []
-        if self.text:
-            parts.append(escape_text(self.text))
-        for child in self.children:
-            parts.append(child.outer_html())
-            if child.tail:
-                parts.append(escape_text(child.tail))
-        return "".join(parts)
-
-    def outer_html(self) -> str:
-        attrs = "".join(
-            f' {k}="{escape_attr(v)}"' if v is not None else f" {k}"
-            for k, v in self.attrib.items()
-        )
-        if self.tag in VOID_TAGS:
-            return f"<{self.tag}{attrs}/>"
-        if self.tag in ("script", "style"):
-            # raw text, not escaped
-            return f"<{self.tag}{attrs}>{self.text}</{self.tag}>"
-        return f"<{self.tag}{attrs}>{self.inner_html()}</{self.tag}>"
-
-    def copy(self) -> "Element":
-        """Deep copy of the subtree (for the pre-cleaning backup clone,
-        reference extract.rs:113)."""
-        new = Element(self.tag, dict(self.attrib))
-        new.text = self.text
-        new.tail = self.tail
-        new._srcpos = self._srcpos
-        for child in self.children:
-            c = child.copy()
-            c.parent = new
-            new.children.append(c)
-        return new
-
     def __repr__(self) -> str:  # pragma: no cover
-        ident = f"#{self.id}" if self.id else ""
-        cls = "." + ".".join(self.classes) if self.classes else ""
+        ident = f"#{self.get('id')}" if self.get("id") else ""
+        classes = self.get("class").split()
+        cls = "." + ".".join(classes) if classes else ""
         return f"<Element {self.tag}{ident}{cls} children={len(self.children)}>"

@@ -251,10 +251,10 @@ def html_tree_to_markdown(root: Element, include_links: bool = True) -> str:
     return "\n\n".join(b for b in blocks if b).strip()
 
 
-def html_string_to_markdown(html: str, include_links: bool = True) -> str:
+def html_string_to_markdown(html: str) -> str:
     from ..dom import Document
 
-    return html_tree_to_markdown(Document(html).root, include_links)
+    return html_tree_to_markdown(Document(html).root)
 
 
 def _fmt_separator(width: int, align: str) -> str:

@@ -125,9 +125,9 @@ def extract_pdf_text(pdf: bytes) -> str:
     return "\n".join(lines)
 
 
-def build_simple_pdf(text: str, compress: bool = True) -> bytes:
+def build_simple_pdf(text: str) -> bytes:
     """A valid single-page PDF 1.4 whose text layer is ``text``, one Tj
-    per input line; Flate-compressed content stream by default so the
+    per input line; its content stream is Flate-compressed so the
     extractor's decompression path is exercised."""
     ops = ["BT", "/F1 11 Tf", "1 0 0 1 50 780 Tm", "13 TL"]
     for i, line in enumerate(text.split("\n")):
@@ -135,17 +135,13 @@ def build_simple_pdf(text: str, compress: bool = True) -> bytes:
             ops.append("T*")
         ops.append(f"({_escape(line)}) Tj")
     ops.append("ET")
-    content = "\n".join(ops).encode("latin-1", "replace")
-    filt = b""
-    if compress:
-        content = zlib.compress(content)
-        filt = b"/Filter /FlateDecode "
+    content = zlib.compress("\n".join(ops).encode("latin-1", "replace"))
     objs = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
         b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-        b"<< " + filt + b"/Length " + str(len(content)).encode()
+        b"<< /Filter /FlateDecode /Length " + str(len(content)).encode()
         + b" >>\nstream\n" + content + b"\nendstream",
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
     ]

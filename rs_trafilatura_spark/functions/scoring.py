@@ -22,28 +22,28 @@ def fscore(extracted: str, expected: str) -> tuple[float, float, float]:
     return precision, recall, f1
 
 
-def fscore_df(extracted_df, expected_df, text_col: str = "content_text",
-              expected_col: str = "text", key: str = "url"):
-    """Spark-native corpus F-score: join on key, token sets via
+def fscore_df(extracted_df, expected_df):
+    """Spark-native corpus F-score of ``extracted_df.content_text`` against
+    ``expected_df.text``: join on ``url``, token sets via
     split/array_distinct/array_intersect — no UDF."""
     from pyspark.sql import functions as F
 
-    got = F.array_distinct(F.split(F.lower(F.col(text_col)), r"\s+"))
-    want = F.array_distinct(F.split(F.lower(F.col(expected_col)), r"\s+"))
-    joined = extracted_df.select(key, text_col).join(
-        expected_df.select(key, expected_col), key
+    got = F.array_distinct(F.split(F.lower(F.col("content_text")), r"\s+"))
+    want = F.array_distinct(F.split(F.lower(F.col("text")), r"\s+"))
+    joined = extracted_df.select("url", "content_text").join(
+        expected_df.select("url", "text"), "url"
     )
     scored = joined.select(
-        key,
+        "url",
         F.size(F.array_intersect(got, want)).alias("tp"),
         F.size(got).alias("n_got"),
         F.size(want).alias("n_want"),
     ).select(
-        key,
+        "url",
         (F.col("tp") / F.greatest(F.col("n_got"), F.lit(1))).alias("precision"),
         (F.col("tp") / F.greatest(F.col("n_want"), F.lit(1))).alias("recall"),
     ).select(
-        key, "precision", "recall",
+        "url", "precision", "recall",
         F.when(
             (F.col("precision") + F.col("recall")) > 0,
             2 * F.col("precision") * F.col("recall")

@@ -13,6 +13,8 @@ lineage column (SURVEY.md §4.3).
 
 from __future__ import annotations
 
+import hashlib
+import re
 import sys
 from typing import Optional
 
@@ -21,9 +23,16 @@ from ..functions.textnorm import clean_text
 from ..functions.urlutils import extract_hostname
 from ..options import DEFAULT_OPTIONS, Options
 from .cleaning import doc_cleaning
-from .content_select import find_main_content_node
+from .content_select import (
+    find_content_node_bottom_up,
+    find_main_content_node,
+)
 from .dedup import LruCache, dedup_blocks
-from .fallback import baseline
+from .fallback import (
+    baseline,
+    candidate_is_usable,
+    extract_discourse_content,
+)
 from .metadata import (
     _norm_lang,
     extract_metadata,
@@ -42,9 +51,7 @@ def _ensure_recursion_limit() -> None:
         sys.setrecursionlimit(_MIN_RECURSION)
 
 
-import re as _re
-
-_TOKEN_RE = _re.compile(r"\S+")
+_TOKEN_RE = re.compile(r"\S+")
 
 
 def _count_words(text: str, min_length: int = 1) -> int:
@@ -130,8 +137,6 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
     jsonld_product = (
         find_jsonld_product_description(doc) if page_type == PRODUCT else None
     )
-    from .fallback import extract_discourse_content
-
     discourse_body = extract_discourse_content(doc)
 
     # 6. profile; forum comments become content (extract.rs:135-150)
@@ -200,8 +205,6 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
 
         # bottom-up Readability scorer (extract.rs:1431-1441)
         if len(text) < opts.min_extracted_len:
-            from .content_select import find_content_node_bottom_up
-
             bu = find_content_node_bottom_up(body)
             if bu is not None and bu is not content_node:
                 bu_text, bu_spans = run(bu)
@@ -251,8 +254,6 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
         )
     )
     if needs_fallback:
-        from .fallback import candidate_is_usable
-
         cand_text, cand_stage, cand_spans = baseline(backup_doc())
         if candidate_is_usable(
             len(cand_text), len(text), content_node,
@@ -443,8 +444,6 @@ def extract(html: str, opts: Options = DEFAULT_OPTIONS) -> dict:
 
     # content fingerprint (result.rs:122 declares it; engine fills it:
     # md5 of the text — doubles as the exact-dedup key) and stable row id
-    import hashlib
-
     fingerprint = (
         hashlib.md5(text.encode("utf-8")).hexdigest() if text else None
     )

@@ -77,10 +77,10 @@ _INTEREST_WORDS = frozenset(_COMMERCIAL) | frozenset(_CONTENT_W) \
     | frozenset(_TECH_W) | frozenset(_FORUM_W)
 
 
-def _shallow_containers(body: Element, max_depth: int = 3):
+def _shallow_containers(body: Element):
     """body children to depth 3 (the reference's 3-level selector)."""
     level = list(body.children)
-    for _ in range(max_depth):
+    for _ in range(3):
         next_level = []
         for el in level:
             yield el

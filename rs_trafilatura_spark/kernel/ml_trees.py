@@ -127,8 +127,9 @@ def _gini_gain(col: np.ndarray, y: np.ndarray, n_classes: int):
 
 
 def _build_tree(X: np.ndarray, y: np.ndarray, n_classes: int, max_depth: int,
-                min_samples: int, rng: np.random.RandomState,
-                feature_frac: float) -> dict:
+                rng: np.random.RandomState) -> dict:
+    """One CART tree: a node splits 4+ rows on the best of a random 60 %
+    of the features."""
     tree = {"feature": [], "thresh": [], "left": [], "right": [], "probs": []}
 
     def leaf(ys: np.ndarray) -> int:
@@ -143,10 +144,10 @@ def _build_tree(X: np.ndarray, y: np.ndarray, n_classes: int, max_depth: int,
 
     def grow(rows: np.ndarray, depth: int) -> int:
         ys = y[rows]
-        if depth >= max_depth or len(rows) < min_samples or len(set(ys)) == 1:
+        if depth >= max_depth or len(rows) < 4 or len(set(ys)) == 1:
             return leaf(ys)
         n_feat = X.shape[1]
-        k = max(1, int(n_feat * feature_frac))
+        k = max(1, int(n_feat * 0.6))
         cand = np.sort(rng.choice(n_feat, size=k, replace=False))
         best = None
         for f in cand:
@@ -178,7 +179,6 @@ def _build_tree(X: np.ndarray, y: np.ndarray, n_classes: int, max_depth: int,
 
 def train_ensemble(X: np.ndarray, y: np.ndarray, classes: list[str],
                    n_trees: int = 12, max_depth: int = 8,
-                   min_samples: int = 4, feature_frac: float = 0.6,
                    seed: int = 7) -> dict:
     """Bagged CART ensemble; returns the shippable model dict."""
     rng = np.random.RandomState(seed)
@@ -186,7 +186,6 @@ def train_ensemble(X: np.ndarray, y: np.ndarray, classes: list[str],
     for _ in range(n_trees):
         boot = rng.randint(0, len(X), size=len(X))
         trees.append(
-            _build_tree(X[boot], y[boot], len(classes), max_depth,
-                        min_samples, rng, feature_frac)
+            _build_tree(X[boot], y[boot], len(classes), max_depth, rng)
         )
     return {"classes": list(classes), "trees": trees}

@@ -257,11 +257,16 @@ def classify_page(doc: Document, url: Optional[str]) -> tuple[str, float]:
 
 @dataclass(frozen=True)
 class ExtractionProfile:
+    """How one page type is extracted (page_type/mod.rs:99-344), minus the
+    reference's two fields this engine never reads, which are dropped
+    rather than kept as settings that change nothing:
+    ``lenient_boilerplate`` (every page type gets the same named-
+    boilerplate filtering, relaxed only by the cascade's empty-result
+    retry) and ``min_paragraph_density`` (0 in every profile)."""
+
     comments_are_content: bool = False
-    lenient_boilerplate: bool = False
     content_selectors: tuple[str, ...] = ()
     preserve_tags: tuple[str, ...] = ()
-    min_paragraph_density: float = 0.0
     boilerplate_selectors: tuple[str, ...] = ()
     aggregate_sections: bool = False
     collect_repeated_items: bool = False
@@ -271,7 +276,6 @@ PROFILES: dict[str, ExtractionProfile] = {
     ARTICLE: ExtractionProfile(),
     FORUM: ExtractionProfile(
         comments_are_content=True,
-        lenient_boilerplate=True,
         content_selectors=(
             "[itemtype*='DiscussionForumPosting']",
             ".post-stream", "#discourse-topic", ".topic-body",
@@ -294,14 +298,10 @@ PROFILES: dict[str, ExtractionProfile] = {
         ),
     ),
     CATEGORY: ExtractionProfile(
-        lenient_boilerplate=True,
         content_selectors=(".category-description", ".collection-description"),
         collect_repeated_items=True,
     ),
-    LISTING: ExtractionProfile(
-        lenient_boilerplate=True,
-        collect_repeated_items=True,
-    ),
+    LISTING: ExtractionProfile(collect_repeated_items=True),
     DOCUMENTATION: ExtractionProfile(
         content_selectors=(
             "[role='main']", ".docs-content", ".markdown-body",
@@ -312,10 +312,7 @@ PROFILES: dict[str, ExtractionProfile] = {
             ".docs-sidebar", ".sidebar-nav", ".version-picker", ".breadcrumbs",
         ),
     ),
-    SERVICE: ExtractionProfile(
-        lenient_boilerplate=True,
-        aggregate_sections=True,
-    ),
+    SERVICE: ExtractionProfile(aggregate_sections=True),
 }
 
 

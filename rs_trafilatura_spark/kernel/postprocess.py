@@ -22,11 +22,11 @@ _CONTAINER_SELECTORS = (
 )
 
 
-def _collect_sibling_group(container: Element, child_tag: str,
-                           min_count: int, min_words: int
+def _collect_sibling_group(container: Element, child_tag: str
                            ) -> Optional[list[tuple[str, Element]]]:
+    """3+ ``child_tag`` children of 15+ words each, as (text, element)."""
     children = select(container, child_tag)
-    if len(children) < min_count:
+    if len(children) < 3:
         return None
     texts = []
     for el in children:
@@ -34,13 +34,13 @@ def _collect_sibling_group(container: Element, child_tag: str,
         if cls and is_boilerplate(cls):
             continue
         text = el.text_content().strip()
-        if len(text.split()) >= min_words:
+        if len(text.split()) >= 15:
             texts.append((text, el))
-    return texts if len(texts) >= min_count else None
+    return texts if len(texts) >= 3 else None
 
 
 def try_collect_repeated_items(
-    doc: Document, min_words: int = 15
+    doc: Document
 ) -> Optional[tuple[str, list[tuple[int, int, str]]]]:
     """Find containers with 3+ same-tag children carrying real text
     (news card grids, product lists); biggest group by total length wins.
@@ -48,11 +48,10 @@ def try_collect_repeated_items(
     groups = []
     for sel_str in _CONTAINER_SELECTORS:
         for container in select(doc.root, sel_str):
-            groups.append(
-                _collect_sibling_group(container, "article", 3, min_words))
-            groups.extend(_collect_sibling_group(lst, "li", 3, min_words)
+            groups.append(_collect_sibling_group(container, "article"))
+            groups.extend(_collect_sibling_group(lst, "li")
                           for lst in select(container, "ul, ol"))
-    groups.append(_collect_sibling_group(doc.root, "article", 3, min_words))
+    groups.append(_collect_sibling_group(doc.root, "article"))
 
     # the first group with the largest total text length wins
     best = max((g for g in groups if g), default=None,

@@ -315,7 +315,6 @@ _KEPT_ATTRS = {"a": ("href",), "td": ("colspan", "rowspan"),
 def extract_filtered_html(
     root: Element,
     opts: Options,
-    filter_named_boilerplate: bool = True,
     comments_are_content: bool = False,
 ) -> str:
     """Whitelisted-tag HTML of the content subtree, applying the same
@@ -326,8 +325,7 @@ def extract_filtered_html(
     link_ids = _link_ancestor_ids(root)
 
     def visit(el: Element, inside_am: bool) -> None:
-        if _element_excluded(el, inside_am, filter_named_boilerplate,
-                             comments_are_content, opts):
+        if _element_excluded(el, inside_am, True, comments_are_content, opts):
             return
         tag = el.tag
         # same flag bits as the text emitter (the table/link-density/

@@ -33,8 +33,7 @@ _GID_CUBE = 0b0001     # (source, lang, n_tokens) kept, fp grouped out
 _GID_UNIQUE = 0b1110   # fp kept, the rest grouped out
 
 
-def corpus_datasheet(documents: DataFrame, text_col: str = "text",
-                     source_col: str = "source",
+def corpus_datasheet(documents: DataFrame, source_col: str = "source",
                      lang_col: str | None = "lang") -> DataFrame:
     """(section, key, value) datasheet rows.  Sections:
 
@@ -48,14 +47,14 @@ def corpus_datasheet(documents: DataFrame, text_col: str = "text",
     — the shape the composed pipeline's output has before a language-ID
     pass is joined on.
     """
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     lang_expr = F.lit("und") if lang_col is None else F.col(lang_col)
     stats = documents.select(
         F.col(source_col).alias("source"),
         lang_expr.alias("lang"),
         F.size(words).cast("long").alias("n_tokens"),
-        F.length(text_col).cast("long").alias("n_chars"),
-        F.md5(F.col(text_col).cast("binary")).alias("fp"),
+        F.length("text").cast("long").alias("n_chars"),
+        F.md5(F.col("text").cast("binary")).alias("fp"),
     )
     grouped = (
         stats.groupingSets(
@@ -134,13 +133,10 @@ def corpus_datasheet(documents: DataFrame, text_col: str = "text",
     )
 
 
-def datasheet_sql(table: str = "documents", text_col: str = "text",
-                  source_col: str = "source",
-                  lang_col: str | None = "lang") -> str:
-    """DuckDB twin of :func:`corpus_datasheet` — generated from the same
+def datasheet_sql(table: str = "documents") -> str:
+    """DuckDB twin of :func:`corpus_datasheet` over ``table``'s ``source``,
+    ``lang`` and ``text`` columns — generated from the same
     section/percentile tables so operator and oracle cannot drift."""
-    if lang_col is None:
-        lang_col = "'und'"
     pct_rows = " UNION ALL ".join(
         f"SELECT 'tokens_percentile' AS section, 'p{p}' AS key, "
         f"(SELECT min(n_tokens) FROM cum WHERE cum * 100 >= {p} * tot) "
@@ -149,9 +145,8 @@ def datasheet_sql(table: str = "documents", text_col: str = "text",
     )
     return (
         "WITH stats AS (SELECT "
-        f"{source_col} AS source, {lang_col} AS lang, "
-        f"len(string_split({text_col}, ' ')) AS n_tokens, "
-        f"length({text_col}) AS n_chars, md5({text_col}) AS fp "
+        "source, lang, len(string_split(text, ' ')) AS n_tokens, "
+        "length(text) AS n_chars, md5(text) AS fp "
         f"FROM {table}), "
         "cube_ AS (SELECT source, lang, n_tokens, count(*) AS cnt, "
         "sum(n_chars) AS sum_chars FROM stats GROUP BY 1, 2, 3), "

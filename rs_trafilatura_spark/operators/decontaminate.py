@@ -35,8 +35,7 @@ def _gram_hashes(text_col, n: int):
 
 
 def contamination_hits(documents: DataFrame, benchmark: DataFrame,
-                       n: int = 13,
-                       bench_text_col: str = "text") -> DataFrame:
+                       n: int = 13) -> DataFrame:
     """(doc_id, n_hits, n_grams) for every CONTAMINATED document — one
     row per doc that shares >= 1 n-gram with any benchmark example.
     ``n_hits`` counts the doc's distinct overlapping grams; clean docs
@@ -49,7 +48,7 @@ def contamination_hits(documents: DataFrame, benchmark: DataFrame,
     # never finished; with the named column it is instant)
     bench_grams = (
         benchmark
-        .select(_gram_hashes(F.col(bench_text_col), n).alias("_gs"))
+        .select(_gram_hashes(F.col("text"), n).alias("_gs"))
         .select(F.explode("_gs").alias("_g"))
         .distinct()
     )
@@ -70,11 +69,10 @@ def contamination_hits(documents: DataFrame, benchmark: DataFrame,
 
 
 def mark_contaminated(documents: DataFrame, benchmark: DataFrame,
-                      n: int = 13,
-                      bench_text_col: str = "text") -> DataFrame:
+                      n: int = 13) -> DataFrame:
     """The corpus with a ``contaminated`` flag column — the decontam
     filter a pretraining pipeline applies before packing."""
-    hits = contamination_hits(documents, benchmark, n, bench_text_col)
+    hits = contamination_hits(documents, benchmark, n)
     return documents.join(
         hits.select("doc_id", F.lit(True).alias("contaminated")),
         "doc_id", "left",

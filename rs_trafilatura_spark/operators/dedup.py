@@ -42,8 +42,7 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
 # --- n-gram Jaccard pairs ----------------------------------------------------------
 
 
-def jaccard_on_pairs(documents: DataFrame, pairs: DataFrame,
-                     threshold_x1000: int = 0) -> DataFrame:
+def jaccard_on_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact word-set Jaccard for an explicit candidate pair list — the
     scale-safe contract: cost is O(|pairs|), independent of any group-key
     skew.  ``pairs`` carries (a_id, b_id) (e.g. from
@@ -68,13 +67,14 @@ def jaccard_on_pairs(documents: DataFrame, pairs: DataFrame,
             F.floor(F.lit(1000) * inter / union).cast("long")
             .alias("jac_x1000"),
         )
-        .filter(F.col("jac_x1000") >= threshold_x1000)
+        # drops the pairs a null text gives a null score
+        .filter(F.col("jac_x1000") >= 0)
     )
 
 
-def ngram_jaccard_pairs(documents: DataFrame, group_col: str = "source",
+def ngram_jaccard_pairs(documents: DataFrame,
                         threshold_x1000: int = 100) -> DataFrame:
-    """Exact word-set Jaccard, all pairs within ``group_col``.
+    """Exact word-set Jaccard, all pairs within one ``source``.
 
     QUADRATIC in the largest group: use only where group sizes are bounded
     (the oracle-comparison path).  On zipfian keys (hosts!) one giant group
@@ -83,11 +83,11 @@ def ngram_jaccard_pairs(documents: DataFrame, group_col: str = "source",
     regardless of skew."""
     words = F.array_distinct(F.split(F.col("text"), " "))
     a = documents.select(
-        F.col("doc_id").alias("a_id"), F.col(group_col).alias("g"),
+        F.col("doc_id").alias("a_id"), F.col("source").alias("g"),
         words.alias("a_words"),
     )
     b = documents.select(
-        F.col("doc_id").alias("b_id"), F.col(group_col).alias("g"),
+        F.col("doc_id").alias("b_id"), F.col("source").alias("g"),
         words.alias("b_words"),
     )
     inter = F.size(F.array_intersect("a_words", "b_words"))
@@ -166,11 +166,12 @@ def minhash_udf(texts: pd.Series) -> pd.Series:
     return texts.map(_minhash_signature)
 
 
-def _shingle_strings(text: str, k: int = 3) -> list[str]:
+def _shingle_strings(text: str) -> list[str]:
+    """The 3-word shingles of ``text`` (the whole text if shorter)."""
     words = text.split()
-    if len(words) < k:
+    if len(words) < 3:
         return [" ".join(words)] if words else [""]
-    return [" ".join(words[i:i + k]) for i in range(len(words) - k + 1)]
+    return [" ".join(words[i:i + 3]) for i in range(len(words) - 2)]
 
 
 # splitmix64/xxhash-style 64-bit mixing constants (public-domain values)
@@ -270,13 +271,14 @@ def sig_shingle_udf(texts: pd.Series) -> pd.DataFrame:
 _LSH_FEATURE_CACHE: list[DataFrame] = []
 
 
-def lsh_features(documents: DataFrame, materialize: bool = True,
+def lsh_features(documents: DataFrame,
                  include_shingles: bool = True) -> DataFrame:
     """(doc_id, sig[, sh, n_sh]) — the narrow per-document dedup features
-    the LSH tiers consume.  ``materialize=True`` persists it
-    (MEMORY_AND_DISK): the band join, the estimate prefilter and the
+    the LSH tiers consume, persisted (MEMORY_AND_DISK) and populated
+    before it is returned: the band join, the estimate prefilter and the
     exact verify are separate plan branches, and without a persist each
-    branch re-runs the tokenize+hash UDF over the corpus.
+    branch re-runs the tokenize+hash UDF over the corpus.  The previous
+    call's frame is unpersisted first, so one generation is cached.
 
     ``include_shingles=False`` (the estimate path) persists ONLY the
     64-slot signature (~0.5 KB/doc): the shingle arrays are an order of
@@ -306,19 +308,18 @@ def lsh_features(documents: DataFrame, materialize: bool = True,
         )
     else:
         feats = documents.select("doc_id", minhash_udf("text").alias("sig"))
-    if materialize:
-        while _LSH_FEATURE_CACHE:
-            _LSH_FEATURE_CACHE.pop().unpersist()
-        feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-        _LSH_FEATURE_CACHE.append(feats)
-        # Populate EAGERLY: the band join's two sides are independent
-        # subtrees of one query and Spark schedules their map stages
-        # concurrently — with a lazily-persisted frame both sides find
-        # the cache unpopulated and BOTH run the tokenize+hash UDF over
-        # the corpus (measured as two near-identical ~75 CPU-s stages).
-        # One cheap count() materializes the cache before any consumer
-        # plan is even built.
-        feats.count()
+    while _LSH_FEATURE_CACHE:
+        _LSH_FEATURE_CACHE.pop().unpersist()
+    feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
+    _LSH_FEATURE_CACHE.append(feats)
+    # Populate EAGERLY: the band join's two sides are independent
+    # subtrees of one query and Spark schedules their map stages
+    # concurrently — with a lazily-persisted frame both sides find
+    # the cache unpopulated and BOTH run the tokenize+hash UDF over
+    # the corpus (measured as two near-identical ~75 CPU-s stages).
+    # One cheap count() materializes the cache before any consumer
+    # plan is even built.
+    feats.count()
     return feats
 
 
@@ -464,8 +465,7 @@ def shingle_set_expr(text_col, k: int = 3):
 
 
 def lsh_near_dup_pairs(documents: DataFrame,
-                       threshold_x1000: int = 800,
-                       estimate_prefilter: bool = True) -> DataFrame:
+                       threshold_x1000: int = 800) -> DataFrame:
     """Near-dup pairs with EXACT shingle-set Jaccard, LSH-prefiltered.
 
     The production dedup shape at 100 TB: candidates come from the MinHash
@@ -485,13 +485,11 @@ def lsh_near_dup_pairs(documents: DataFrame,
     two probabilistic stages.  (1) Banding: at Jaccard s the candidate
     miss probability is (1-s^4)^16 (~2e-4 at s=0.8, ~4e-8 at s=0.9);
     identical texts have identical signatures and are never missed.
-    (2) With ``estimate_prefilter=True`` (default), the tier-1
-    signature-agreement cut at threshold-200 drops a TRUE pair sitting at
-    the exact threshold with probability ~P(Binomial(64,s)/64 < s-0.2)
-    ~ 2e-5 at s=0.8 — exact duplicates (est=1000) are never cut.  Pass
-    ``estimate_prefilter=False`` for banding-only recall: the remaining
-    tiers (size-ratio necessary condition + exact verify) can never drop
-    a pair the band join surfaced.
+    (2) The tier-1 signature-agreement cut at threshold-200 drops a TRUE
+    pair sitting at the exact threshold with probability
+    ~P(Binomial(64,s)/64 < s-0.2) ~ 2e-5 at s=0.8 — exact duplicates
+    (est=1000) are never cut.  The remaining tiers (size-ratio necessary
+    condition + exact verify) can never drop a pair that survived it.
     """
     # ONE tokenize+hash pass over the corpus (sig_shingle_udf), persisted
     # narrow: before r7 the signature and shingle UDFs were separate
@@ -512,8 +510,7 @@ def lsh_near_dup_pairs(documents: DataFrame,
     # threshold s is P(Binomial(64, s)/64 < s - margin) ~ 2e-5 at s=0.8,
     # margin=0.2 (z = -4.1); exact duplicates have est = 1000 and are
     # never lost.  This stage (alone) makes recall < banding recall — see
-    # the RECALL CONTRACT in the docstring; estimate_prefilter=False
-    # skips it.
+    # the RECALL CONTRACT in the docstring.
     #
     # tier-1.5 (same join): size-ratio necessary condition.  J(A,B) >= t
     # forces min(|A|,|B|)/max(|A|,|B|) >= t (|A∩B| <= min, |A∪B| >= max).
@@ -526,14 +523,10 @@ def lsh_near_dup_pairs(documents: DataFrame,
     b_f = feats.select(F.col("doc_id").alias("b_id"),
                        F.col("sig").alias("b_sig"),
                        F.col("n_sh").alias("_nb"))
-    prefiltered = cands.join(a_f, "a_id").join(b_f, "b_id")
-    if estimate_prefilter:
-        est_floor = max(0, threshold_x1000 - 200)
-        prefiltered = prefiltered.filter(
-            _est_jaccard_x1000("a_sig", "b_sig") >= est_floor
-        )
+    est_floor = max(0, threshold_x1000 - 200)
     prefiltered = (
-        prefiltered
+        cands.join(a_f, "a_id").join(b_f, "b_id")
+        .filter(_est_jaccard_x1000("a_sig", "b_sig") >= est_floor)
         .filter(F.least("_na", "_nb") * 1000
                 >= F.greatest("_na", "_nb") * threshold_x1000)
         .select("a_id", "b_id")
@@ -767,17 +760,16 @@ def near_dup_clusters(documents: DataFrame,
 # --- corpus-wide paragraph dedup (Dolma / RefinedWeb style) ------------------------
 
 
-def paragraph_dedup(documents: DataFrame,
-                    min_chars: int = 1) -> DataFrame:
+def paragraph_dedup(documents: DataFrame) -> DataFrame:
     """Remove duplicate paragraphs across the whole corpus, keeping only
     the canonical first occurrence (smallest (doc_id, position)) of each
     distinct paragraph — the Dolma/RefinedWeb recipe for boilerplate
     that survives page-level dedup (nav blurbs, footers, disclaimers
     repeated across a site).
 
-    Paragraphs = ``split(text, '\\n\\n')``.  Paragraphs shorter than
-    ``min_chars`` (after strip) are never deduped: they are structural
-    (empty separators) and would otherwise form a giant skew key.
+    Paragraphs = ``split(text, '\\n\\n')``.  Empty paragraphs (after
+    strip) are never deduped: they are structural (separators) and would
+    otherwise form a giant skew key.
 
     Returns (doc_id, n_paras, n_kept, clean_text) with paragraphs
     re-joined by '\\n\\n' in original order.
@@ -793,7 +785,7 @@ def paragraph_dedup(documents: DataFrame,
     paras = documents.select(
         "doc_id",
         F.posexplode(F.split("text", "\n\n")).alias("idx", "para"),
-    ).withColumn("_triv", F.length(F.trim("para")) < min_chars) \
+    ).withColumn("_triv", F.length(F.trim("para")) == 0) \
      .withColumn("_h", F.md5("para"))
     canon = (
         paras.filter(~F.col("_triv"))

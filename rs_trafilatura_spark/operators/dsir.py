@@ -6,10 +6,10 @@ distribution looks like a small target corpus (e.g. Wikipedia, or the
 benchmark mix you want to up-weight), then keeps a sample weighted by
 that importance.  The pieces here:
 
-1. hashed n-gram features: unigrams + bigrams hashed into ``buckets``
+1. hashed n-gram features: unigrams + bigrams hashed into ``BUCKETS``
    slots.  The bucket hash is the first 8 hex chars of md5 — md5 is the
    one hash Spark, DuckDB, and Python all expose identically, which
-   keeps the oracle engine-exact; swap ``xxhash64(gram) % buckets`` in
+   keeps the oracle engine-exact; swap ``xxhash64(gram) % BUCKETS`` in
    at deploy time for speed (same plan shape, no other change).
 2. per-bucket log-likelihood ratio, integer-exact: with the same
    floor-log2 surprisal proxy as operators/lm.py (``bitlen = length of
@@ -27,7 +27,7 @@ that importance.  The pieces here:
    fits its importance distribution.
 
 Scale shape: gram explosion never shuffles raw text — the only wide
-objects are the two O(buckets) count tables, both broadcast; the
+objects are the two O(BUCKETS) count tables, both broadcast; the
 per-doc aggregation combines map-side.
 """
 
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .lm import _tokens
 
-DEFAULT_BUCKETS = 10_000
+BUCKETS = 10_000
 
 
 def _gram_stream(documents: DataFrame) -> DataFrame:
@@ -59,21 +59,20 @@ def _gram_stream(documents: DataFrame) -> DataFrame:
     )
 
 
-def _bucket(gram_col, buckets: int):
-    """Engine-exact bucket id: int(md5(gram)[:8], 16) % buckets."""
+def _bucket(gram_col):
+    """Engine-exact bucket id: int(md5(gram)[:8], 16) % BUCKETS."""
     return (
         F.conv(F.substring(F.md5(gram_col), 1, 8), 16, 10)
-        .cast("long") % buckets
+        .cast("long") % BUCKETS
     )
 
 
-def hashed_bucket_counts(corpus: DataFrame,
-                         buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Corpus-level hashed-feature counts: (bucket, cnt).  O(buckets)
+def hashed_bucket_counts(corpus: DataFrame) -> DataFrame:
+    """Corpus-level hashed-feature counts: (bucket, cnt).  O(BUCKETS)
     output — broadcastable regardless of corpus size."""
     return (
         _gram_stream(corpus)
-        .select(_bucket(F.col("gram"), buckets).alias("bucket"))
+        .select(_bucket(F.col("gram")).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
     )
@@ -84,12 +83,11 @@ def _bitlen(col):
 
 
 def dsir_scores(documents: DataFrame, target_counts: DataFrame,
-                raw_counts: DataFrame,
-                buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+                raw_counts: DataFrame) -> DataFrame:
     """Mean integer log-likelihood-ratio per document: (doc_id,
     n_grams, dsir_score_x1000).  Higher = more target-like.
 
-    The count tables are O(buckets) rows, so they are collected ONCE to
+    The count tables are O(BUCKETS) rows, so they are collected ONCE to
     the driver here: the grand totals are summed locally and the
     broadcast sides rebuilt from the collected rows.  Summing and
     broadcasting the incoming DataFrames directly would execute each
@@ -105,7 +103,7 @@ def dsir_scores(documents: DataFrame, target_counts: DataFrame,
     t_local = spark.createDataFrame(t_rows, "bucket long, t_cnt long")
     r_local = spark.createDataFrame(r_rows, "bucket long, r_cnt long")
     grams = _gram_stream(documents).select(
-        "doc_id", _bucket(F.col("gram"), buckets).alias("bucket")
+        "doc_id", _bucket(F.col("gram")).alias("bucket")
     )
     joined = (
         grams

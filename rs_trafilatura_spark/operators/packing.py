@@ -293,7 +293,6 @@ def downsample_to_mixture(documents: DataFrame,
                           weights: DataFrame | None = None,
                           key: str = "source",
                           alpha_x100: int = 50,
-                          salt: int = 42,
                           gate_col=None) -> DataFrame:
     """Deterministically downsample the corpus so per-``key`` proportions
     match the target mixture — the CONSUMPTION side of
@@ -302,7 +301,7 @@ def downsample_to_mixture(documents: DataFrame,
     Given target shares w_k and available counts n_k, the largest total
     T every domain can supply is T = min_k(n_k / w_k); each domain keeps
     ~T*w_k docs via a deterministic Bernoulli gate
-    ``pmod(xxhash64(doc_id, salt), 1e6) < rate_x1e6[k]`` — no shuffle,
+    ``pmod(xxhash64(doc_id, 42), 1e6) < rate_x1e6[k]`` — no shuffle,
     no RNG state: the same doc survives on every run and on every
     engine, and the O(domains) rate table broadcasts.
 
@@ -332,7 +331,7 @@ def downsample_to_mixture(documents: DataFrame,
     spark = documents.sparkSession
     rate_df = spark.createDataFrame(rates, [key, "_rate_x1e6"])
     gate = (gate_col if gate_col is not None
-            else F.pmod(F.xxhash64("doc_id", F.lit(salt)), F.lit(1_000_000)))
+            else F.pmod(F.xxhash64("doc_id", F.lit(42)), F.lit(1_000_000)))
     return (
         documents.join(F.broadcast(rate_df), key)
         .filter(gate < F.col("_rate_x1e6"))
@@ -344,10 +343,9 @@ def split_corpus(documents: DataFrame,
                  weights_x100: tuple = (("train", 98), ("val", 1),
                                         ("test", 1)),
                  key_col: str = "url",
-                 salt: int = 7,
                  gate_col=None) -> DataFrame:
     """Leakage-safe deterministic train/val/test assignment: adds a
-    ``split`` column chosen by a hash of ``key_col``.
+    ``split`` column chosen by ``pmod(xxhash64(key_col, 7), 100)``.
 
     Keying on the URL (not the row) is the leakage property: the same
     url lands in the same split on every run AND every corpus version,
@@ -369,7 +367,7 @@ def split_corpus(documents: DataFrame,
         # degenerate single-split config: everything lands in it
         return documents.withColumn("split", F.lit(weights_x100[0][0]))
     gate = (gate_col if gate_col is not None
-            else F.pmod(F.xxhash64(key_col, F.lit(salt)), F.lit(100)))
+            else F.pmod(F.xxhash64(key_col, F.lit(7)), F.lit(100)))
     expr = None
     cum = 0
     for name, w in weights_x100[:-1]:
@@ -389,11 +387,9 @@ HASH_ORDER_BUCKET_WIDTH = 1 << 44
 
 
 def shuffle_corpus(documents: DataFrame, seed: int = 0,
-                   key_col: str = "url",
-                   order_col: str = "shuffle_order",
                    materialize: bool = False) -> DataFrame:
     """Deterministic global training-order shuffle: adds a total-order
-    column ``xxhash64(key, seed)``.  Published LM pipelines randomize
+    column ``shuffle_order = xxhash64(url, seed)``.  Published LM pipelines randomize
     example order between curation and packing (dedup sorts related
     documents together; training on that order skews early batches) —
     a keyed hash gives a pseudo-random permutation that is REPRODUCIBLE
@@ -403,7 +399,7 @@ def shuffle_corpus(documents: DataFrame, seed: int = 0,
 
     Map-only by default: packing (``pack_shards`` / ``pack_sequences``)
     consumes the ORDER COLUMN, not physical row order — pass
-    ``order_col=<this column>, bucket_width=HASH_ORDER_BUCKET_WIDTH``
+    ``order_col="shuffle_order", bucket_width=HASH_ORDER_BUCKET_WIDTH``
     so the distributed prefix sum buckets the full signed-64-bit hash
     range instead of treating it as dense doc ids.  With
     ``materialize=True`` the frame is additionally
@@ -412,8 +408,8 @@ def shuffle_corpus(documents: DataFrame, seed: int = 0,
     range partitions are balanced) — the shape for writers that emit
     physical row order directly."""
     out = documents.withColumn(
-        order_col, F.xxhash64(F.col(key_col), F.lit(seed)))
+        "shuffle_order", F.xxhash64(F.col("url"), F.lit(seed)))
     if materialize:
-        out = (out.repartitionByRange(F.col(order_col))
-                  .sortWithinPartitions(order_col))
+        out = (out.repartitionByRange(F.col("shuffle_order"))
+                  .sortWithinPartitions("shuffle_order"))
     return out

@@ -35,11 +35,11 @@ _U_BUCKETS = 1 << 53
 
 
 def train_quality_classifier(positives: DataFrame, negatives: DataFrame,
-                             text_col: str = "text",
                              num_features: int = DEFAULT_NUM_FEATURES,
-                             max_iter: int = 50, reg_param: float = 0.01):
-    """Fit the GPT-3-style quality classifier; returns a fitted
-    ``pyspark.ml.PipelineModel`` (Tokenizer -> HashingTF -> LR).
+                             max_iter: int = 50):
+    """Fit the GPT-3-style quality classifier on the ``text`` column;
+    returns a fitted ``pyspark.ml.PipelineModel`` (Tokenizer -> HashingTF
+    -> LR with regParam 0.01).
 
     ``positives`` = high-quality reference docs, ``negatives`` = raw
     crawl docs; both are samples, so ``fit`` never sees corpus-scale
@@ -50,35 +50,31 @@ def train_quality_classifier(positives: DataFrame, negatives: DataFrame,
     from pyspark.ml.feature import HashingTF, Tokenizer
 
     train = (
-        positives.select(F.col(text_col).alias("text"),
-                         F.lit(1.0).alias("label"))
-        .unionByName(
-            negatives.select(F.col(text_col).alias("text"),
-                             F.lit(0.0).alias("label")))
+        positives.select("text", F.lit(1.0).alias("label"))
+        .unionByName(negatives.select("text", F.lit(0.0).alias("label")))
     )
     pipe = Pipeline(stages=[
         Tokenizer(inputCol="text", outputCol="_qc_words"),
         HashingTF(inputCol="_qc_words", outputCol="_qc_features",
                   numFeatures=num_features),
         LogisticRegression(featuresCol="_qc_features", labelCol="label",
-                           maxIter=max_iter, regParam=reg_param),
+                           maxIter=max_iter, regParam=0.01),
     ])
     return pipe.fit(train)
 
 
 def score_quality(docs: DataFrame, model,
-                  text_col: str = "text",
-                  score_col: str = "quality_score") -> DataFrame:
-    """Attach P(high-quality) per document — one map pass, no shuffle;
-    the model rides the plan (JVM transform), intermediate feature
-    columns are dropped."""
+                  text_col: str = "text") -> DataFrame:
+    """Attach P(high-quality) per document as ``quality_score`` — one map
+    pass, no shuffle; the model rides the plan (JVM transform),
+    intermediate feature columns are dropped."""
     from pyspark.ml.functions import vector_to_array
 
     tmp = text_col != "text"
     inp = docs.withColumn("text", F.col(text_col)) if tmp else docs
     scored = model.transform(inp)
     out = scored.withColumn(
-        score_col,
+        "quality_score",
         vector_to_array(F.col(model.stages[-1].getProbabilityCol()))
         .getItem(1),
     ).drop("_qc_words", "_qc_features",
@@ -100,9 +96,9 @@ def load_quality_classifier(path: str):
     return PipelineModel.load(path)
 
 
-def pareto_keep_col(key_col: str = "doc_id", alpha: int = 9,
-                    score_col: str = "quality_score"):
-    """GPT-3 Appendix A keep rule as a deterministic Column:
+def pareto_keep_col(key_col: str = "doc_id", alpha: int = 9):
+    """GPT-3 Appendix A keep rule as a deterministic Column over
+    ``quality_score``:
     ``pareto_sample > 1 - score`` with the Pareto draw derived from the
     key hash (u = pmod(xxhash64(key), 2^53)/2^53; x = (1-u)^(-1/a) - 1)
     — re-running the pipeline keeps the identical document set, unlike
@@ -110,13 +106,12 @@ def pareto_keep_col(key_col: str = "doc_id", alpha: int = 9,
     u = F.pmod(F.xxhash64(F.col(key_col)), F.lit(_U_BUCKETS)) / F.lit(
         float(_U_BUCKETS))
     x = F.pow(F.lit(1.0) - u, F.lit(-1.0 / alpha)) - F.lit(1.0)
-    return x > (F.lit(1.0) - F.col(score_col))
+    return x > (F.lit(1.0) - F.col("quality_score"))
 
 
 def pareto_quality_filter(scored: DataFrame, key_col: str = "doc_id",
-                          alpha: int = 9,
-                          score_col: str = "quality_score") -> DataFrame:
+                          alpha: int = 9) -> DataFrame:
     """Filter to the Pareto-kept set (map-only; high-score docs almost
     always survive, low-score docs survive with Pareto-tail probability,
     which keeps some distributional diversity vs a hard threshold)."""
-    return scored.filter(pareto_keep_col(key_col, alpha, score_col))
+    return scored.filter(pareto_keep_col(key_col, alpha))

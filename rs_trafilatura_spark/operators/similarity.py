@@ -99,25 +99,23 @@ def _probe_masks(n_planes: int, probe_bits: int) -> list[int]:
     return masks
 
 
-def _multiprobe_scored_pairs(embeddings: DataFrame, n_planes: int,
-                             probe_bits: int,
-                             dim: int) -> DataFrame:
+def _multiprobe_scored_pairs(embeddings: DataFrame, dim: int) -> DataFrame:
     """(a_id, b_id, cos_x1000) candidate pairs from the multiprobe LSH
     equi-join: the query side explodes its probe signatures (own bucket +
-    buckets within ``probe_bits`` Hamming), the join stays an equi-join,
+    buckets within ``_PROBE_BITS`` Hamming), the join stays an equi-join,
     and each (a, b) pair matches via exactly one probe (the one equal to
     b's signature) — no pair-dedup shuffle.  Shared candidate machinery of
     knn_join_lsh / embedding_near_dup_pairs.  ``dim`` is required — array
     columns don't carry length in the schema, and probing the data with
     .first() would force a Spark job before the plan is even built."""
-    sig = lsh_bucket_expr(dim, n_planes)
+    sig = lsh_bucket_expr(dim)
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     tagged = embeddings.select(
         "vec_id", emb.alias("vec"), sig.alias("_sig")
     )
     probes = F.explode(F.array(*[
         F.col("_sig").bitwiseXOR(F.lit(m))
-        for m in _probe_masks(n_planes, probe_bits)
+        for m in _probe_masks(_N_PLANES, _PROBE_BITS)
     ]))
     a = tagged.select(F.col("vec_id").alias("a_id"),
                       F.col("vec").alias("a_vec"), probes.alias("_sig"))
@@ -132,8 +130,7 @@ def _multiprobe_scored_pairs(embeddings: DataFrame, n_planes: int,
     )
 
 
-def knn_join_lsh(embeddings: DataFrame, dim: int, k: int = 3,
-                 n_planes: int = 6, probe_bits: int = 2) -> DataFrame:
+def knn_join_lsh(embeddings: DataFrame, dim: int, k: int = 3) -> DataFrame:
     """Approximate KNN join: multiprobe LSH candidates
     (_multiprobe_scored_pairs) + per-key top-k.  The cross product never
     materializes; cost tracks bucket collisions x probe count.
@@ -147,7 +144,7 @@ def knn_join_lsh(embeddings: DataFrame, dim: int, k: int = 3,
     the bucket, which the oracle fixture exploits to pin recall at 1.0."""
     from pyspark.sql import Window
 
-    scored = _multiprobe_scored_pairs(embeddings, n_planes, probe_bits, dim)
+    scored = _multiprobe_scored_pairs(embeddings, dim)
     w = Window.partitionBy("a_id").orderBy(F.desc("cos_x1000"), F.asc("b_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -157,8 +154,7 @@ def knn_join_lsh(embeddings: DataFrame, dim: int, k: int = 3,
 
 
 def embedding_near_dup_pairs(embeddings: DataFrame, dim: int,
-                             cos_threshold_x1000: int = 900,
-                             n_planes: int = 6, probe_bits: int = 2) -> DataFrame:
+                             cos_threshold_x1000: int = 900) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: multiprobe LSH candidates
     (cos_x1000 uses round, not floor: identical-direction pairs sit at
     cosine EXACTLY 1.0, i.e. ON a floor boundary, where a 1-ulp
@@ -169,8 +165,8 @@ def embedding_near_dup_pairs(embeddings: DataFrame, dim: int,
     appears once in each direction; the filter keeps one).  Near-identical
     vectors (cos -> 1) agree on every hyperplane sign, so true duplicates
     are always candidates; recall for borderline pairs follows the
-    (n_planes, probe_bits) tradeoff documented on knn_join_lsh."""
-    scored = _multiprobe_scored_pairs(embeddings, n_planes, probe_bits, dim)
+    (6 planes, 2 probe bits) tradeoff documented on knn_join_lsh."""
+    scored = _multiprobe_scored_pairs(embeddings, dim)
     return (
         scored.filter(F.col("a_id") < F.col("b_id"))
         .filter(F.col("cos_x1000") >= cos_threshold_x1000)
@@ -179,25 +175,28 @@ def embedding_near_dup_pairs(embeddings: DataFrame, dim: int,
 
 # --- LSH ANN ------------------------------------------------------------------------
 
-# Default plane count targets bucket occupancy ~ n/2^planes; callers should
-# size it so buckets hold >= k candidates (6 planes = 64 buckets works for
-# 10^2..10^4 rows; at 10^9+ rows use 16-20 planes and write the table
-# bucketed by signature so probes become partition-pruned scans).
+# The plane count targets bucket occupancy ~ n/2^planes, sized so buckets
+# hold >= k candidates: 6 planes = 64 buckets works for 10^2..10^4 rows (at
+# 10^9+ rows use 16-20 planes and write the table bucketed by signature so
+# probes become partition-pruned scans).  Every LSH query probes its own
+# bucket plus all buckets within _PROBE_BITS Hamming distance.
 _N_PLANES = 6
+_PROBE_BITS = 2
 
 
-def _planes(dim: int, n_planes: int = _N_PLANES, seed: str = "ann") -> np.ndarray:
-    rng = np.random.RandomState(zlib.crc32(seed.encode()) & 0x7FFFFFFF)
-    return rng.randn(n_planes, dim)
+def _planes(dim: int) -> np.ndarray:
+    """The fixed random hyperplanes: the same ones on every run."""
+    rng = np.random.RandomState(zlib.crc32(b"ann") & 0x7FFFFFFF)
+    return rng.randn(_N_PLANES, dim)
 
 
-def lsh_bucket_expr(dim: int, n_planes: int = _N_PLANES):
+def lsh_bucket_expr(dim: int):
     """Signature = bit-packed signs of <v, r_i> for fixed random planes.
     Pure column expression — bucketing happens in codegen, no UDF."""
-    planes = _planes(dim, n_planes)
+    planes = _planes(dim)
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     bits = []
-    for i in range(n_planes):
+    for i in range(_N_PLANES):
         plane = F.array(*[F.lit(float(v)) for v in planes[i]])
         bits.append((_dot(emb, plane) > 0).cast("long") * F.lit(1 << i))
     sig = bits[0]
@@ -207,20 +206,19 @@ def lsh_bucket_expr(dim: int, n_planes: int = _N_PLANES):
 
 
 def ann_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-             n_planes: int = _N_PLANES, probe_bits: int = 2,
              exclude_id: int | None = None) -> DataFrame:
     """Approximate top-k: probe the query's LSH bucket plus all buckets
-    within ``probe_bits`` Hamming distance, then exact cosine within the
-    candidate set.  Recall/cost tradeoff = (n_planes, probe_bits)."""
+    within ``_PROBE_BITS`` (2) Hamming distance of its ``_N_PLANES`` (6)
+    sign bits, then exact cosine within the candidate set."""
     dim = len(query_vec)
-    planes = _planes(dim, n_planes)
+    planes = _planes(dim)
     qsig = 0
     qv = np.asarray(query_vec, dtype=np.float64)
-    for i in range(n_planes):
+    for i in range(_N_PLANES):
         if float(planes[i] @ qv) > 0:
             qsig |= 1 << i
-    probe_sigs = {qsig ^ m for m in _probe_masks(n_planes, probe_bits)}
-    bucketed = embeddings.withColumn("_sig", lsh_bucket_expr(dim, n_planes))
+    probe_sigs = {qsig ^ m for m in _probe_masks(_N_PLANES, _PROBE_BITS)}
+    bucketed = embeddings.withColumn("_sig", lsh_bucket_expr(dim))
     cands = bucketed.filter(F.col("_sig").isin(list(probe_sigs))).drop("_sig")
     return cosine_topk(cands, query_vec, k, exclude_id=exclude_id)
 
@@ -229,8 +227,7 @@ def ann_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
 
 
 def train_ivf_centroids(embeddings: DataFrame, n_cells: int = 16,
-                        iters: int = 3,
-                        dim: int | None = None) -> list[list[float]]:
+                        iters: int = 3) -> list[list[float]]:
     """Deterministic spherical-kmeans cell centroids (the IVF coarse
     quantizer): seeds are the ``n_cells`` lowest vec_ids (no RNG — same
     centroids every run on both engines), then Lloyd iterations with

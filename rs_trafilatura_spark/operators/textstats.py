@@ -258,11 +258,11 @@ C4_PAGE_BLOCKLIST = ("lorem ipsum", "{", "javascript")
 C4_MIN_KEPT_LINES = 3
 
 
-def c4_line_filter(documents: DataFrame, min_line_words: int = 3,
+def c4_line_filter(documents: DataFrame,
                    min_kept_lines: int = C4_MIN_KEPT_LINES) -> DataFrame:
     """C4-style line-level cleaning: one map-only pass producing the
     cleaned text plus audit counts.  Line keep rule = ends in . ! ? or "
-    AND has >= min_line_words whitespace words; page keep rule = >= 
+    AND has >= 3 whitespace words; page keep rule = >= 
     min_kept_lines surviving lines and no blocklist marker anywhere."""
     lines = F.split(F.col("text"), "\n")
     kept = F.filter(
@@ -272,7 +272,7 @@ def c4_line_filter(documents: DataFrame, min_line_words: int = 3,
         # where the RE2 oracle's $ is absolute end-of-text — \z keeps the
         # two engines byte-agreed on CRLF corpora
         lambda l: l.rlike('[.!?"]\\z')
-        & (F.size(F.split(l, " ")) >= min_line_words),
+        & (F.size(F.split(l, " ")) >= 3),
     )
     lower = F.lower(F.col("text"))
     blocked = None
@@ -480,13 +480,14 @@ def _mojibake_table() -> list[tuple[str, str]]:
 MOJIBAKE_PAIRS = _mojibake_table()
 
 
-def fix_mojibake(documents: DataFrame, col: str = "text") -> DataFrame:
-    """Append ``fixed_text`` (mojibake repaired) and ``moji_changed``."""
-    fixed = F.col(col)
+def fix_mojibake(documents: DataFrame) -> DataFrame:
+    """Append ``fixed_text`` (``text`` with mojibake repaired) and
+    ``moji_changed``."""
+    fixed = F.col("text")
     for moji, ch in MOJIBAKE_PAIRS:
         fixed = F.replace(fixed, F.lit(moji), F.lit(ch))
     return documents.withColumn("fixed_text", fixed).withColumn(
-        "moji_changed", F.col("fixed_text") != F.col(col)
+        "moji_changed", F.col("fixed_text") != F.col("text")
     )
 
 

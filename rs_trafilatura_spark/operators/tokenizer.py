@@ -41,9 +41,9 @@ from pyspark.sql import DataFrame, functions as F
 _ASCII_WORD_RE = re.compile(r"^[A-Za-z]+\Z")
 
 
-def word_vocab(docs: DataFrame, text_col: str = "text",
-               ascii_only: bool = False) -> DataFrame:
-    """(word, n) frequency table over whitespace-split, lowercased words.
+def word_vocab(docs: DataFrame, ascii_only: bool = False) -> DataFrame:
+    """(word, n) frequency table over the whitespace-split, lowercased
+    words of ``text``.
     ``ascii_only`` keeps ^[A-Za-z]+$ words — filtered on the RAW token
     and lowered only afterwards, so lower() never sees one-to-many
     Unicode case mappings and both engines produce identical words (the
@@ -53,7 +53,7 @@ def word_vocab(docs: DataFrame, text_col: str = "text",
     if ascii_only:
         words = (
             docs.select(
-                F.explode(F.split(F.col(text_col), " ")).alias("w")
+                F.explode(F.split(F.col("text"), " ")).alias("w")
             )
             # \z, not $: Java's $ matches before a trailing \n (so a
             # "word\n" token right before a "\n " sequence would slip
@@ -67,7 +67,7 @@ def word_vocab(docs: DataFrame, text_col: str = "text",
         words = (
             docs.select(
                 F.explode(
-                    F.split(F.lower(F.col(text_col)), " ")
+                    F.split(F.lower(F.col("text")), " ")
                 ).alias("word")
             )
             .filter(F.col("word") != "")
@@ -140,11 +140,11 @@ def _apply_merge(symtab: DataFrame, left: str, right: str) -> DataFrame:
     )
 
 
-def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
-              ascii_only: bool = False) -> list[tuple[str, str, int]]:
-    """Train ``n_merges`` BPE merges; returns [(left, right, pair_n)] in
-    merge order.  Tie-break: pair_n DESC, left ASC, right ASC."""
-    vocab = word_vocab(docs, text_col=text_col, ascii_only=ascii_only)
+def bpe_train(docs: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
+    """Train ``n_merges`` BPE merges over all words of ``text``; returns
+    [(left, right, pair_n)] in merge order.  Tie-break: pair_n DESC, left
+    ASC, right ASC."""
+    vocab = word_vocab(docs)
     # double-delimited symbol string: each char wrapped in the delimiter,
     # 'abc' -> ' a  b  c '.  The delimiter is a SPACE, which provably
     # cannot occur inside any word in either mode (words come from
@@ -171,7 +171,7 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
     return merges
 
 
-def bpe_train_local(docs: DataFrame, n_merges: int, text_col: str = "text",
+def bpe_train_local(docs: DataFrame, n_merges: int,
                     ascii_only: bool = False,
                     min_count: int = 0) -> list[tuple[str, str, int]]:
     """Same merges as ``bpe_train``, different execution split: ONE
@@ -189,7 +189,7 @@ def bpe_train_local(docs: DataFrame, n_merges: int, text_col: str = "text",
     ``min_count`` drops words rarer than the floor BEFORE training
     (standard practice; hapaxes are mostly typos/noise and dominate |V|).
     """
-    vocab = word_vocab(docs, text_col=text_col, ascii_only=ascii_only)
+    vocab = word_vocab(docs, ascii_only=ascii_only)
     if min_count > 1:
         vocab = vocab.filter(F.col("n") >= min_count)
     symfreq = [(tuple(r["word"]), r["n"]) for r in vocab.collect()]
@@ -260,12 +260,12 @@ def _encode_word(word: str, merge_seq: list[tuple[str, str]],
     return syms
 
 
-def bpe_encode(docs: DataFrame, merges: list[tuple], text_col: str = "text",
+def bpe_encode(docs: DataFrame, merges: list[tuple],
                ascii_only: bool = False, with_tokens: bool = False,
-               count_col: str = "bpe_n_tokens",
-               tokens_col: str = "bpe_tokens") -> DataFrame:
-    """Encode every document under a trained merge list; adds an exact
-    token count (and optionally the token sequence) per document.
+               count_col: str = "bpe_n_tokens") -> DataFrame:
+    """Encode the ``text`` of every document under a trained merge list;
+    adds an exact token count (and, with ``with_tokens``, the token
+    sequence as ``bpe_tokens``) per document.
 
     100 TB shape: the merge list is O(vocab) and ships inside the UDF
     closure (broadcast-sized by construction); encoding is ONE map-only
@@ -286,7 +286,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple], text_col: str = "text",
         T.StructField(count_col, T.LongType()),
     ]
     if with_tokens:
-        fields.append(T.StructField(tokens_col,
+        fields.append(T.StructField("bpe_tokens",
                                     T.ArrayType(T.StringType())))
     out_schema = T.StructType(fields)
 
@@ -300,7 +300,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple], text_col: str = "text",
                 cache.clear()
             counts = []
             seqs = [] if with_tokens else None
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 if text is None:
                     counts.append(0)
                     if with_tokens:
@@ -319,7 +319,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple], text_col: str = "text",
             res = pdf.copy()
             res[count_col] = pd.array(counts, dtype="int64")
             if with_tokens:
-                res[tokens_col] = seqs
+                res["bpe_tokens"] = seqs
             yield res
 
     return docs.mapInPandas(encode_batches, schema=out_schema)

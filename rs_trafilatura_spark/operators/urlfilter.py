@@ -45,15 +45,15 @@ def host_of(url_col):
     )
 
 
-def url_filter(documents: DataFrame, url_col: str = "url",
+def url_filter(documents: DataFrame,
                blocked_domains: tuple[str, ...] = DEFAULT_BLOCKED_DOMAINS,
                keywords: tuple[str, ...] = DEFAULT_URL_KEYWORDS) -> DataFrame:
-    """Append URL-rule audit columns: ``url_host``, ``domain_blocked``
+    """Append audit columns of the ``url`` rules: ``url_host``, ``domain_blocked``
     (exact host or any-subdomain match), ``url_kw_hits`` (count of spam
     keywords in the URL), ``ext_blocked`` (non-content extension), and
     the composite ``url_ok``."""
-    url_l = F.lower(F.col(url_col))
-    host = host_of(F.col(url_col))
+    url_l = F.lower(F.col("url"))
+    host = host_of(F.col("url"))
     dom = F.lit(False)
     for d in blocked_domains:
         dom = dom | (host == d) | host.endswith("." + d)

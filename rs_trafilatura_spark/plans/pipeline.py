@@ -46,7 +46,6 @@ def pretraining_pipeline(
     url_rules: bool = False,
     dedup_paragraphs: bool = False,
     dedup_substrings: bool = False,
-    substring_span_words: int = 50,
     embeddings: Optional[DataFrame] = None,
     semdedup_threshold_x1000: int = 950,
     semdedup_cells: int = 16,
@@ -194,9 +193,7 @@ def pretraining_pipeline(
     if dedup_substrings:
         from ..operators.substring import exact_substring_dedup
 
-        ss = exact_substring_dedup(
-            corpus, n=substring_span_words
-        ).select("doc_id", "clean_text")
+        ss = exact_substring_dedup(corpus).select("doc_id", "clean_text")
         corpus = _gate(
             corpus.join(ss, "doc_id")
             .withColumn("text", F.col("clean_text"))

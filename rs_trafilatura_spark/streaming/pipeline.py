@@ -23,6 +23,9 @@ from ..plans.job import make_extract_arrow_batches, pin_zip_importers
 from ..plans.schema import OUTPUT_SCHEMA, PAGE_COLUMNS, PAGES_SCHEMA
 from ..sources.warc import _archive_records, _records_to_batches
 
+# how late a crawl record (by warc_ts) may arrive and still be processed
+_WATERMARK = "10 minutes"
+
 
 def read_pages_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """readStream over a parquet pages table, at most 8 new files per
@@ -37,12 +40,12 @@ def read_pages_stream(spark: SparkSession, input_path: str) -> DataFrame:
 def extraction_stream(
     pages_stream: DataFrame,
     options: Options = DEFAULT_OPTIONS,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Streaming extraction: watermark late crawls, drop duplicate urls
-    within the watermark, then the batch kernel unchanged."""
+    """Streaming extraction: a 10-minute watermark on ``warc_ts`` drops
+    later crawls, duplicate urls within the watermark are dropped, then
+    the batch kernel runs unchanged."""
     df = (
-        pages_stream.withWatermark("warc_ts", watermark)
+        pages_stream.withWatermark("warc_ts", _WATERMARK)
         .dropDuplicates(["url"])
         .select(*PAGE_COLUMNS)
     )
@@ -76,23 +79,22 @@ def run_stream_to_memory(spark: SparkSession, input_path: str,
 
 def windowed_stage_metrics_stream(
     extracted_stream: DataFrame,
-    window_len: str = "10 minutes",
-    watermark: str = "10 minutes",
     set_watermark: bool = True,
 ) -> DataFrame:
-    """Watermarked tumbling-window stage metrics over the extraction
-    stream: the streaming form of plans.stage_metrics.  Late crawl records
-    beyond the watermark are dropped; in append mode a window emits once,
-    when the watermark passes its end — the standard late-data windowed
-    aggregation shape (SURVEY.md §2.10).  Pass ``set_watermark=False`` when
-    the upstream already watermarked warc_ts (e.g. ``extraction_stream``):
-    Spark disallows redefining a watermark."""
+    """Stage metrics over the extraction stream in 10-minute tumbling
+    windows of ``warc_ts``: the streaming form of plans.stage_metrics.
+    Crawl records more than 10 minutes late (the watermark) are dropped;
+    in append mode a window emits once, when the watermark passes its
+    end — the standard late-data windowed aggregation shape (SURVEY.md
+    §2.10).  Pass ``set_watermark=False`` when the upstream already
+    watermarked warc_ts (e.g. ``extraction_stream``): Spark disallows
+    redefining a watermark."""
     df = extracted_stream
     if set_watermark:
-        df = df.withWatermark("warc_ts", watermark)
+        df = df.withWatermark("warc_ts", _WATERMARK)
     return (
         df
-        .groupBy(F.window("warc_ts", window_len), F.col("stage"))
+        .groupBy(F.window("warc_ts", "10 minutes"), F.col("stage"))
         .agg(F.count("*").alias("n_pages"))
         .select(
             F.col("window.start").alias("window_start"),

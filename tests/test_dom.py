@@ -5,7 +5,7 @@ from rs_trafilatura_spark.dom import Document, select, select_first
 
 def test_text_tail_model():
     doc = Document("<div>alpha<span>beta</span>gamma<b>delta</b>eps</div>")
-    div = doc.select_first("div")
+    div = select_first(doc.root, "div")
     assert div.text == "alpha"
     span = div.children[0]
     assert span.tag == "span" and span.text == "beta" and span.tail == "gamma"
@@ -16,23 +16,23 @@ def test_text_tail_model():
 
 def test_implicit_p_close():
     doc = Document("<body><p>one<p>two<div>three</div></body>")
-    ps = doc.select("p")
+    ps = select(doc.root, "p")
     assert [p.text for p in ps] == ["one", "two"]
     # the div must NOT be nested inside the second p
-    assert doc.select_first("div").parent.tag == "body"
+    assert select_first(doc.root, "div").parent.tag == "body"
 
 
 def test_implicit_li_and_table_cells():
     doc = Document("<ul><li>a<li>b</ul><table><tr><td>1<td>2<tr><td>3</table>")
-    assert [li.text for li in doc.select("li")] == ["a", "b"]
-    rows = doc.select("tr")
+    assert [li.text for li in select(doc.root, "li")] == ["a", "b"]
+    rows = select(doc.root, "tr")
     assert len(rows) == 2
     assert [td.text for td in select(rows[0], "td")] == ["1", "2"]
 
 
 def test_stray_end_tags_ignored():
     doc = Document("<div><p>x</p></b></div><p>y</p>")
-    assert [p.text for p in doc.select("p")] == ["x", "y"]
+    assert [p.text for p in select(doc.root, "p")] == ["x", "y"]
 
 
 def test_selectors():
@@ -40,31 +40,31 @@ def test_selectors():
         '<div id="main" class="content wide"><p class="a b">t</p>'
         '<span itemprop="articleBody">s</span><a href="http://x">l</a></div>'
     )
-    assert doc.select_first("#main").tag == "div"
-    assert doc.select_first(".content").get("id") == "main"
-    assert doc.select_first("p.a").text == "t"
-    assert doc.select_first("[itemprop='articleBody']").tag == "span"
-    assert doc.select_first("[class*='wid']").tag == "div"
-    assert doc.select_first("[href]").tag == "a"
-    assert len(doc.select("p, span")) == 2
-    assert doc.select_first("div p").text == "t"
-    assert doc.select_first("div > p").text == "t"
-    assert doc.select_first("span > p") is None
+    assert select_first(doc.root, "#main").tag == "div"
+    assert select_first(doc.root, ".content").get("id") == "main"
+    assert select_first(doc.root, "p.a").text == "t"
+    assert select_first(doc.root, "[itemprop='articleBody']").tag == "span"
+    assert select_first(doc.root, "[class*='wid']").tag == "div"
+    assert select_first(doc.root, "[href]").tag == "a"
+    assert len(select(doc.root, "p, span")) == 2
+    assert select_first(doc.root, "div p").text == "t"
+    assert select_first(doc.root, "div > p").text == "t"
+    assert select_first(doc.root, "span > p") is None
 
 
 def test_drop_tree_preserves_tail():
     doc = Document("<div>a<span>X</span>b<i>Y</i>c</div>")
-    div = doc.select_first("div")
-    doc.select_first("span").drop_tree()
+    div = select_first(doc.root, "div")
+    select_first(doc.root, "span").drop_tree()
     assert div.text == "ab"
-    doc.select_first("i").drop_tree()
+    select_first(doc.root, "i").drop_tree()
     assert div.text_content() == "abc"
 
 
 def test_unwrap_keeps_children():
     doc = Document("<div>a<em>b<b>c</b>d</em>e</div>")
-    doc.select_first("em").unwrap()
-    div = doc.select_first("div")
+    select_first(doc.root, "em").unwrap()
+    div = select_first(doc.root, "div")
     assert div.text_content() == "abcde"
     assert div.children[0].tag == "b"
 
@@ -73,33 +73,26 @@ def test_script_raw_text_and_jsonld():
     doc = Document(
         '<head><script type="application/ld+json">{"a":"<b>"}</script></head>'
     )
-    s = doc.select_first("script")
+    s = select_first(doc.root, "script")
     assert s.text == '{"a":"<b>"}'
 
 
 def test_entities_decoded():
     doc = Document("<p>a &amp; b &lt;c&gt; &#233;</p>")
-    assert doc.select_first("p").text == "a & b <c> é"
+    assert select_first(doc.root, "p").text == "a & b <c> é"
 
 
 def test_body_fallback_for_fragment():
     doc = Document("<p>frag</p>")
     assert doc.body.tag == "#root"
-    assert doc.select_first("p").text == "frag"
+    assert select_first(doc.root, "p").text == "frag"
 
 
 def test_void_and_selfclose():
     doc = Document("<p>a<br>b<img src='x'/>c</p>")
-    p = doc.select_first("p")
+    p = select_first(doc.root, "p")
     assert p.text_content() == "abc"
     assert [c.tag for c in p.children] == ["br", "img"]
-
-
-def test_deep_copy_independent():
-    doc = Document("<div><p>x</p></div>")
-    clone = doc.copy()
-    doc.select_first("p").drop_tree()
-    assert clone.select_first("p") is not None
 
 
 def test_fast_scan_differential_fuzz():

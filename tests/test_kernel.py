@@ -375,20 +375,73 @@ def test_top_level_api_reexports():
 
 
 def test_every_option_is_read():
-    """Each Options field is read somewhere in the package outside
-    options.py: no setting that changes nothing."""
+    """Each field of the two config dataclasses, Options and
+    ExtractionProfile, is read (``.field``) somewhere in the package
+    outside options.py: no setting that changes nothing."""
     import dataclasses
     import pathlib
     import re
 
     import rs_trafilatura_spark
+    from rs_trafilatura_spark.kernel.page_type import ExtractionProfile
 
     pkg = pathlib.Path(rs_trafilatura_spark.__file__).parent
     src = "\n".join(p.read_text() for p in pkg.rglob("*.py")
                     if p != pkg / "options.py")
-    unread = [f.name for f in dataclasses.fields(Options)
+    unread = [f"{cls.__name__}.{f.name}"
+              for cls in (Options, ExtractionProfile)
+              for f in dataclasses.fields(cls)
               if not re.search(rf"\.{f.name}\b", src)]
     assert unread == []
+
+
+# Defaulted parameters that no call in the repo passes but that stay
+# parameters; each with why.
+UNPASSED_ALLOWED = {
+    "session.get_spark(shuffle_partitions)":
+        "deployment: shuffle width is sized to the cluster",
+    "session.get_spark(ui)": "deployment: the Spark UI is on in operation",
+    "sources.warc.extract_from_warc(target_partitions)":
+        "scale: scan width is sized to the cluster",
+    "sources.tables.write_output(mode)":
+        "deployment: append / overwrite is the caller's table policy",
+    "datagen.corpus.materialize_large_corpus(partitions)":
+        "scale: generation width is sized to the cluster",
+    "operators.packing.write_shards(n_tasks)":
+        "scale: write width is sized to the cluster",
+    "operators.windows.capped_per_key(n_salts)":
+        "scale: salting follows the skew of the largest key",
+    "operators.bloom.seen_filter(num_bits)":
+        "scale: filter size follows the corpus size",
+    "operators.bloom.seen_filter(k)":
+        "scale: hash count goes with num_bits",
+    "operators.bloom.update_bloom(tree_fanin)":
+        "scale: aggregation depth follows the partition count",
+    "sources.warc.extract_from_warc(options)":
+        "the extraction config object every extraction entry point takes",
+    "operators.delta.extract_incremental(options)":
+        "the extraction config object every extraction entry point takes",
+    "streaming.pipeline.run_warc_stream_to_memory(options)":
+        "the extraction config object every extraction entry point takes",
+}
+
+
+def test_every_parameter_is_passed(settable_values):
+    """Each defaulted parameter of the package is passed by some call in
+    the repo (package, tests, scripts, benchmarks), as
+    scripts/settable_values.py matches calls to definitions: a default
+    that no call overrides is a constant.  UNPASSED_ALLOWED holds the
+    deployment and scale settings and the extraction config object; each
+    of its entries names a real defaulted parameter."""
+    import pathlib
+
+    root = pathlib.Path(__file__).parents[1]
+    defs, names, _ = settable_values.scan(root)
+    unpassed = settable_values.unpassed(defs, names)
+    assert sorted(set(unpassed) - set(UNPASSED_ALLOWED)) == []
+    declared = {f"{d.module}.{d.call_name}({p})"
+                for d in defs for p in d.defaulted}
+    assert sorted(set(UNPASSED_ALLOWED) - declared) == []
 
 
 def test_every_top_level_name_has_a_caller():
